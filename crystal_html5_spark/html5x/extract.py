@@ -120,9 +120,11 @@ def _utf8_safe(s: str) -> str:
     return s.encode("utf-8", "surrogateescape").decode("utf-8", "replace")
 
 
-def _extract_all(doc: Node) -> tuple[str, str, int]:
-    """One document-order walk computing inner_text, main_text and the
-    node count together (sibling-pointer traversal, no child lists)."""
+def text_fields(doc: Node) -> tuple[bytes, str, int]:
+    """(text, main_text, n_nodes) as they enter the Arrow columns: the
+    exact inner_text bytes, main text made valid UTF-8, and the node
+    count, from one document-order walk (sibling pointers, no child
+    lists)."""
     text_parts: list[str] = []
     main_parts: list[str] = []
     n_nodes = -1  # exclude the Document node itself
@@ -149,42 +151,40 @@ def _extract_all(doc: Node) -> tuple[str, str, int]:
         c = n.first_child
         if c is not None:
             push((c, in_main))
-    return "".join(text_parts), "".join(main_parts), n_nodes
+    return s2b("".join(text_parts)), _utf8_safe("".join(main_parts)), n_nodes
+
+
+def parse_extract(html: bytes, extract, max_doc_bytes: int = 0):
+    """Parse one document under ``max_doc_bytes`` and apply
+    ``extract(doc)``; returns ``(result, err)``.
+
+    The one error policy for every page-parsing path: an oversize token
+    is ``max_buf_exceeded``; any other exception, in the parser or in the
+    extractor, is ``parse_error: <type>: <message>``.  Never raises, so a
+    single bad page cannot kill a task (SURVEY.md §4 max_buf policy)."""
+    try:
+        p = Parser(html, max_buf=max_doc_bytes)
+        p.parse()
+        return extract(p.doc), ""
+    except MaxBufferExceeded:
+        return None, "max_buf_exceeded"
+    except Exception as ex:  # noqa: BLE001 — error-row policy, never crash
+        return None, _utf8_safe(
+            f"parse_error: {type(ex).__name__}: {ex}"[:500])
 
 
 def extract_document(html: bytes, max_doc_bytes: int = 0) -> dict:
     """Parse one document and extract text + metrics.
 
-    Never raises: oversize/failed documents produce an error row so a single
-    bad page cannot kill a 100 TB task (SURVEY.md §4 max_buf policy).
-    """
+    Never raises: oversize/failed documents produce an error row with
+    empty text and ``err`` set (see ``parse_extract``)."""
     t0 = time.perf_counter()
-    try:
-        p = Parser(html, max_buf=max_doc_bytes)
-        p.parse()
-        doc = p.doc
-        text, main, n_nodes = _extract_all(doc)
-        return {
-            "text": s2b(text),
-            "main_text": _utf8_safe(main),
-            "n_nodes": n_nodes,
-            "err": "",
-            "parse_ms": (time.perf_counter() - t0) * 1000.0,
-        }
-    except MaxBufferExceeded:
-        return {
-            "text": b"", "main_text": "", "n_nodes": 0,
-            "err": "max_buf_exceeded",
-            "parse_ms": (time.perf_counter() - t0) * 1000.0,
-        }
-    except Exception as ex:  # noqa: BLE001 — error-row policy, never crash
-        return {
-            "text": b"", "main_text": "", "n_nodes": 0,
-            "err": _utf8_safe(
-                f"parse_error: {type(ex).__name__}: {ex}"[:500]
-            ),
-            "parse_ms": (time.perf_counter() - t0) * 1000.0,
-        }
+    r, err = parse_extract(html, text_fields, max_doc_bytes)
+    text, main, n_nodes = r or (b"", "", 0)
+    return {
+        "text": text, "main_text": main, "n_nodes": n_nodes, "err": err,
+        "parse_ms": (time.perf_counter() - t0) * 1000.0,
+    }
 
 
 # ---- block-level DOM classification features (jusText/Boilerpipe) ----

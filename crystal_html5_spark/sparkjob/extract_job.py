@@ -1,121 +1,145 @@
-"""The production extraction pipeline.
+"""The production extraction job and ``dom_map``, the one DOM-UDF primitive.
 
-Plan shape (all relational steps are stock Catalyst operators; the parser is
-a single vectorized Arrow UDF):
+``dom_map`` is the only page-parsing Arrow UDF: the job and every
+page-parsing query are per-document extractors (Node -> rows) over it.
+Each page is parsed once under ``max_doc_bytes``, a page that fails is
+one error row, and ``url``/``warc_ts`` ride along by an Arrow take.
+
+``run_extract`` plan (stock Catalyst operators around the one UDF):
 
     scan(url, warc_ts, html)            -- column-pruned parquet/Iceberg scan
-      -> [anti-join done-keys]          -- checkpoint/resume
-      -> latest-capture dedup           -- window on url, desc(warc_ts)
       -> salted repartition             -- host # (xxhash64(url) % salt)
-      -> mapInArrow(extract_batches)    -- tokenizer+tree+extract per batch
+      -> partition sort                 -- (url, warc_ts desc)
+      -> dom_map                        -- skip-consecutive latest capture,
+                                           tokenizer+tree+extract per doc
       -> sink (parquet) + per-partition metrics table
 
+Resume (``done_keys``) dedups with a window on url and anti-joins the
+exact (url, warc_ts) keys before the repartition.
+
 Scale notes (100 TB / 1000 executors):
-- The only shuffles are the dedup window and the explicit salted
-  repartition; both key on url/host so domain skew is defeated by the salt
-  and AQE's skew-join handling covers the residue.
-- Filters/column pruning reach the scan (only url, warc_ts, html cross
-  into Python over Arrow).
-- A single oversize or malformed page becomes an error row, never a task
-  failure; `max_doc_bytes` bounds per-document memory.
-- Output batches re-batch by accumulated byte size so one 50 MB page amid
-  4 KB pages cannot blow up a single Arrow batch.
+- ONE shuffle on the hot path: the salted key is a pure function of url,
+  so every capture of a url lands in one partition; the salt splits
+  mega-hosts (domain skew) and AQE's skew handling covers the residue.
+- Only url, warc_ts and html cross into Python over Arrow.
+- ``max_doc_bytes`` bounds per-document memory, and output re-batches by
+  byte size so one 50 MB page amid 4 KB pages cannot blow up a batch.
 """
 
 from __future__ import annotations
 
+import time
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
-RESULT_SCHEMA_DDL = (
-    "url string, warc_ts timestamp, text binary, main_text string,"
-    " n_nodes int, html_bytes bigint, err string, parse_ms double"
-)
+from ..html5x.extract import parse_extract, text_fields
+
+# Columns dom_map stamps on every output row, after the extractor's.
+DOC_COLUMNS_DDL = "html_bytes bigint, err string, parse_ms double"
+TEXT_SCHEMA_DDL = "text binary, main_text string, n_nodes int"
 
 DEFAULT_MAX_DOC_BYTES = 64 * 1024 * 1024
 _TARGET_OUT_BATCH_BYTES = 32 * 1024 * 1024
 
 
-def make_extract_fn(max_doc_bytes: int = DEFAULT_MAX_DOC_BYTES,
-                    dedup_consecutive: bool = False):
-    """Build the mapInArrow function (Iterator[RecordBatch] ->
-    Iterator[RecordBatch]); one Python worker per partition, zero per-row
-    Python objects crossing the wire.
+def text_rows(doc) -> list[tuple]:
+    """The production extractor: one (text, main_text, n_nodes) row, the
+    same code ``extract_document`` runs in process."""
+    return [text_fields(doc)]
 
-    With ``dedup_consecutive`` the input is expected sorted by
-    (url, warc_ts desc) within the partition; the first row of each url
-    group (the latest capture) wins and the rest are skipped — this is the
-    single-shuffle dedup path (see run_extract)."""
 
-    def extract_batches(iterator):
-        import pyarrow as pa
+def _row_bytes(row: tuple) -> int:
+    """Output-size estimate of one extractor row (8 per scalar)."""
+    return sum(len(v) if isinstance(v, (str, bytes, list)) else 8
+               for v in row)
 
-        from crystal_html5_spark.html5x.extract import extract_document
 
-        last_url = None
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            tss = batch.column("warc_ts")
-            htmls = batch.column("html").to_pylist()
+def dom_batches(batches, extract, schema, *, latest: bool = False,
+                max_doc_bytes: int = DEFAULT_MAX_DOC_BYTES):
+    """The mapInArrow body behind ``dom_map`` (Iterator[RecordBatch] ->
+    Iterator[RecordBatch]); ``schema`` is the pyarrow schema of the
+    extractor's columns.
 
-            keep_idx: list[int] = []
-            acc_bytes = 0
-            texts: list[bytes] = []
-            mains: list[str] = []
-            n_nodes: list[int] = []
-            html_bytes: list[int] = []
-            errs: list[str] = []
-            parse_ms: list[float] = []
+    Each document is parsed once and handed to ``extract``; a document
+    that fails yields exactly one row with ``err`` set and the
+    extractor's columns null.  ``parse_ms`` spans the parse and the
+    extractor, not the Arrow assembly.  With ``latest`` the input is
+    sorted by (url, warc_ts desc) within the partition and only the
+    first row of each url run is parsed, across batch boundaries.
+    Output is cut whenever the estimated row bytes reach
+    ``_TARGET_OUT_BATCH_BYTES``."""
+    null_row = (None,) * len(schema)
+    names = list(schema.names) + ["html_bytes", "err", "parse_ms"]
+    last_url = None
 
-            def flush():
-                if not keep_idx:
-                    return None
-                return pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([urls[i] for i in keep_idx], pa.string()),
-                        tss.take(pa.array(keep_idx, pa.int32())),
-                        pa.array(texts, pa.binary()),
-                        pa.array(mains, pa.string()),
-                        pa.array(n_nodes, pa.int32()),
-                        pa.array(html_bytes, pa.int64()),
-                        pa.array(errs, pa.string()),
-                        pa.array(parse_ms, pa.float64()),
-                    ],
-                    names=[
-                        "url", "warc_ts", "text", "main_text", "n_nodes",
-                        "html_bytes", "err", "parse_ms",
-                    ],
-                )
+    def assemble(batch, keys, recs):
+        src, rows, sizes, errs, ms = zip(*recs)
+        cols = [batch.column(k).take(pa.array(src, pa.int32())) for k in keys]
+        cols += [pa.array(c, t) for c, t in zip(zip(*rows), schema.types)]
+        cols += [pa.array(sizes, pa.int64()), pa.array(errs, pa.string()),
+                 pa.array(ms, pa.float64())]
+        return pa.RecordBatch.from_arrays(cols, names=keys + names)
 
-            for i, h in enumerate(htmls):
-                u = urls[i]
-                if dedup_consecutive:
-                    if u == last_url:
-                        continue  # older capture of the same url
-                    last_url = u
-                h = h or b""
-                r = extract_document(h, max_doc_bytes=max_doc_bytes)
-                keep_idx.append(i)
-                texts.append(r["text"])
-                mains.append(r["main_text"])
-                n_nodes.append(r["n_nodes"])
-                html_bytes.append(len(h))
-                errs.append(r["err"])
-                parse_ms.append(r["parse_ms"])
-                acc_bytes += len(h) + len(r["text"])
-                if acc_bytes >= _TARGET_OUT_BATCH_BYTES:
-                    out = flush()
-                    if out is not None:
-                        yield out
-                    keep_idx = []
-                    acc_bytes = 0
-                    texts, mains, n_nodes = [], [], []
-                    html_bytes, errs, parse_ms = [], [], []
-            out = flush()
-            if out is not None:
-                yield out
+    for batch in batches:
+        keys = [k for k in batch.schema.names if k != "html"]
+        urls = batch.column("url").to_pylist()
+        recs: list[tuple] = []  # (source index, row, html_bytes, err, ms)
+        acc = 0
+        for i, h in enumerate(batch.column("html").to_pylist()):
+            u = urls[i]
+            if latest:
+                if u == last_url:
+                    continue  # older capture of the same url
+                last_url = u
+            h = h or b""
+            t0 = time.perf_counter()
+            out, err = parse_extract(h, extract, max_doc_bytes)
+            ms = (time.perf_counter() - t0) * 1000.0
+            for r in (null_row,) if err else out:
+                recs.append((i, r, len(h), err, ms))
+                acc += len(u or "") + _row_bytes(r)
+            if acc >= _TARGET_OUT_BATCH_BYTES:
+                yield assemble(batch, keys, recs)
+                recs, acc = [], 0
+        if recs:
+            yield assemble(batch, keys, recs)
 
-    return extract_batches
+
+def dom_map(frame: DataFrame, extract, schema: str, *, latest: bool = False,
+            num_partitions: int | None = None, salt: int | None = None,
+            max_doc_bytes: int = DEFAULT_MAX_DOC_BYTES) -> DataFrame:
+    """Apply the per-document extractor ``extract(doc) -> list[tuple]``
+    (columns given by the DDL ``schema``) to every page of ``frame``.
+
+    Output: ``url`` [, ``warc_ts``], the extractor's columns, then
+    ``html_bytes``, ``err`` and ``parse_ms``.  ``warc_ts`` is carried
+    when the frame has it.  Error rows have ``err != ''``; aggregating
+    callers filter ``err = ''``.
+
+    With ``latest`` only the newest capture of each url is extracted, in
+    one shuffle: salted repartition into ``num_partitions`` (default:
+    the default parallelism), partition-local sort on
+    (url, warc_ts desc) and skip-consecutive in the UDF."""
+    keys = ["url", "warc_ts"] if "warc_ts" in frame.columns else ["url"]
+    frame = frame.select(*keys, "html")
+    if latest:
+        n = (num_partitions
+             or frame.sparkSession.sparkContext.defaultParallelism)
+        frame = salted_repartition(frame, n, salt).sortWithinPartitions(
+            "url", F.desc("warc_ts"))
+    arrow_schema = pa.schema([(f.name, to_arrow_type(f.dataType))
+                              for f in StructType.fromDDL(schema).fields])
+    key_ddl = "url string" + (", warc_ts timestamp" if len(keys) == 2 else "")
+
+    def body(batches):
+        return dom_batches(batches, extract, arrow_schema, latest=latest,
+                           max_doc_bytes=max_doc_bytes)
+
+    return frame.mapInArrow(body, f"{key_ddl}, {schema}, {DOC_COLUMNS_DDL}")
 
 
 def dedup_latest_capture(pages: DataFrame) -> DataFrame:
@@ -159,25 +183,15 @@ def run_extract(
 ) -> DataFrame:
     """Full pipeline: prune -> [resume-filter ->] dedup -> salt -> extract.
 
-    Hot path (no resume): ONE shuffle.  The salted key is a pure function
-    of url, so every capture of a url lands in the same partition; a
-    partition-local sort on (url, warc_ts desc) plus skip-consecutive in
-    the UDF implements latest-capture dedup without the window's second
-    full-data exchange.  The resume path (done_keys) keeps the explicit
-    window dedup so the anti-join can run on exact (url, warc_ts) keys
-    after it.
+    Hot path (no resume): ``dom_map(latest=True)``, ONE shuffle.  The
+    resume path (done_keys) keeps the explicit window dedup so the
+    anti-join can run on exact (url, warc_ts) keys after it.
     """
     cols = pages.select("url", "warc_ts", "html")
-    n = num_partitions or spark.sparkContext.defaultParallelism
     if dedup and done_keys is None:
-        salted = salted_repartition(cols, n, salt)
-        local_sorted = salted.sortWithinPartitions(
-            "url", F.desc("warc_ts")
-        )
-        return local_sorted.mapInArrow(
-            make_extract_fn(max_doc_bytes, dedup_consecutive=True),
-            RESULT_SCHEMA_DDL,
-        )
+        return dom_map(cols, text_rows, TEXT_SCHEMA_DDL, latest=True,
+                       num_partitions=num_partitions, salt=salt,
+                       max_doc_bytes=max_doc_bytes)
     if dedup:
         cols = dedup_latest_capture(cols)
     if done_keys is not None:
@@ -190,9 +204,9 @@ def run_extract(
             done_keys.select("url", "warc_ts").distinct(),
             ["url", "warc_ts"], "left_anti",
         )
-    salted = salted_repartition(cols, n, salt)
-    return salted.mapInArrow(make_extract_fn(max_doc_bytes),
-                             RESULT_SCHEMA_DDL)
+    n = num_partitions or spark.sparkContext.defaultParallelism
+    return dom_map(salted_repartition(cols, n, salt), text_rows,
+                   TEXT_SCHEMA_DDL, max_doc_bytes=max_doc_bytes)
 
 
 def partition_metrics(extracted: DataFrame) -> DataFrame:

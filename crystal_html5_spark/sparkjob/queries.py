@@ -16,10 +16,20 @@ Design notes for hash-stable oracles:
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, functions as F
 
+from ..html5x.css import compile_selector
+from ..html5x.extract import (
+    SELECTOR_POLICY_WITH_H2 as _SELECTOR_POLICY,
+    _utf8_safe,
+    block_features,
+    main_text_selector,
+)
+from ..html5x.xpath import xpath, xpath_float, xpath_string
 from . import io as tableio
-from .extract_job import run_extract
+from .extract_job import dom_map, run_extract
 from .multimodal import (
     MEDIA_META_ORACLE as _MEDIA_META_ORACLE,
     MEDIA_THUMBS_ORACLE as _MEDIA_THUMBS_ORACLE,
@@ -892,41 +902,19 @@ FROM perdoc ORDER BY doc_id
 # selector the engine supports works (.sidebar, [role=banner], ...);
 # per-url sha256 of the selector-stripped text makes one wrong node
 # classification anywhere fail the hash.
-from ..html5x.extract import SELECTOR_POLICY_WITH_H2 as _SELECTOR_POLICY  # noqa: E501,E402
+
+
+def _selector_row(doc) -> list[tuple]:
+    mt = main_text_selector(doc, _SELECTOR_POLICY)
+    return [(hashlib.sha256(mt.encode("utf-8", "surrogateescape"))
+             .hexdigest(), len(mt))]
 
 
 def _extract_selector_pages(spark, sf_dir: str) -> DataFrame:
-    latest = _latest_pages_sorted(spark)
-
-    def extract(iterator):
-        import hashlib
-
-        import pyarrow as pa
-
-        from crystal_html5_spark.html5x.extract import main_text_selector
-        from crystal_html5_spark.html5x.parser import parse
-
-        urls, sha, ln = [], [], []
-        for u, h in _consecutive_latest(iterator):
-            try:
-                mt = main_text_selector(parse(h or b""),
-                                        _SELECTOR_POLICY)
-            except Exception:  # noqa: BLE001
-                mt = ""
-            urls.append(u)
-            sha.append(hashlib.sha256(
-                mt.encode("utf-8", "surrogateescape")).hexdigest())
-            ln.append(len(mt))
-        if urls:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(sha, pa.string()),
-                 pa.array(ln, pa.int64())],
-                names=["url", "sel_sha256", "sel_len"],
-            )
-
-    return latest.mapInArrow(
-        extract, "url string, sel_sha256 string, sel_len long"
-    ).orderBy("url")
+    return dom_map(
+        _pages_fixed(spark), _selector_row,
+        "sel_sha256 string, sel_len long", latest=True,
+    ).select("url", "sel_sha256", "sel_len").orderBy("url")
 
 
 def _extract_selector_pages_oracle() -> str:
@@ -1719,7 +1707,7 @@ ORDER BY n_pages DESC, host LIMIT 10
 # in-degree targets report reference counts, distinct sources and the
 # anchor-text variety.  ORDER BY/LIMIT plans as TakeOrderedAndProject
 # over the target-sized aggregate.  Spark extracts anchors through the
-# CSS engine in the same Arrow-UDF pattern as page_links; the oracle
+# CSS engine in a dom_map extractor, as page_links does; the oracle
 # runs the identical ANSI rollup over frozen per-anchor rows from the
 # in-process engine.
 _ANCHOR_AGG_SQL = """
@@ -1741,41 +1729,17 @@ ORDER BY n_refs DESC, target LIMIT 50
 """
 
 
+def _anchor_rows(doc) -> list[tuple]:
+    return [(_utf8_safe(m["href"]), _utf8_safe(m.inner_text()))
+            for m in _A_HREF.select(doc)]
+
+
 def _extract_anchor_frame(spark) -> DataFrame:
-    """(url, href, anchor_text) rows from every fixture page via the
-    CSS engine — shared by the anchor rollup and the link-graph
-    PageRank."""
+    """(url, href, anchor_text) rows from every parsed fixture page via
+    the CSS engine."""
     pages = _pages_fixed_spread(spark).select("url", "html")
-
-    def anchors(iterator):
-        import pyarrow as pa
-
-        from crystal_html5_spark.html5x.css import compile_selector
-        from crystal_html5_spark.html5x.extract import _utf8_safe
-        from crystal_html5_spark.html5x.parser import parse
-
-        sel = compile_selector("a[href]")
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            u, h, a = [], [], []
-            for url, html in zip(urls, htmls):
-                try:
-                    matches = sel.select(parse(html or b""))
-                except Exception:  # noqa: BLE001
-                    matches = []
-                for m in matches:
-                    u.append(url)
-                    h.append(_utf8_safe(m["href"]))
-                    a.append(_utf8_safe(m.inner_text()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(u, pa.string()), pa.array(h, pa.string()),
-                 pa.array(a, pa.string())],
-                names=["url", "href", "anchor_text"],
-            )
-
-    return pages.mapInArrow(
-        anchors, "url string, href string, anchor_text string")
+    return (dom_map(pages, _anchor_rows, "href string, anchor_text string")
+            .filter("err = ''").select("url", "href", "anchor_text"))
 
 
 def _extract_anchor_texts(spark, sf_dir: str) -> DataFrame:
@@ -2797,40 +2761,13 @@ FROM classified GROUP BY url ORDER BY url
 
 
 def _extract_content_blocks(spark, sf_dir: str) -> DataFrame:
-    latest = _latest_pages_sorted(spark)
-
-    def feats(iterator):
-        import pyarrow as pa
-
-        from crystal_html5_spark.html5x.extract import block_features
-        from crystal_html5_spark.html5x.parser import parse
-
-        u, bno, tag, tl, ll = [], [], [], [], []
-        for url, h in _consecutive_latest(iterator):
-            try:
-                rows = block_features(parse(h or b""))
-            except Exception:  # noqa: BLE001 — bad page -> no blocks
-                rows = []
-            for b, t, a, c in rows:
-                u.append(url)
-                bno.append(b)
-                tag.append(t)
-                tl.append(a)
-                ll.append(c)
-        if u:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(u, pa.string()), pa.array(bno, pa.int32()),
-                 pa.array(tag, pa.string()), pa.array(tl, pa.int64()),
-                 pa.array(ll, pa.int64())],
-                names=["url", "block_no", "tag", "text_len", "link_len"],
-            )
-
-    bdf = latest.mapInArrow(
-        feats,
-        "url string, block_no int, tag string,"
-        " text_len long, link_len long",
-    )
-    bdf.createOrReplaceTempView("extract_block_feats")
+    bdf = dom_map(
+        _pages_fixed(spark), block_features,
+        "block_no int, tag string, text_len long, link_len long",
+        latest=True,
+    ).filter("err = ''")
+    bdf.select("url", "block_no", "tag", "text_len", "link_len") \
+        .createOrReplaceTempView("extract_block_feats")
     return spark.sql(_CONTENT_BLOCKS_CLASSIFY.format(
         src="SELECT * FROM extract_block_feats"))
 
@@ -3685,59 +3622,53 @@ def _pages_fixed(spark) -> DataFrame:
 def _pages_fixed_spread(spark) -> DataFrame:
     """Fixed fixture with the adaptive scan spread (io.spread_small_scan):
     the 500-page fixture is one parquet file = one scan split, so a
-    mapInArrow straight off the scan (page_links/page_titles/
+    dom_map straight off the scan (page_links/page_titles/
     page_xpath_stats, WARC/WAT serialization) parses every page in ONE
-    Python worker.  Queries that feed run_extract don't need this — the
-    pipeline's salted repartition already spreads them."""
+    Python worker.  run_extract and dom_map(latest=True) don't need
+    this — their salted repartition already spreads the pages."""
     return _spread_view(spark, _pages_fixed(spark),
                         f"pages_fixed_{_FIXED_PAGES_N}")
 
 
-def _latest_pages(spark) -> DataFrame:
-    """Latest capture per url of the fixed fixture — ONE Spark-side
-    definition of the dedup rule (matches freeze_expected.py's
-    latest_captures; the fixture has no (url, ts) ties)."""
-    from pyspark.sql import Window
-
-    pages = _pages_fixed(spark).select("url", "warc_ts", "html")
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (pages.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1").select("url", "html"))
+# Per-page extractors for dom_map (Node -> rows) shared by the queries.
+_A_HREF = compile_selector("a[href]")
 
 
-def _latest_pages_sorted(spark) -> DataFrame:
-    """Latest-capture input in run_extract's ONE-shuffle shape for
-    heavyweight mapInArrow consumers: salted repartition (the key is a
-    pure function of url, so every capture of a url lands in one
-    partition) + partition-local sort on (url, warc_ts desc).  The
-    consumer keeps the FIRST row of each consecutive url run — same
-    rows as _latest_pages, but the parse work is spread over every
-    core and the window's second exchange disappears (the r5 plan ran
-    the selector/block parses in ONE task: the window's 7 MB output
-    coalesced to a single AQE partition)."""
-    from .extract_job import salted_repartition
-
-    pages = _pages_fixed(spark).select("url", "warc_ts", "html")
-    n = spark.sparkContext.defaultParallelism
-    return salted_repartition(pages, n).sortWithinPartitions(
-        "url", F.desc("warc_ts"))
+def _hrefs(doc) -> list:
+    """a[href] values in document order (page_links, WAT)."""
+    return [m["href"] for m in _A_HREF.select(doc)]
 
 
-def _consecutive_latest(batches):
-    """Generator helper for the _latest_pages_sorted consumers: yields
-    (url, html) rows keeping the first row of each consecutive url run
-    (tracked across Arrow batch boundaries within the task)."""
-    last_url = None
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        for u, h in zip(urls, htmls):
-            if u == last_url:
-                continue
-            last_url = u
-            yield u, h
+def _title(doc):
+    """//title text with undecodable bytes as U+FFFD (page_titles, WAT)."""
+    node = xpath(doc, "//title")
+    if node is None:
+        return None
+    return node.inner_text().encode("utf-8", "replace").decode("utf-8")
 
 
+def _links_row(doc) -> list[tuple]:
+    hrefs = _hrefs(doc)
+    return [(len(hrefs), hrefs[0] if hrefs else None)]
+
+
+def _title_row(doc) -> list[tuple]:
+    return [(_title(doc),)]
+
+
+def _wat_row(doc) -> list[tuple]:
+    return [(_title(doc), _hrefs(doc))]
+
+
+def _xpath_stats_row(doc) -> list[tuple]:
+    return [(
+        xpath_string(doc, "normalize-space(//title)"),
+        int(xpath_float(
+            doc, "count(//article//a[contains(@href, '/ref/')])")),
+        xpath_string(doc, "string(//nav//a[1]/@href)"),
+        int(xpath_float(
+            doc, "count(//p[string-length(normalize-space()) > 0])")),
+    )]
 
 
 def _extract_pages(spark, sf_dir: str) -> DataFrame:
@@ -3830,37 +3761,24 @@ def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
     field altered by the WAT round-trip fails the hash.  Aggregation
     (not a row-per-page join) because the fixture intentionally holds
     recrawled duplicate urls."""
-    pages = _pages_fixed_spread(spark).select("url", "warc_ts", "html")
+    meta = dom_map(_pages_fixed_spread(spark), _wat_row,
+                   "title string, hrefs array<string>")
 
     def to_wat(iterator):
         import pyarrow as pa
 
-        from crystal_html5_spark.html5x.css import compile_selector
-        from crystal_html5_spark.html5x.parser import parse
-        from crystal_html5_spark.html5x.xpath import xpath
         from crystal_html5_spark.sparkjob.warcio import write_wat
 
-        sel = compile_selector("a[href]")
         for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            tss = batch.column("warc_ts").to_pylist()
-            htmls = batch.column("html").to_pylist()
             rows = []
-            for u, ts, h in zip(urls, tss, htmls):
-                try:
-                    doc = parse(h or b"")
-                    node = xpath(doc, "//title")
-                    t = node.inner_text() if node is not None else None
-                    if t is not None:
-                        t = t.encode("utf-8", "replace").decode("utf-8")
-                    hrefs = [m["href"] for m in sel.select(doc)]
-                except Exception:  # noqa: BLE001 — malformed page
-                    t, hrefs = None, []
-                meta: dict = {"Links": [{"path": "A@/href", "url": x}
-                                        for x in hrefs]}
+            for u, ts, t, hrefs in zip(*(
+                    batch.column(c).to_pylist()
+                    for c in ("url", "warc_ts", "title", "hrefs"))):
+                m: dict = {"Links": [{"path": "A@/href", "url": x}
+                                     for x in hrefs or []]}
                 if t is not None:
-                    meta["Head"] = {"Title": t}
-                rows.append((u, ts, meta))
+                    m["Head"] = {"Title": t}
+                rows.append((u, ts, m))
             yield pa.RecordBatch.from_arrays(
                 [pa.array([write_wat(rows, gz=True)], pa.binary())],
                 names=["content"],
@@ -3888,7 +3806,8 @@ def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
                 names=["url", "title", "n_links", "first_href"],
             )
 
-    wat = pages.mapInArrow(to_wat, "content binary")
+    wat = meta.select("url", "warc_ts", "title", "hrefs") \
+        .mapInArrow(to_wat, "content binary")
     restored = wat.mapInArrow(
         from_wat,
         "url string, title string, n_links bigint, first_href string")
@@ -3912,121 +3831,28 @@ def _page_links(spark, sf_dir: str) -> DataFrame:
     """CSS-driven link extraction per page (a[href]); oracle-checked
     against the frozen in-process-engine output."""
     pages = _pages_fixed_spread(spark).select("url", "html")
-
-    def links(iterator):
-        import pyarrow as pa
-
-        from crystal_html5_spark.html5x.css import compile_selector
-        from crystal_html5_spark.html5x.parser import parse
-
-        sel = compile_selector("a[href]")
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            n_links = []
-            first_href = []
-            for h in htmls:
-                try:
-                    doc = parse(h or b"")
-                    matched = sel.select(doc)
-                    hrefs = [m["href"] for m in matched]
-                except Exception:  # noqa: BLE001
-                    hrefs = []
-                n_links.append(len(hrefs))
-                first_href.append(hrefs[0] if hrefs else None)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls), pa.array(n_links, pa.int32()),
-                 pa.array(first_href, pa.string())],
-                names=["url", "n_links", "first_href"],
-            )
-
-    return pages.mapInArrow(
-        links, "url string, n_links int, first_href string"
-    ).orderBy("url")
+    return dom_map(pages, _links_row, "n_links int, first_href string") \
+        .select("url", "n_links", "first_href").orderBy("url")
 
 
 def _page_titles(spark, sf_dir: str) -> DataFrame:
     """XPath-driven title extraction per page (//title); oracle-checked
     against the frozen in-process-engine output."""
     pages = _pages_fixed_spread(spark).select("url", "html")
-
-    def titles(iterator):
-        import pyarrow as pa
-
-        from crystal_html5_spark.html5x.parser import parse
-        from crystal_html5_spark.html5x.xpath import xpath
-
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            out = []
-            for h in htmls:
-                try:
-                    node = xpath(parse(h or b""), "//title")
-                    t = node.inner_text() if node is not None else None
-                    if t is not None:
-                        t = t.encode("utf-8", "replace").decode("utf-8")
-                except Exception:  # noqa: BLE001
-                    t = None
-                out.append(t)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls), pa.array(out, pa.string())],
-                names=["url", "title"],
-            )
-
-    return pages.mapInArrow(titles, "url string, title string").orderBy("url")
+    return dom_map(pages, _title_row, "title string") \
+        .select("url", "title").orderBy("url")
 
 
 def xpath_stats_over(pages: DataFrame) -> DataFrame:
     """XPath stats UDF over any (url, html) frame — shared by the
     driver-contract query (fixed fixture, frozen oracle) and the bench's
     sf-scaled throughput entry."""
-
-    def stats(iterator):
-        import pyarrow as pa
-
-        from crystal_html5_spark.html5x.parser import parse
-        from crystal_html5_spark.html5x.xpath import (
-            xpath_float,
-            xpath_string,
-        )
-
-        for batch in iterator:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            titles, n_ref, first_nav, n_paras = [], [], [], []
-            for h in htmls:
-                try:
-                    doc = parse(h or b"")
-                    titles.append(
-                        xpath_string(doc, "normalize-space(//title)"))
-                    n_ref.append(int(xpath_float(
-                        doc,
-                        "count(//article//a[contains(@href, '/ref/')])")))
-                    first_nav.append(
-                        xpath_string(doc, "string(//nav//a[1]/@href)"))
-                    n_paras.append(int(xpath_float(
-                        doc,
-                        "count(//p[string-length(normalize-space()) > 0])")))
-                except Exception:  # noqa: BLE001 — malformed page -> nulls
-                    titles.append(None)
-                    n_ref.append(-1)
-                    first_nav.append(None)
-                    n_paras.append(-1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls), pa.array(titles, pa.string()),
-                 pa.array(n_ref, pa.int64()),
-                 pa.array(first_nav, pa.string()),
-                 pa.array(n_paras, pa.int64())],
-                names=["url", "title_norm", "n_ref_links",
-                       "first_nav_href", "n_nonempty_paras"],
-            )
-
-    return pages.mapInArrow(
-        stats,
-        "url string, title_norm string, n_ref_links bigint,"
-        " first_nav_href string, n_nonempty_paras bigint",
-    ).orderBy("url")
+    return dom_map(
+        pages, _xpath_stats_row,
+        "title_norm string, n_ref_links bigint, first_nav_href string,"
+        " n_nonempty_paras bigint",
+    ).select("url", "title_norm", "n_ref_links", "first_nav_href",
+             "n_nonempty_paras").orderBy("url")
 
 
 def _page_xpath_stats(spark, sf_dir: str) -> DataFrame:

@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .extract_job import DEFAULT_MAX_DOC_BYTES, RESULT_SCHEMA_DDL, make_extract_fn
+from .extract_job import (DEFAULT_MAX_DOC_BYTES, TEXT_SCHEMA_DDL, dom_map,
+                          text_rows)
 from .pages import PAGES_SCHEMA_DDL
 
 
@@ -32,7 +33,7 @@ def stream_extract(pages: DataFrame,
                    max_doc_bytes: int = DEFAULT_MAX_DOC_BYTES,
                    watermark: str | None = None) -> DataFrame:
     """Dedup repeated (url, warc_ts) captures, then extract via the same
-    mapInArrow core as the batch job.
+    ``dom_map`` extractor as the batch job.
 
     Web-archive captures arrive with arbitrary event times (a recrawl may
     carry a timestamp days ahead of a backfill), so the default is
@@ -44,8 +45,8 @@ def stream_extract(pages: DataFrame,
     if watermark is not None:
         cols = cols.withWatermark("warc_ts", watermark)
     deduped = cols.dropDuplicates(["url", "warc_ts"])
-    return deduped.mapInArrow(make_extract_fn(max_doc_bytes),
-                              RESULT_SCHEMA_DDL)
+    return dom_map(deduped, text_rows, TEXT_SCHEMA_DDL,
+                   max_doc_bytes=max_doc_bytes)
 
 
 SESSION_OUTPUT_DDL = (
