@@ -24,12 +24,6 @@ BOILERPLATE_TAGS = frozenset((
 ))
 
 
-def inner_text_bytes(doc: Node) -> bytes:
-    """Exact bytes of the reference's inner_text (UTF-8 +surrogateescape so
-    invalid input bytes round-trip)."""
-    return s2b(doc.inner_text())
-
-
 def main_text(doc: Node) -> str:
     """Document-order text with boilerplate subtrees stripped."""
     out: list[str] = []

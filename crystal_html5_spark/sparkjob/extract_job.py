@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
-from ..html5x.extract import parse_extract, text_fields
+from ..html5x.extract import _utf8_safe, parse_extract, text_fields
 
 # Columns dom_map stamps on every output row, after the extractor's.
 DOC_COLUMNS_DDL = "html_bytes bigint, err string, parse_ms double"
@@ -56,6 +56,25 @@ def _row_bytes(row: tuple) -> int:
     """Output-size estimate of one extractor row (8 per scalar)."""
     return sum(len(v) if isinstance(v, (str, bytes, list)) else 8
                for v in row)
+
+
+def _utf8_valid(v):
+    """``v`` with every str in it, list items included, made valid UTF-8."""
+    if isinstance(v, str):
+        return _utf8_safe(v)
+    if isinstance(v, list):
+        return [_utf8_valid(x) for x in v]
+    return v
+
+
+def _arrow_column(values, t: pa.DataType) -> pa.Array:
+    """``pa.array(values, t)``; a column holding a lone surrogate (an
+    undecodable input byte carried by surrogateescape) is rebuilt with
+    it as U+FFFD.  Valid columns take the first try unchanged."""
+    try:
+        return pa.array(values, t)
+    except UnicodeEncodeError:
+        return pa.array([_utf8_valid(v) for v in values], t)
 
 
 def dom_batches(batches, extract, schema, *, latest: bool = False,
@@ -79,7 +98,8 @@ def dom_batches(batches, extract, schema, *, latest: bool = False,
     def assemble(batch, keys, recs):
         src, rows, sizes, errs, ms = zip(*recs)
         cols = [batch.column(k).take(pa.array(src, pa.int32())) for k in keys]
-        cols += [pa.array(c, t) for c, t in zip(zip(*rows), schema.types)]
+        cols += [_arrow_column(c, t)
+                 for c, t in zip(zip(*rows), schema.types)]
         cols += [pa.array(sizes, pa.int64()), pa.array(errs, pa.string()),
                  pa.array(ms, pa.float64())]
         return pa.RecordBatch.from_arrays(cols, names=keys + names)

@@ -30,19 +30,6 @@ from ..html5x.extract import (
 from ..html5x.xpath import xpath, xpath_float, xpath_string
 from . import io as tableio
 from .extract_job import dom_map, run_extract
-from .multimodal import (
-    MEDIA_META_ORACLE as _MEDIA_META_ORACLE,
-    MEDIA_THUMBS_ORACLE as _MEDIA_THUMBS_ORACLE,
-    media_features_query as _media_features,
-    media_meta_query as _media_meta,
-    media_pixel_sums_query as _media_pixel_sums,
-    MEDIA_AUDIO_RMS_ORACLE as _MEDIA_AUDIO_RMS_ORACLE,
-    MEDIA_FRAME_SAMPLE_ORACLE as _MEDIA_FRAME_SAMPLE_ORACLE,
-    media_audio_rms_query as _media_audio_rms,
-    MEDIA_PIXEL_SUMS_ORACLE as _MEDIA_PIXEL_SUMS_ORACLE,
-    media_frame_sample_query as _media_frame_sample,
-    media_thumbs_query as _media_thumbs,
-)
 from .pages import n_pages_for_sf, pages_parquet
 
 TABLES = (
@@ -3253,8 +3240,8 @@ _COSINE_EXPR = _cosine_sql("embedding", "qe")
 #   on float tie-ordering; final top-k is TakeOrderedAndProject.
 #
 # nprobe sweep at sf0.01 (N=500, k=22, recall@10 vs brute force and
-# fraction of vectors scanned — measured by scripts/ivf_sweep.py;
-# also pinned by test_ann_ivf_recall_vs_brute_force):
+# fraction of vectors scanned; the default point's recall is pinned by
+# tests/test_queries_oracle.py::test_ann_ivf_recall_vs_brute_force):
 #   nprobe      1      2      4      6     11     22(=k)
 #   recall   8/10   8/10   8/10   9/10  10/10  10/10
 #   scanned  .054   .108   .208   .306   .544  1.000
@@ -4024,10 +4011,6 @@ ORDER BY doc_id
 """
 
 
-# ------------------------------ registry ---------------------------------
-
-
-
 # --------------------------- URL hygiene ----------------------------------
 # Training-pipeline URL normalization (RFC 3986 case/port/fragment rules +
 # the practical utm_* strip), implemented TWICE with each engine's own
@@ -4243,13 +4226,6 @@ QUERIES: dict = {
         _ann_ivf_topk_sql("spark", _emb_rowcount(sf_dir))
     )(spark, sf_dir),
     "emb_near_dup_pairs": _emb_near_dup_pairs,
-    # multimodal: binary media column -> Pandas-UDF feature extraction
-    "media_features": _media_features,
-    "media_meta": _media_meta,
-    "media_pixel_sums": _media_pixel_sums,
-    "media_frame_sample": _media_frame_sample,
-    "media_audio_rms": _media_audio_rms,
-    "media_thumbs": _media_thumbs,
     # HTML extraction pipeline (non-SQL-expressible -> rows-only checks)
     "extract_pages": _extract_pages,
     "warc_extract_pages": _warc_extract_pages,
@@ -4409,15 +4385,4 @@ ORACLES: dict = {
         f"{_EXPECTED_DIR / f'extract_near_dups_{_FIXED_PAGES_N}.parquet'}')"
         " ORDER BY fullsig"
     ),
-    # media_features: decode features are not SQL-expressible ->
-    # rows-only (deterministic-checked).  Its metadata slice IS:
-    # media_meta's oracle recomputes decoder/dims/rate from the synth
-    # parameters without ever touching a media byte.
-    "media_meta": _MEDIA_META_ORACLE,
-    "media_pixel_sums": _MEDIA_PIXEL_SUMS_ORACLE,
-    "media_frame_sample": _MEDIA_FRAME_SAMPLE_ORACLE,
-    "media_audio_rms": _MEDIA_AUDIO_RMS_ORACLE,
-    # media_thumbs: resize operator metadata — thumb dims replayed by
-    # DuckDB from doc_id arithmetic + the integer thumb_dims formula.
-    "media_thumbs": _MEDIA_THUMBS_ORACLE,
 }

@@ -85,7 +85,12 @@ def _pattern_matches(pattern: str, path: str) -> bool:
     executor mid-crawl.  Greedy leftmost placement of each inter-'*'
     segment is exact for this pattern language: earlier placement only
     ever leaves more room for later segments, and the end-anchored tail
-    is checked at the end position directly."""
+    is checked at the end position directly.
+
+    Departs from the old regex on purpose where a path holds '\n': '*'
+    spans it (any octets, as the REP says; the regex's '.*' stopped at a
+    newline) and '$' means the very end of the path (the regex's '$'
+    also matched before a trailing newline)."""
     anchored = pattern.endswith("$")
     if anchored:
         pattern = pattern[:-1]

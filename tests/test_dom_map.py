@@ -1,5 +1,6 @@
 """dom_map, the one page-parsing Arrow UDF: its size cap, error rows,
-byte-capped output batching and skip-consecutive latest capture.  The
+undecodable bytes, byte-capped output batching and skip-consecutive
+latest capture.  The
 batch generator is driven in process; one test runs it through Spark."""
 
 import datetime as dt
@@ -84,6 +85,38 @@ def test_multi_row_extractor_rebatches_by_output_bytes(monkeypatch):
     assert _rows(capped, timed=False) == _rows(whole, timed=False)
     per_page = len(block_features(parse(page)))
     assert len(_rows(capped)) == 6 * per_page
+
+
+_BAD_PAGE = b'<title>t\xff</title><a href="x\xff">y</a>'
+
+
+@pytest.mark.parametrize("extract,schema,column,bad", [
+    (Q._links_row,
+     pa.schema([("n_links", pa.int32()), ("first_href", pa.string())]),
+     "first_href", "x\ufffd"),
+    (Q._xpath_stats_row,
+     pa.schema([("title_norm", pa.string()), ("n_ref_links", pa.int64()),
+                ("first_nav_href", pa.string()),
+                ("n_nonempty_paras", pa.int64())]),
+     "title_norm", "t\ufffd"),
+    (Q._wat_row,
+     pa.schema([("title", pa.string()), ("hrefs", pa.list_(pa.string()))]),
+     "hrefs", ["x\ufffd"]),
+], ids=["links", "xpath_stats", "wat"])
+def test_undecodable_byte_becomes_replacement_char(extract, schema, column,
+                                                    bad):
+    """An undecodable input byte reaches the extractor as a lone
+    surrogate; its string column must come out as U+FFFD rather than
+    fail the batch, and the good pages beside it must not change."""
+    good = [b'<title>a</title><a href="ok">z</a>', b"<p>plain"]
+    alone = _rows(dom_batches(iter([_batch(["a", "c"], good)]), extract,
+                              schema), timed=False)
+    out = _rows(dom_batches(
+        iter([_batch(["a", "b", "c"], [good[0], _BAD_PAGE, good[1]])]),
+        extract, schema), timed=False)
+    assert [r["err"] for r in out] == ["", "", ""]
+    assert out[1][column] == bad
+    assert [out[0], out[2]] == alone
 
 
 def test_latest_keeps_newest_capture_across_batch_boundary():

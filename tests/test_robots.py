@@ -147,10 +147,12 @@ def test_parser_never_raises_on_garbage():
 
 
 def test_linear_matcher_equals_regex_reference():
-    """The linear-time greedy matcher must agree with the regex
-    formulation ('.*'.join of escaped segments, trailing '$' anchor) it
-    replaced — property-tested over random patterns/paths dense in '*'
-    and '$', plus adversarial hand cases."""
+    """The linear-time greedy matcher must agree with a regex
+    formulation ('.*'.join of escaped segments, trailing '$' anchor) —
+    property-tested over random patterns/paths dense in '*' and '$',
+    plus adversarial hand cases.  The reference is compiled DOTALL and
+    anchors at the very end (\\Z): '*' spans '\\n' and '$' is not
+    satisfied before a trailing newline, as _pattern_matches documents."""
     import random
     import re
 
@@ -162,8 +164,8 @@ def test_linear_matcher_equals_regex_reference():
             pattern = pattern[:-1]
         rx = ".*".join(re.escape(p) for p in pattern.split("*"))
         if anchored:
-            rx += "$"
-        return re.match(rx, path) is not None
+            rx += r"\Z"
+        return re.match(rx, path, re.DOTALL) is not None
 
     hand = [
         ("", "/a"), ("$", ""), ("$", "/"), ("*$", "/x"),
@@ -172,6 +174,9 @@ def test_linear_matcher_equals_regex_reference():
         ("/p$x", "/p$x"), ("/p$x", "/px"),
         ("/fish*.php$", "/fish/salmon.php"),
         ("/fish*.php$", "/fish.php?x=1"),
+        ("/a*b", "/a\nb"), ("/a*b$", "/a\n\nb"), ("/*", "/\n"),
+        ("/a$", "/a\n"), ("/a*$", "/a\n"), ("/x*y", "/x\n"),
+        ("/a\n*c$", "/a\nb\nc"),
     ]
     for pat, path in hand:
         assert _pattern_matches(pat, path) == regex_ref(pat, path), \
@@ -182,7 +187,7 @@ def test_linear_matcher_equals_regex_reference():
     for _ in range(3000):
         pat = "".join(rng.choice(alpha)
                       for _ in range(rng.randrange(0, 10)))
-        path = "/" + "".join(rng.choice("ab/")
+        path = "/" + "".join(rng.choice("ab/\n")
                              for _ in range(rng.randrange(0, 14)))
         assert _pattern_matches(pat, path) == regex_ref(pat, path), \
             (pat, path)

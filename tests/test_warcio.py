@@ -601,13 +601,18 @@ def test_sink_heals_crash_debris(tmp_path):
 
 
 def test_cdxj_keys_with_whitespace_stay_parseable():
-    """A capture url containing spaces/newlines (or '%', or a unicode
-    line separator) must not corrupt the '<key> <ts> <json>' line
-    format: keys are percent-encoded at write so parse_cdxj recovers
-    every entry of the segment (judge ADVICE r5)."""
+    """A capture url containing spaces/newlines (or a unicode line
+    separator) must not corrupt the '<key> <ts> <json>' line format:
+    such keys are percent-encoded at write, '%' included, so parse_cdxj
+    recovers every entry of the segment.  Keys without whitespace, '%'
+    escapes included, keep their SURT form byte for byte."""
     import datetime as dt
 
-    from crystal_html5_spark.sparkjob.warcio import parse_cdxj, write_cdxj
+    from crystal_html5_spark.sparkjob.warcio import (
+        parse_cdxj,
+        surt_key,
+        write_cdxj,
+    )
 
     ts = dt.datetime(2024, 1, 2, 3, 4, 5)
     index = [
@@ -617,6 +622,8 @@ def test_cdxj_keys_with_whitespace_stay_parseable():
         ("urn:ls:a b", ts, 35, 5),
         ("https://ok.example/fine", ts, 40, 7),
         ("https://ok.example/path with space", ts, 47, 7),
+        ("https://ok.example/a%20b", ts, 54, 7),
+        ("urn:pct:50% x", ts, 61, 5),
     ]
     data = write_cdxj(index, htmls=[b"x"] * len(index))
     entries = parse_cdxj(data)
@@ -628,5 +635,11 @@ def test_cdxj_keys_with_whitespace_stay_parseable():
     for key, ts14, blob in entries:
         assert " " not in key and "\n" not in key
         assert ts14 == "20240102030405"
-    # ordinary keys unchanged by the sanitizer
-    assert any(k == "example,ok)/fine" for k, _, _ in entries)
+    # ordinary keys unchanged by the sanitizer, '%' escapes included
+    keys = {blob["url"]: key for key, _, blob in entries}
+    assert keys["https://ok.example/fine"] == "example,ok)/fine"
+    assert keys["https://ok.example/a%20b"] == \
+        surt_key("https://ok.example/a%20b") == "example,ok)/a%20b"
+    assert keys["urn:pct:50%"] == "urn:pct:50%"
+    # a key with whitespace encodes its '%' too, so decoding is unique
+    assert keys["urn:pct:50% x"] == "urn:pct:50%25%20x"
