@@ -6,8 +6,8 @@ Common-Crawl-style pages table (seed 42) scaled to sf0.001.
 queries()/oracle_sql(): operator surface per SURVEY.md §2 — relational
 core, training-data ops (dedup/minhash/lang-id/fingerprint/quality),
 similarity search over embeddings, and the HTML tokenizer/tree/CSS/XPath
-extraction pipeline (non-SQL-expressible entries carry no oracle and get
-the driver's rows-only check).
+extraction pipeline.  Every query carries an oracle; the extraction
+queries' oracles read frozen parquets of the in-process engine's output.
 """
 
 from __future__ import annotations

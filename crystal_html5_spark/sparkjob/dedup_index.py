@@ -49,18 +49,15 @@ from pyspark.sql import DataFrame, functions as F
 from .queries import _mh_prefix
 
 _INDEX_SUB = "bands"
-_VIEW = "dedup_index_input"
 
 
 def _bands_for(spark, docs: DataFrame) -> DataFrame:
     """(doc_id, band_no, band_key) for a docs(doc_id, text) frame via
-    the exact SQL derivation the batch queries use, through a DEDICATED
-    temp view (registering over 'documents' would silently clobber a
-    session's corpus view — review-round-2 finding)."""
-    docs.createOrReplaceTempView(_VIEW)
-    sql = (_mh_prefix("spark", with_bands=True)
+    the exact SQL derivation the batch queries use, with the frame bound
+    as a query argument (never over the session's 'documents' view)."""
+    sql = (_mh_prefix("spark", with_bands=True, docs="{docs}")
            + " SELECT doc_id, band_no, band_key FROM bands")
-    return spark.sql(sql.replace("FROM documents", f"FROM {_VIEW}"))
+    return spark.sql(sql, docs=docs)
 
 
 def index_path(index_dir: str) -> str:
@@ -132,12 +129,13 @@ def ingest(spark, docs: DataFrame, index_dir: str) -> DataFrame:
     # overwrites itself; different snapshots can never collide).  The
     # key is an ORDER-FREE distributed aggregate (sum of per-doc md5
     # ints + count) — collecting the id list would pull a
-    # snapshot-sized array to the driver
+    # snapshot-sized array to the driver.  The 56-bit ints are summed as
+    # DECIMAL(38, 0): a BIGINT sum overflows past ~128 docs.
     krow = (new_bands.select("doc_id").distinct()
             .select(
                 F.sum(F.expr(
                     "CAST(conv(substr(md5(CAST(doc_id AS STRING)),"
-                    " 1, 14), 16, 10) AS BIGINT)")).alias("h"),
+                    " 1, 14), 16, 10) AS DECIMAL(38, 0))")).alias("h"),
                 F.count("*").alias("n"))
             .collect()[0])
     key = hashlib.md5(

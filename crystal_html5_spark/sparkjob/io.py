@@ -71,14 +71,7 @@ def read_table(spark, source: str) -> DataFrame:
     return spark.read.parquet(source)
 
 
-# Split-count probes are a (cheap but nonzero) extra planning pass; the
-# answer is a pure function of the file layout and the session's
-# parallelism, so memoize per (session, source, parallelism).  This
-# caches a PLANNING decision, never data or results.
-_SPREAD_MEMO: dict = {}
-
-
-def spread_small_scan(spark, df: DataFrame, source: str) -> DataFrame:
+def spread_small_scan(spark, df: DataFrame) -> DataFrame:
     """Scale-adaptive scan spreading (optimization guide §2.5 / §6):
     when a file scan yields fewer input splits than the session's
     parallelism — tiny or single-row-group files, like the sf parquet
@@ -89,13 +82,7 @@ def spread_small_scan(spark, df: DataFrame, source: str) -> DataFrame:
     parallelism splits and the frame is returned unchanged (no exchange
     in the plan)."""
     p = spark.sparkContext.defaultParallelism
-    key = (spark, source, p)
-    if key not in _SPREAD_MEMO:
-        try:
-            _SPREAD_MEMO[key] = df.rdd.getNumPartitions() < p
-        except Exception:  # noqa: BLE001 — planning failure: no spread
-            _SPREAD_MEMO[key] = False
-    return df.repartition(p) if _SPREAD_MEMO[key] else df
+    return df.repartition(p) if df.rdd.getNumPartitions() < p else df
 
 
 def read_pages(spark, source: str) -> DataFrame:

@@ -1,9 +1,14 @@
 """Driver-contract queries and their DuckDB oracles.
 
-Each entry in QUERIES is a callable (spark, sf_dir) -> DataFrame; ORACLES
-maps the same names to ANSI SQL that DuckDB runs over the same parquet
-tables.  Column names/aliases match exactly (the driver's compare sorts
-columns by name and hashes values).
+Each query is declared once, in the _REGISTRY table at the bottom, as
+(name, Spark builder, oracle): the builder is a callable
+(spark, sf_dir) -> DataFrame and the oracle is SQL that DuckDB runs over
+the same parquet tables (or over a frozen parquet of the in-process
+engine's output), so every entry carries an oracle.  QUERIES and ORACLES
+are views of that table.  Column names/aliases match exactly (the
+driver's compare sorts columns by name and hashes values).  No query
+keeps state in the session beyond the ten TABLES views: intermediate
+frames are bound as ``spark.sql`` arguments, never as named temp views.
 
 Design notes for hash-stable oracles:
 - Money is aggregated in integer cents via FLOOR(x*100 + 0.5) — identical
@@ -38,13 +43,6 @@ TABLES = (
 )
 
 
-def _spread_view(spark, df: DataFrame, source: str) -> DataFrame:
-    """Scale-adaptive scan spreading — see io.spread_small_scan (the
-    single implementation; memoized split-count probe, no exchange at
-    real scale)."""
-    return tableio.spread_small_scan(spark, df, source)
-
-
 # Tables whose queries do heavy per-row expression work map-side (the
 # minhash/ngram/simhash/unigram families over `documents`): these get
 # the adaptive spread.  The relational facts (lineitem/orders)
@@ -58,47 +56,36 @@ def _spread_view(spark, df: DataFrame, source: str) -> DataFrame:
 _SPREAD_TABLES = ("documents",)
 
 
-# DataFrame-object memo for the sf views: spark.read.parquet costs a
-# schema/footer read + file listing per call (~20-40 ms x 10 tables),
-# paid on EVERY query invocation through load_views.  The memo holds
-# lazy DataFrame definitions keyed by (session, path) — planning
-# objects only; no rows are ever cached (the scan re-reads the files
-# on every action).
-_VIEW_MEMO: dict = {}
+# The one scan memo: spark.read.parquet costs a schema/footer read +
+# file listing per call (ten fresh reads: 0.82 s median at sf0.01,
+# local[4] on 4 cores), which every query invocation would pay.  It
+# holds lazy DataFrame definitions keyed by (session, source, spread) —
+# planning objects only; no rows are ever cached (the scan re-reads the
+# files on every action).
+_SCANS: dict = {}
 
 
-def _read_view(spark, t: str, source: str) -> DataFrame:
-    key = (spark, source)
-    df = _VIEW_MEMO.get(key)
+def _scan(spark, source: str, spread: bool = False) -> DataFrame:
+    """Memoized lazy scan of ``source``; ``spread`` adds the adaptive
+    scan spread (io.spread_small_scan)."""
+    key = (spark, source, spread)
+    df = _SCANS.get(key)
     if df is None:
         df = tableio.read_table(spark, source)
-        if t in _SPREAD_TABLES:
-            df = _spread_view(spark, df, source)
-        _VIEW_MEMO[key] = df
+        if spread:
+            df = tableio.spread_small_scan(spark, df)
+        _SCANS[key] = df
     return df
 
 
-# Last sf_dir registered per session: re-registering the same 10 views
-# costs 10 py4j round-trips (~90 ms) per query invocation; skip when
-# unchanged.  Callers that register their OWN temp view under one of
-# the TABLES names on a shared session must call invalidate_views()
-# afterwards (tests do; the driver and bench never shadow them).
-_VIEWS_REGISTERED: dict = {}
-
-
-def invalidate_views(spark) -> None:
-    """Forget the registration skip for a session whose TABLES views
-    were shadowed externally; the next load_views re-registers."""
-    _VIEWS_REGISTERED.pop(spark, None)
-
-
 def load_views(spark, sf_dir: str) -> None:
-    if _VIEWS_REGISTERED.get(spark) == sf_dir:
-        return
+    """Register the ten sf TABLES (the driver contract's names) as temp
+    views over the memoized scans.  Re-registered on every call (55 ms
+    median at sf0.01, local[4] on 4 cores), so a view a caller
+    registered under one of these names can never leak into a query."""
     for t in TABLES:
-        source = f"{sf_dir}/{t}.parquet"
-        _read_view(spark, t, source).createOrReplaceTempView(t)
-    _VIEWS_REGISTERED[spark] = sf_dir
+        _scan(spark, f"{sf_dir}/{t}.parquet",
+              t in _SPREAD_TABLES).createOrReplaceTempView(t)
 
 
 def _sql(query: str):
@@ -107,6 +94,13 @@ def _sql(query: str):
         return spark.sql(query)
 
     return fn
+
+
+def _dual(sql_for):
+    """(Spark builder, oracle) from one dialect-parameterized text:
+    ``sql_for("spark")`` runs over the views, ``sql_for("duck")`` is the
+    DuckDB oracle."""
+    return _sql(sql_for("spark")), sql_for("duck")
 
 
 # --------------------------- relational core ------------------------------
@@ -534,7 +528,8 @@ def _mh_perm_consts() -> list[tuple[int, int]]:
             for _ in range(_MH_PERMS)]
 
 
-def _mh_core_ctes(dialect: str, min_tokens: int = 3) -> str:
+def _mh_core_ctes(dialect: str, min_tokens: int = 3,
+                  docs: str = "documents") -> str:
     """toks/sh/hq/sigs CTEs, entirely in array functions: tokenize, build
     3-shingles by index, md5 once per shingle, decode the 8-hex prefix to
     a BIGINT, take 64 permutation minima per document.
@@ -548,7 +543,8 @@ def _mh_core_ctes(dialect: str, min_tokens: int = 3) -> str:
     toks level: a WHERE on a later derived array column gets
     filter-pushed by substituting the whole lambda chain into an
     interpreted per-row predicate — measured 20x slower than filtering
-    on the plain regexp (round-2 lesson)."""
+    on the plain regexp (round-2 lesson).  ``docs`` names the
+    (doc_id, text) relation the toks CTE reads."""
     if dialect == "spark":
         toks_arr = "regexp_extract_all(text, '\\\\S+', 0)"
         shingles = ("transform(sequence(0, size(ws) - 3), i -> "
@@ -581,7 +577,7 @@ def _mh_core_ctes(dialect: str, min_tokens: int = 3) -> str:
         for k, (a, b) in enumerate(_mh_perm_consts())
     )
     return f"""
-toks AS (SELECT doc_id, {toks_arr} AS ws FROM documents WHERE {guard}),
+toks AS (SELECT doc_id, {toks_arr} AS ws FROM {docs} WHERE {guard}),
 sh AS (SELECT doc_id, {shingles} AS shingles FROM toks),
 hq AS (
   SELECT doc_id, shingles,
@@ -621,8 +617,9 @@ bands AS (
 )"""
 
 
-def _mh_prefix(dialect: str, with_bands: bool, min_tokens: int = 3) -> str:
-    out = f"WITH {_mh_core_ctes(dialect, min_tokens)}"
+def _mh_prefix(dialect: str, with_bands: bool, min_tokens: int = 3,
+               docs: str = "documents") -> str:
+    out = f"WITH {_mh_core_ctes(dialect, min_tokens, docs)}"
     if with_bands:
         out += f", {_mh_bands_cte(dialect)}"
     return out
@@ -643,11 +640,6 @@ GROUP BY band_no, band_key
 ORDER BY band_no, band_key
 """
 
-
-_DOCS_MINHASH_SPARK = _docs_minhash_sql("spark")
-_DOCS_MINHASH_DUCK = _docs_minhash_sql("duck")
-_DOCS_MINHASH_BANDS_SPARK = _docs_minhash_bands_sql("spark")
-_DOCS_MINHASH_BANDS_DUCK = _docs_minhash_bands_sql("duck")
 
 # 16-bit SimHash from the first 4 hex digits of each word's md5: per bit,
 # words vote +1/-1; bit set iff the vote sum is >= 0.  Engine-portable:
@@ -688,9 +680,6 @@ _WORDS_SRC_DUCK = (
     r"SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS w"
     " FROM documents"
 )
-
-_DOCS_SIMHASH_SPARK = _simhash_sql(_WORDS_SRC_SPARK)
-_DOCS_SIMHASH_DUCK = _simhash_sql(_WORDS_SRC_DUCK)
 
 # SimHash near-dup pairs by pigeonhole banding: Hamming distance <= 1
 # over 16 bits means AT MOST one bit differs, so at least one of two
@@ -750,9 +739,6 @@ ORDER BY doc_a, doc_b
 """
 
 
-_DOCS_NEAR_DUP_PAIRS_SPARK = _docs_near_dup_pairs_sql("spark")
-_DOCS_NEAR_DUP_PAIRS_DUCK = _docs_near_dup_pairs_sql("duck")
-
 # Exact 3-gram Jaccard verification of the LSH candidates: the candidate
 # pairs are cheap (band-keyed join), the expensive exact set intersection
 # runs only on those pairs.  Integer outputs (Jaccard in 1/1000ths via
@@ -796,9 +782,6 @@ FROM pairs JOIN sset a ON doc_a = a.doc_id JOIN sset b ON doc_b = b.doc_id
 ORDER BY doc_a, doc_b
 """
 
-
-_DOCS_JACCARD_VERIFY_SPARK = _docs_jaccard_verify_sql("spark")
-_DOCS_JACCARD_VERIFY_DUCK = _docs_jaccard_verify_sql("duck")
 
 def _md5_int(dialect: str, expr: str, nhex: int = 12) -> str:
     """First `nhex` hex digits of md5(expr) as a BIGINT (nhex <= 15 so
@@ -902,14 +885,6 @@ def _extract_selector_pages(spark, sf_dir: str) -> DataFrame:
         _pages_fixed(spark), _selector_row,
         "sel_sha256 string, sel_len long", latest=True,
     ).select("url", "sel_sha256", "sel_len").orderBy("url")
-
-
-def _extract_selector_pages_oracle() -> str:
-    return (
-        "SELECT url, sel_sha256, sel_len FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'extract_selector_{_FIXED_PAGES_N}.parquet'}')"
-        " ORDER BY url"
-    )
 
 
 # ---------------- Unicode NFC normalization (dual engine) ----------------
@@ -1321,20 +1296,12 @@ def _extract_line_dedup(spark, sf_dir: str) -> DataFrame:
     """Extraction -> line explode -> cross-url line dedup in one Spark
     plan over the fixed 500-page fixture (frozen-lines oracle)."""
     out = run_extract(spark, _pages_fixed(spark))
-    out.select("url", "main_text").createOrReplaceTempView("extracted_main")
     lines_src = (
-        "SELECT url, pos AS line_no, l AS line FROM extracted_main"
+        "SELECT url, pos AS line_no, l AS line FROM {extracted}"
         " LATERAL VIEW posexplode(split(main_text, '\\n')) t AS pos, l"
     )
-    return spark.sql(_line_dedup_sql("spark", lines_src))
-
-
-def _extract_line_dedup_oracle() -> str:
-    lines_src = (
-        "SELECT url, line_no, line FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'extract_lines_{_FIXED_PAGES_N}.parquet'}')"
-    )
-    return _line_dedup_sql("duck", lines_src)
+    return spark.sql(_line_dedup_sql("spark", lines_src),
+                     extracted=out.select("url", "main_text"))
 
 
 # ---------------- range join (bucketed point-in-interval) ----------------
@@ -1724,21 +1691,13 @@ def _anchor_rows(doc) -> list[tuple]:
 def _extract_anchor_frame(spark) -> DataFrame:
     """(url, href, anchor_text) rows from every parsed fixture page via
     the CSS engine."""
-    pages = _pages_fixed_spread(spark).select("url", "html")
+    pages = _pages_fixed(spark, spread=True).select("url", "html")
     return (dom_map(pages, _anchor_rows, "href string, anchor_text string")
             .filter("err = ''").select("url", "href", "anchor_text"))
 
 
 def _extract_anchor_texts(spark, sf_dir: str) -> DataFrame:
-    _extract_anchor_frame(spark).createOrReplaceTempView("page_anchors")
-    return spark.sql(_ANCHOR_AGG_SQL.format(src="page_anchors"))
-
-
-def _extract_anchor_texts_oracle() -> str:
-    return _ANCHOR_AGG_SQL.format(
-        src="read_parquet('"
-        f"{_EXPECTED_DIR / f'extract_anchors_{_FIXED_PAGES_N}.parquet'}')"
-    )
+    return spark.sql(_ANCHOR_AGG_SQL, src=_extract_anchor_frame(spark))
 
 
 # ------------- exact per-group quantiles (rank arithmetic) -------------
@@ -2077,12 +2036,11 @@ def _docs_curation_verdict(spark, sf_dir: str) -> DataFrame:
     load_views(spark, sf_dir)
     edges = spark.sql(_dup_edges_sql("spark"))
     labels = connected_components(edges, "doc_a", "doc_b")
-    labels.select(F.col("node").alias("doc_id"),
-                  F.col("component").alias("rep")) \
-        .createOrReplaceTempView("dup_labels")
     return spark.sql(
         f"WITH {_unigram_ctes('spark')},"
-        + _curation_select_sql("dup_labels", "spark"))
+        + _curation_select_sql("{labels}", "spark"),
+        labels=labels.select(F.col("node").alias("doc_id"),
+                             F.col("component").alias("rep")))
 
 
 def _docs_curation_verdict_oracle() -> str:
@@ -2753,17 +2711,10 @@ def _extract_content_blocks(spark, sf_dir: str) -> DataFrame:
         "block_no int, tag string, text_len long, link_len long",
         latest=True,
     ).filter("err = ''")
-    bdf.select("url", "block_no", "tag", "text_len", "link_len") \
-        .createOrReplaceTempView("extract_block_feats")
-    return spark.sql(_CONTENT_BLOCKS_CLASSIFY.format(
-        src="SELECT * FROM extract_block_feats"))
-
-
-def _extract_content_blocks_oracle() -> str:
-    return _CONTENT_BLOCKS_CLASSIFY.format(
-        src="SELECT * FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'extract_blocks_{_FIXED_PAGES_N}.parquet'}')"
-    )
+    return spark.sql(
+        _CONTENT_BLOCKS_CLASSIFY.format(src="SELECT * FROM {blocks}"),
+        blocks=bdf.select("url", "block_no", "tag", "text_len",
+                          "link_len"))
 
 
 # ---- duplicate clusters: pairs -> connected components -> keep-list ----
@@ -3082,11 +3033,11 @@ ORDER BY doc_id
 
 
 # --- LSH (sign projection) with an exact SQL oracle ----------------------
-# Hyperplanes are Rademacher (+/-1) entries from a seeded PRNG, shared as a
-# Python constant (Spark fast path) and a VALUES literal (DuckDB oracle).
-# The bucket decision quantizes each float32 component to an integer
+# Hyperplanes are Rademacher (+/-1) entries from a seeded PRNG, inlined as
+# array literals (Spark) and a VALUES relation (DuckDB oracle).  The
+# bucket decision quantizes each float32 component to an integer
 # (FLOOR(x * 1e5)) so the plane dot products are EXACT integer arithmetic —
-# bit-identical across numpy and SQL, no float summation-order hazard.
+# bit-identical across engines, no float summation-order hazard.
 
 _LSH_BITS = 8
 _LSH_DIM = 64
@@ -3161,30 +3112,28 @@ FROM top ORDER BY rank
 """
 
 
-def _lsh_bucketize_arrow(iterator):
-    """mapInArrow: (vec_id, embedding) -> (vec_id, bucket, embedding).
-    Vectorized numpy per Arrow batch; exact integer plane dots (see above)."""
-    import numpy as np
-    import pyarrow as pa
-
-    planes = np.array(_lsh_planes(), dtype=np.int64)  # bits x dim
-    weights = (1 << np.arange(_LSH_BITS)).astype(np.int64)
-    for batch in iterator:
-        if batch.num_rows == 0:
-            continue
-        mat = np.array(batch.column("embedding").to_pylist(),
-                       dtype=np.float64)
-        q = np.floor(mat * float(_LSH_QUANT)).astype(np.int64)
-        bits = (q @ planes.T) >= 0
-        buckets = bits.dot(weights)
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("vec_id"), pa.array(buckets),
-             batch.column("embedding")],
-            names=["vec_id", "bucket", "embedding"],
-        )
+# The bucket as one built-in expression over the quantized vector q: the
+# oracle CTE's exact integer plane dots, one bit per plane.
+_LSH_BUCKET_SPARK = " + ".join(
+    "CASE WHEN aggregate(zip_with(q, array("
+    + ", ".join(map(str, plane))
+    + "), (u, p) -> u * p), 0L, (a, v) -> a + v) >= 0"
+    f" THEN {1 << b}L ELSE 0L END"
+    for b, plane in enumerate(_lsh_planes())
+)
 
 
-_BUCKETIZE_SCHEMA = "vec_id bigint, bucket bigint, embedding array<float>"
+def _lsh_bucketize(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding) -> (vec_id, bucket, embedding), quantizing
+    each vector once in its own projection."""
+    return (
+        emb.select("vec_id", "embedding", F.expr(
+            "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
+            f" * {_LSH_QUANT}) AS BIGINT))").alias("q"))
+        .select("vec_id", F.expr(_LSH_BUCKET_SPARK).alias("bucket"),
+                "embedding")
+    )
+
 
 def _cosine_sql(x: str, y: str) -> str:
     """Built-in (JVM, codegen) cosine between two array<float> columns."""
@@ -3458,30 +3407,33 @@ FROM top ORDER BY rank
 """
 
 
+def _ann_ivf_topk(spark, sf_dir: str) -> DataFrame:
+    """k = √N from this sf's embeddings rowcount (see _ivf_k)."""
+    return _sql(_ann_ivf_topk_sql("spark", _emb_rowcount(sf_dir)))(
+        spark, sf_dir)
+
+
 _EMB_NEAR_DUP_K = 20
 
 
 def _emb_near_dup_pairs(spark, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup candidates at scale: LSH-bucket every
-    vector (exact-integer planes, per-partition Arrow pass), self-join
+    vector (exact-integer planes, built-in expressions), self-join
     ONLY within buckets (never all-pairs), score candidates with the
     JVM cosine, and keep the top-k most-similar pairs via
     TakeOrderedAndProject.  Fully oracle-checked (integer outputs)."""
     from pyspark.sql import Window
 
-    emb = tableio.read_table(spark, f"{sf_dir}/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    b = emb.mapInArrow(_lsh_bucketize_arrow, _BUCKETIZE_SCHEMA)
-    b.createOrReplaceTempView("_emb_buckets")
+    emb = _scan(spark, f"{sf_dir}/embeddings.parquet")
     top = spark.sql(f"""
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                CAST(FLOOR(({_cosine_sql('a.embedding', 'b.embedding')})
                           * {_COS_QUANT}) AS BIGINT) AS cosq
-        FROM _emb_buckets a JOIN _emb_buckets b
+        FROM {{b}} a JOIN {{b}} b
           ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         ORDER BY cosq DESC, vec_a, vec_b
         LIMIT {_EMB_NEAR_DUP_K}
-    """)
+    """, b=_lsh_bucketize(emb))
     w = Window.orderBy(F.desc("cosq"), "vec_a", "vec_b")
     return (
         top.select("vec_a", "vec_b", F.row_number().over(w).alias("rank"))
@@ -3514,23 +3466,18 @@ FROM top ORDER BY rank
 
 def _ann_lsh_buckets(spark, sf_dir: str) -> DataFrame:
     """Sign-projection LSH bucket assignment — the ANN scale path's first
-    stage.  Distributed: one vectorized Arrow pass per partition, no
-    shuffle.  Exact-integer bucket decision gives this a full DuckDB
-    oracle (see _ann_lsh_buckets_oracle)."""
-    emb = tableio.read_table(spark, f"{sf_dir}/embeddings.parquet")
-    return (
-        emb.select("vec_id", "embedding")
-        .mapInArrow(_lsh_bucketize_arrow, _BUCKETIZE_SCHEMA)
-        .select("vec_id", "bucket")
-        .orderBy("vec_id")
-    )
+    stage.  Distributed: built-in expressions per row, no shuffle.
+    Exact-integer bucket decision gives this a full DuckDB oracle (see
+    _ann_lsh_buckets_oracle)."""
+    emb = _scan(spark, f"{sf_dir}/embeddings.parquet")
+    return _lsh_bucketize(emb).select("vec_id", "bucket").orderBy("vec_id")
 
 
 def _ann_lsh_topk(spark, sf_dir: str) -> DataFrame:
     """ANN scale path end-to-end, fully distributed (round-2 rewrite of the
     round-1 coalesce(1) bottleneck):
 
-      1. bucketize every vector per-partition (Arrow batch, no shuffle);
+      1. bucketize every vector with built-in expressions (no shuffle);
       2. bucketize the query vector from a 1-row pushed-down scan;
       3. BROADCAST-join on bucket equality -> candidates ~ N/2^bits,
          no exchange of the big side;
@@ -3542,12 +3489,10 @@ def _ann_lsh_topk(spark, sf_dir: str) -> DataFrame:
     network is each partition's local top-10."""
     from pyspark.sql import Window
 
-    emb = tableio.read_table(spark, f"{sf_dir}/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    b = emb.mapInArrow(_lsh_bucketize_arrow, _BUCKETIZE_SCHEMA)
+    emb = _scan(spark, f"{sf_dir}/embeddings.parquet")
+    b = _lsh_bucketize(emb)
     qb = (
-        emb.filter(F.col("vec_id") == 0)  # pushed-down 1-row scan
-        .mapInArrow(_lsh_bucketize_arrow, _BUCKETIZE_SCHEMA)
+        _lsh_bucketize(emb.filter(F.col("vec_id") == 0))  # 1-row scan
         .select(F.col("bucket").alias("qbucket"),
                 F.col("embedding").alias("qe"))
     )
@@ -3566,27 +3511,16 @@ def _ann_lsh_topk(spark, sf_dir: str) -> DataFrame:
 
 
 # ------------------------- HTML extraction queries ------------------------
-# The pages table is synthesized deterministically (seed 42) at a size
-# scaled to sf_dir; the parser is not SQL-expressible, so these are
-# rows-only checks for the driver (deterministic output across runs).
-
-
-def _read_cached(spark, source: str) -> DataFrame:
-    """Memoized lazy scan definition (same planning-object cache as the
-    sf views — see _VIEW_MEMO; no rows are cached)."""
-    key = (spark, source)
-    df = _VIEW_MEMO.get(key)
-    if df is None:
-        df = tableio.read_table(spark, source)
-        _VIEW_MEMO[key] = df
-    return df
+# The pages table is synthesized deterministically (seed 42).  The parser
+# is not SQL-expressible, so the graded queries run over a fixed fixture
+# whose oracles are frozen parquets from the in-process engine.
 
 
 def _pages(spark, sf_dir: str) -> DataFrame:
     """Pages as a parquet scan (cached by size+seed): the extract queries
     get the same pruned-scan plan as the bench/production path instead of
     a driver-side createDataFrame materialization."""
-    return _read_cached(spark, pages_parquet(spark, n_pages_for_sf(sf_dir)))
+    return _scan(spark, pages_parquet(spark, n_pages_for_sf(sf_dir)))
 
 
 # page_links/page_titles are CSS/XPath-through-Spark correctness
@@ -3602,19 +3536,22 @@ _EXPECTED_DIR = _pathlib.Path(__file__).resolve().parents[2] \
     / "tests" / "fixtures" / "expected"
 
 
-def _pages_fixed(spark) -> DataFrame:
-    return _read_cached(spark, pages_parquet(spark, _FIXED_PAGES_N))
+def _frozen(stem: str) -> str:
+    """DuckDB scan of a frozen in-process-engine output over the fixed
+    fixture (scripts/freeze_expected.py)."""
+    path = _EXPECTED_DIR / f"{stem}_{_FIXED_PAGES_N}.parquet"
+    return f"read_parquet('{path}')"
 
 
-def _pages_fixed_spread(spark) -> DataFrame:
-    """Fixed fixture with the adaptive scan spread (io.spread_small_scan):
-    the 500-page fixture is one parquet file = one scan split, so a
-    dom_map straight off the scan (page_links/page_titles/
-    page_xpath_stats, WARC/WAT serialization) parses every page in ONE
-    Python worker.  run_extract and dom_map(latest=True) don't need
-    this — their salted repartition already spreads the pages."""
-    return _spread_view(spark, _pages_fixed(spark),
-                        f"pages_fixed_{_FIXED_PAGES_N}")
+def _pages_fixed(spark, spread: bool = False) -> DataFrame:
+    """The fixed fixture scan.  ``spread`` adds the adaptive scan spread
+    (io.spread_small_scan): the 500-page fixture is one parquet file =
+    one scan split, so a dom_map straight off the scan (page_links/
+    page_titles/page_xpath_stats, WARC/WAT serialization) would parse
+    every page in ONE Python worker.  run_extract and
+    dom_map(latest=True) don't need it — their salted repartition
+    already spreads the pages."""
+    return _scan(spark, pages_parquet(spark, _FIXED_PAGES_N), spread)
 
 
 # Per-page extractors for dom_map (Node -> rows) shared by the queries.
@@ -3631,7 +3568,7 @@ def _title(doc):
     node = xpath(doc, "//title")
     if node is None:
         return None
-    return node.inner_text().encode("utf-8", "replace").decode("utf-8")
+    return _utf8_safe(node.inner_text())
 
 
 def _links_row(doc) -> list[tuple]:
@@ -3658,13 +3595,10 @@ def _xpath_stats_row(doc) -> list[tuple]:
     )]
 
 
-def _extract_pages(spark, sf_dir: str) -> DataFrame:
-    """Extraction through Spark with a frozen independent oracle: pinned
-    to the fixed 500-page fixture (scripts/freeze_expected.py replicates
-    dedup+extract in-process; sf-scaled throughput is extract_pipeline's
-    job in bench.py)."""
-    out = run_extract(spark, _pages_fixed(spark))
-    return out.select(
+def _extract_summary(spark, pages: DataFrame) -> DataFrame:
+    """run_extract, reduced to the per-url columns of extract_pages'
+    frozen oracle."""
+    return run_extract(spark, pages).select(
         "url",
         F.sha2(F.col("text"), 256).alias("text_sha256"),
         "n_nodes",
@@ -3673,7 +3607,15 @@ def _extract_pages(spark, sf_dir: str) -> DataFrame:
     ).orderBy("url")
 
 
-def _warc_extract_pages_impl(spark, gz: bool) -> DataFrame:
+def _extract_pages(spark, sf_dir: str) -> DataFrame:
+    """Extraction through Spark with a frozen independent oracle: pinned
+    to the fixed 500-page fixture (scripts/freeze_expected.py replicates
+    dedup+extract in-process; sf-scaled throughput is extract_pipeline's
+    job in bench.py)."""
+    return _extract_summary(spark, _pages_fixed(spark))
+
+
+def _warc_extract_pages(spark, sf_dir: str, gz: bool = False) -> DataFrame:
     """Extraction from a WARC-encoded copy of the fixture (the format
     real 100 TB web corpora ship in): pages are serialized to WARC (one
     crawl-file blob per partition, warcinfo record included; per-record
@@ -3683,7 +3625,8 @@ def _warc_extract_pages_impl(spark, gz: bool) -> DataFrame:
     oracle as extract_pages, so a single byte lost or altered by the
     WARC round-trip (url, capture timestamp feeding latest-capture
     dedup, html payload, gzip member framing) fails the hash."""
-    pages = _pages_fixed_spread(spark).select("url", "warc_ts", "html")
+    pages = _pages_fixed(spark, spread=True) \
+        .select("url", "warc_ts", "html")
 
     def to_warc(iterator):
         import pyarrow as pa
@@ -3723,18 +3666,7 @@ def _warc_extract_pages_impl(spark, gz: bool) -> DataFrame:
     warc = pages.mapInArrow(to_warc, "content binary")
     restored = warc.mapInArrow(
         from_warc, "url string, warc_ts timestamp, html binary")
-    out = run_extract(spark, restored)
-    return out.select(
-        "url",
-        F.sha2(F.col("text"), 256).alias("text_sha256"),
-        "n_nodes",
-        F.length("main_text").alias("main_len"),
-        "err",
-    ).orderBy("url")
-
-
-def _warc_extract_pages(spark, sf_dir: str) -> DataFrame:
-    return _warc_extract_pages_impl(spark, gz=False)
+    return _extract_summary(spark, restored)
 
 
 def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
@@ -3748,7 +3680,7 @@ def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
     field altered by the WAT round-trip fails the hash.  Aggregation
     (not a row-per-page join) because the fixture intentionally holds
     recrawled duplicate urls."""
-    meta = dom_map(_pages_fixed_spread(spark), _wat_row,
+    meta = dom_map(_pages_fixed(spark, spread=True), _wat_row,
                    "title string, hrefs array<string>")
 
     def to_wat(iterator):
@@ -3810,14 +3742,10 @@ def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def _warc_gz_extract_pages(spark, sf_dir: str) -> DataFrame:
-    return _warc_extract_pages_impl(spark, gz=True)
-
-
 def _page_links(spark, sf_dir: str) -> DataFrame:
     """CSS-driven link extraction per page (a[href]); oracle-checked
     against the frozen in-process-engine output."""
-    pages = _pages_fixed_spread(spark).select("url", "html")
+    pages = _pages_fixed(spark, spread=True).select("url", "html")
     return dom_map(pages, _links_row, "n_links int, first_href string") \
         .select("url", "n_links", "first_href").orderBy("url")
 
@@ -3825,7 +3753,7 @@ def _page_links(spark, sf_dir: str) -> DataFrame:
 def _page_titles(spark, sf_dir: str) -> DataFrame:
     """XPath-driven title extraction per page (//title); oracle-checked
     against the frozen in-process-engine output."""
-    pages = _pages_fixed_spread(spark).select("url", "html")
+    pages = _pages_fixed(spark, spread=True).select("url", "html")
     return dom_map(pages, _title_row, "title string") \
         .select("url", "title").orderBy("url")
 
@@ -3848,7 +3776,8 @@ def _page_xpath_stats(spark, sf_dir: str) -> DataFrame:
     normalize-space(), axes, positional predicates, count().  Pinned to
     the fixed 500-page fixture so the frozen in-process-engine parquet
     (scripts/freeze_expected.py) is its oracle at every sf."""
-    return xpath_stats_over(_pages_fixed_spread(spark).select("url", "html"))
+    return xpath_stats_over(
+        _pages_fixed(spark, spread=True).select("url", "html"))
 
 
 def page_xpath_stats_scaled(spark, sf_dir: str) -> DataFrame:
@@ -3864,7 +3793,6 @@ def _near_dups_over(spark, pages) -> DataFrame:
     SQL, no second UDF).  Groups of pages whose extracted content
     collides on all four 3-shingle minhash signatures."""
     out = run_extract(spark, pages)
-    out.select("url", "main_text").createOrReplaceTempView("_extracted")
     # Shingles/signatures entirely in array expressions (the _mh_core_ctes
     # shape): map-side, zero explode, zero window.  The r2 version's
     # posexplode + lead() windows shuffled and sorted every TOKEN in the
@@ -3889,7 +3817,7 @@ def _near_dups_over(spark, pages) -> DataFrame:
     return spark.sql(f"""
         WITH toks AS (
           SELECT url, regexp_extract_all(main_text, '\\\\S+', 0) AS ws
-          FROM _extracted
+          FROM {{extracted}}
           WHERE {guard}
         ), sh AS (
           SELECT url,
@@ -3912,7 +3840,7 @@ def _near_dups_over(spark, pages) -> DataFrame:
         GROUP BY concat_ws('-', m1, m2, m3, m4)
         HAVING COUNT(*) > 1
         ORDER BY fullsig
-    """)
+    """, extracted=out.select("url", "main_text"))
 
 
 def _extract_near_dups(spark, sf_dir: str) -> DataFrame:
@@ -3959,10 +3887,8 @@ def _pdf_text_roundtrip(spark, sf_dir: str) -> DataFrame:
     page count and text md5 straight from the documents table and never
     sees a PDF byte — a writer/parser bug on the Spark side cannot
     cancel out."""
-    source = f"{sf_dir}/documents.parquet"
-    docs = _spread_view(
-        spark, tableio.read_table(spark, source), source
-    ).select("doc_id", "text")
+    docs = _scan(spark, f"{sf_dir}/documents.parquet", spread=True) \
+        .select("doc_id", "text")
 
     def roundtrip(iterator):
         import hashlib
@@ -4152,237 +4078,152 @@ ORDER BY doc_id
 """
 
 
-QUERIES: dict = {
-    # relational core (Catalyst-native)
-    "pricing_summary": _sql(_PRICING_SUMMARY_SPARK),
-    "top_revenue_orders": _sql(_TOP_REVENUE_SPARK),
-    "segment_totals": _sql(_SEGMENT_TOTALS_SPARK),
-    "shipping_priority": _sql(_shipping_priority_sql("spark")),
-    "local_supplier_volume": _sql(_local_supplier_volume_sql("spark")),
-    "top_orders_per_customer": _sql(_TOP_ORDERS_PER_CUSTOMER),
-    "latest_event_per_user": _sql(_LATEST_EVENT_PER_USER),
-    "event_type_stats": _sql(_EVENT_TYPE_STATS),
-    "events_windowed": _sql(_EVENTS_WINDOWED_SPARK),
-    "events_sessionize": _sql(_EVENTS_SESSIONIZE),
-    "events_funnel": _sql(_EVENTS_FUNNEL),
-    # training-data ops over documents
-    "docs_dedup_exact": _sql(_DOCS_DEDUP_EXACT),
-    "docs_token_stats": _sql(_DOCS_TOKEN_STATS_SPARK),
-    "docs_quality": _sql(_DOCS_QUALITY),
-    "docs_stopword_punct": _sql(_docs_stopword_punct_sql("spark")),
-    "docs_lang_stats": _sql(_DOCS_LANG_STATS),
-    "docs_langid": _sql(_DOCS_LANGID),
-    "url_normalize": _sql(_URL_NORMALIZE_SPARK),
-    "docs_fingerprint": _sql(_DOCS_FINGERPRINT_SPARK),
-    "docs_minhash_sigs": _sql(_DOCS_MINHASH_SPARK),
-    "docs_minhash_bands": _sql(_DOCS_MINHASH_BANDS_SPARK),
-    "docs_simhash": _sql(_DOCS_SIMHASH_SPARK),
-    "docs_simhash_pairs": _sql(_docs_simhash_pairs_sql("spark")),
-    "docs_near_dup_pairs": _sql(_DOCS_NEAR_DUP_PAIRS_SPARK),
-    "docs_jaccard_verify": _sql(_DOCS_JACCARD_VERIFY_SPARK),
-    "docs_dup_clusters": _docs_dup_clusters,
-    "docs_ngram_dup": _sql(_docs_ngram_dup_sql("spark")),
-    "docs_decontaminate": _sql(_docs_decontaminate_sql("spark")),
-    "docs_pmi_bigrams": _sql(_docs_pmi_bigrams_sql("spark")),
-    "docs_bloom_membership": _sql(_docs_bloom_sql("spark")),
-    "docs_unigram_logprob": _sql(_docs_unigram_logprob_sql("spark")),
-    "docs_shingle_hll": _sql(_docs_shingle_hll_sql("spark")),
-    "extract_line_dedup": _extract_line_dedup,
-    "extract_content_blocks": _extract_content_blocks,
-    "events_retention": _sql(_events_retention_sql("spark")),
-    "events_path_bigrams": _sql(_EVENTS_PATH_BIGRAMS),
-    "events_asof_tier": _events_asof_tier,
-    "events_range_join": _sql(_events_range_join_sql("spark")),
-    "docs_tfidf_topk": _sql(_docs_tfidf_sql("spark")),
-    "url_host_skew": _sql(_URL_HOST_SKEW),
-    "docs_pagerank": _docs_pagerank,
-    "emb_pq": _sql(_emb_pq_sql("spark")),
-    "ann_pq_topk": _sql(_emb_pq_sql("spark", topk=10)),
-    "docs_corpus_card": _sql(_DOCS_CORPUS_CARD),
-    "url_robots_gate": _url_robots_gate,
-    "sitemap_extract": _sitemap_extract,
-    "url_surt_keys": _sql(_url_surt_spark_sql()),
-    "docs_langid_confusion": _sql(_DOCS_LANGID_CONFUSION),
-    "text_nfc_normalize": _text_nfc_normalize,
-    "extract_selector_pages": _extract_selector_pages,
-    "docs_curation_verdict": _docs_curation_verdict,
-    "docs_length_quantiles": _sql(_DOCS_LENGTH_QUANTILES),
-    "extract_anchor_texts": _extract_anchor_texts,
-    "docs_dup_spans": _sql(_docs_dup_spans_sql("spark")),
-    "docs_quality_tiers": _sql(_docs_quality_tiers_sql("spark")),
-    "docs_token_cms": _sql(_docs_token_cms_sql("spark")),
-    "docs_shard_assign": _sql(_docs_shard_assign_sql("spark")),
-    "events_zorder_key": _sql(_events_zorder_sql("spark")),
-    "docs_bpe_token_stats": _sql(_DOCS_BPE_TOKENS),
-    "docs_repetition": _sql(_docs_repetition_sql("spark")),
-    "docs_sample_stratified": _sql(_docs_sample_sql("spark")),
-    "docs_winnow_fp": _sql(_docs_winnow_sql("spark")),
-    # similarity search over embeddings
-    "ann_cosine_topk": _sql(_ANN_TOPK_SPARK),
-    "emb_quantize": _sql(_emb_quantize_sql("spark")),
-    "ann_lsh_buckets": _ann_lsh_buckets,
-    "ann_lsh_topk": _ann_lsh_topk,
-    "ann_ivf_topk": lambda spark, sf_dir: _sql(
-        _ann_ivf_topk_sql("spark", _emb_rowcount(sf_dir))
-    )(spark, sf_dir),
-    "emb_near_dup_pairs": _emb_near_dup_pairs,
-    # HTML extraction pipeline (non-SQL-expressible -> rows-only checks)
-    "extract_pages": _extract_pages,
-    "warc_extract_pages": _warc_extract_pages,
-    "warc_gz_extract_pages": _warc_gz_extract_pages,
-    "wat_extract_meta": _wat_extract_meta,
-    "page_links": _page_links,
-    "page_titles": _page_titles,
-    "page_xpath_stats": _page_xpath_stats,
-    "extract_lang_stats": _extract_lang_stats,
-    "pdf_text_roundtrip": _pdf_text_roundtrip,
-    "extract_near_dups": _extract_near_dups,
-}
+# ------------------------------ registry ----------------------------------
+# One declaration per query: (name, Spark builder (spark, sf_dir) ->
+# DataFrame, DuckDB oracle text), in the driver's key order.
 
-ORACLES: dict = {
-    "pricing_summary": _PRICING_SUMMARY_SPARK,
-    "top_revenue_orders": _TOP_REVENUE_SPARK,
-    "segment_totals": _SEGMENT_TOTALS_SPARK.replace(
-        "/*+ BROADCAST(c) */ ", ""
-    ),
-    "shipping_priority": _shipping_priority_sql("duck"),
-    "local_supplier_volume": _local_supplier_volume_sql("duck"),
-    "top_orders_per_customer": _TOP_ORDERS_PER_CUSTOMER,
-    "latest_event_per_user": _LATEST_EVENT_PER_USER,
-    "event_type_stats": _EVENT_TYPE_STATS,
-    "events_windowed": _EVENTS_WINDOWED_DUCK,
-    "events_sessionize": _EVENTS_SESSIONIZE,
-    "events_funnel": _EVENTS_FUNNEL,
-    "docs_dedup_exact": _DOCS_DEDUP_EXACT,
-    "docs_token_stats": _DOCS_TOKEN_STATS_DUCK,
-    "docs_quality": _DOCS_QUALITY_DUCK,
-    "docs_stopword_punct": _docs_stopword_punct_sql("duck"),
-    "docs_lang_stats": _DOCS_LANG_STATS,
-    "docs_langid": _DOCS_LANGID,
-    "url_normalize": _URL_NORMALIZE_DUCK,
-    "docs_fingerprint": _DOCS_FINGERPRINT_DUCK,
-    "docs_minhash_sigs": _DOCS_MINHASH_DUCK,
-    "docs_minhash_bands": _DOCS_MINHASH_BANDS_DUCK,
-    "docs_simhash": _DOCS_SIMHASH_DUCK,
-    "docs_simhash_pairs": _docs_simhash_pairs_sql("duck"),
-    "docs_near_dup_pairs": _DOCS_NEAR_DUP_PAIRS_DUCK,
-    "docs_jaccard_verify": _DOCS_JACCARD_VERIFY_DUCK,
-    "docs_dup_clusters": _docs_dup_clusters_oracle(),
-    "docs_ngram_dup": _docs_ngram_dup_sql("duck"),
-    "docs_decontaminate": _docs_decontaminate_sql("duck"),
-    "docs_pmi_bigrams": _docs_pmi_bigrams_sql("duck"),
-    "docs_bloom_membership": _docs_bloom_sql("duck"),
-    "docs_unigram_logprob": _docs_unigram_logprob_sql("duck"),
-    "docs_shingle_hll": _docs_shingle_hll_sql("duck"),
-    "extract_line_dedup": _extract_line_dedup_oracle(),
-    "extract_content_blocks": _extract_content_blocks_oracle(),
-    "events_retention": _events_retention_sql("duck"),
-    "events_path_bigrams": _EVENTS_PATH_BIGRAMS,
-    "events_asof_tier": _events_asof_tier_oracle(),
-    "events_range_join": _events_range_join_oracle(),
-    "docs_tfidf_topk": _docs_tfidf_sql("duck"),
-    "url_host_skew": _URL_HOST_SKEW,
-    "docs_pagerank": _docs_pagerank_oracle(),
-    "emb_pq": _emb_pq_sql("duck"),
-    "ann_pq_topk": _emb_pq_sql("duck", topk=10),
-    "docs_corpus_card": _DOCS_CORPUS_CARD,
-    "url_robots_gate": _URL_ROBOTS_GATE_DUCK,
-    "sitemap_extract": _SITEMAP_EXTRACT_DUCK,
-    "url_surt_keys": _URL_SURT_DUCK,
-    "docs_langid_confusion": _DOCS_LANGID_CONFUSION,
-    "text_nfc_normalize": _text_nfc_normalize_oracle(),
-    "extract_selector_pages": _extract_selector_pages_oracle(),
-    "docs_curation_verdict": _docs_curation_verdict_oracle(),
-    "docs_length_quantiles": _DOCS_LENGTH_QUANTILES,
-    "extract_anchor_texts": _extract_anchor_texts_oracle(),
-    "docs_dup_spans": _docs_dup_spans_sql("duck"),
-    "docs_quality_tiers": _docs_quality_tiers_sql("duck"),
-    "docs_token_cms": _docs_token_cms_sql("duck"),
-    "docs_shard_assign": _docs_shard_assign_sql("duck"),
-    "events_zorder_key": _events_zorder_sql("duck"),
-    "docs_bpe_token_stats": _DOCS_BPE_TOKENS_DUCK,
-    "docs_repetition": _docs_repetition_sql("duck"),
-    "docs_sample_stratified": _docs_sample_sql("duck"),
-    "docs_winnow_fp": _docs_winnow_sql("duck"),
-    "ann_cosine_topk": _ANN_TOPK_DUCK,
-    "emb_quantize": _emb_quantize_sql("duck"),
-    "ann_lsh_buckets": _ann_lsh_buckets_oracle(),
-    "ann_lsh_topk": _ann_lsh_topk_oracle(),
+_EXTRACT_PAGES_ORACLE = (
+    "SELECT url, text_sha256, n_nodes, main_len, err"
+    f" FROM {_frozen('extract_pages')} ORDER BY url"
+)
+
+_REGISTRY = (
+    # relational core (Catalyst-native)
+    ("pricing_summary", _sql(_PRICING_SUMMARY_SPARK), _PRICING_SUMMARY_SPARK),
+    ("top_revenue_orders", _sql(_TOP_REVENUE_SPARK), _TOP_REVENUE_SPARK),
+    ("segment_totals", _sql(_SEGMENT_TOTALS_SPARK),
+     _SEGMENT_TOTALS_SPARK.replace("/*+ BROADCAST(c) */ ", "")),
+    ("shipping_priority", *_dual(_shipping_priority_sql)),
+    ("local_supplier_volume", *_dual(_local_supplier_volume_sql)),
+    ("top_orders_per_customer", _sql(_TOP_ORDERS_PER_CUSTOMER),
+     _TOP_ORDERS_PER_CUSTOMER),
+    ("latest_event_per_user", _sql(_LATEST_EVENT_PER_USER),
+     _LATEST_EVENT_PER_USER),
+    ("event_type_stats", _sql(_EVENT_TYPE_STATS), _EVENT_TYPE_STATS),
+    ("events_windowed", _sql(_EVENTS_WINDOWED_SPARK), _EVENTS_WINDOWED_DUCK),
+    ("events_sessionize", _sql(_EVENTS_SESSIONIZE), _EVENTS_SESSIONIZE),
+    ("events_funnel", _sql(_EVENTS_FUNNEL), _EVENTS_FUNNEL),
+    # training-data ops over documents
+    ("docs_dedup_exact", _sql(_DOCS_DEDUP_EXACT), _DOCS_DEDUP_EXACT),
+    ("docs_token_stats", _sql(_DOCS_TOKEN_STATS_SPARK),
+     _DOCS_TOKEN_STATS_DUCK),
+    ("docs_quality", _sql(_DOCS_QUALITY), _DOCS_QUALITY_DUCK),
+    ("docs_stopword_punct", *_dual(_docs_stopword_punct_sql)),
+    ("docs_lang_stats", _sql(_DOCS_LANG_STATS), _DOCS_LANG_STATS),
+    ("docs_langid", _sql(_DOCS_LANGID), _DOCS_LANGID),
+    ("url_normalize", _sql(_URL_NORMALIZE_SPARK), _URL_NORMALIZE_DUCK),
+    ("docs_fingerprint", _sql(_DOCS_FINGERPRINT_SPARK),
+     _DOCS_FINGERPRINT_DUCK),
+    ("docs_minhash_sigs", *_dual(_docs_minhash_sql)),
+    ("docs_minhash_bands", *_dual(_docs_minhash_bands_sql)),
+    ("docs_simhash", _sql(_simhash_sql(_WORDS_SRC_SPARK)),
+     _simhash_sql(_WORDS_SRC_DUCK)),
+    ("docs_simhash_pairs", *_dual(_docs_simhash_pairs_sql)),
+    ("docs_near_dup_pairs", *_dual(_docs_near_dup_pairs_sql)),
+    ("docs_jaccard_verify", *_dual(_docs_jaccard_verify_sql)),
+    ("docs_dup_clusters", _docs_dup_clusters, _docs_dup_clusters_oracle()),
+    ("docs_ngram_dup", *_dual(_docs_ngram_dup_sql)),
+    ("docs_decontaminate", *_dual(_docs_decontaminate_sql)),
+    ("docs_pmi_bigrams", *_dual(_docs_pmi_bigrams_sql)),
+    ("docs_bloom_membership", *_dual(_docs_bloom_sql)),
+    ("docs_unigram_logprob", *_dual(_docs_unigram_logprob_sql)),
+    ("docs_shingle_hll", *_dual(_docs_shingle_hll_sql)),
+    ("extract_line_dedup", _extract_line_dedup,
+     _line_dedup_sql("duck", "SELECT url, line_no, line FROM "
+                     + _frozen("extract_lines"))),
+    ("extract_content_blocks", _extract_content_blocks,
+     _CONTENT_BLOCKS_CLASSIFY.format(
+         src=f"SELECT * FROM {_frozen('extract_blocks')}")),
+    ("events_retention", *_dual(_events_retention_sql)),
+    ("events_path_bigrams", _sql(_EVENTS_PATH_BIGRAMS), _EVENTS_PATH_BIGRAMS),
+    ("events_asof_tier", _events_asof_tier, _events_asof_tier_oracle()),
+    ("events_range_join", _sql(_events_range_join_sql("spark")),
+     _events_range_join_oracle()),
+    ("docs_tfidf_topk", *_dual(_docs_tfidf_sql)),
+    ("url_host_skew", _sql(_URL_HOST_SKEW), _URL_HOST_SKEW),
+    ("docs_pagerank", _docs_pagerank, _docs_pagerank_oracle()),
+    ("emb_pq", *_dual(_emb_pq_sql)),
+    ("ann_pq_topk", *_dual(lambda d: _emb_pq_sql(d, topk=10))),
+    ("docs_corpus_card", _sql(_DOCS_CORPUS_CARD), _DOCS_CORPUS_CARD),
+    ("url_robots_gate", _url_robots_gate, _URL_ROBOTS_GATE_DUCK),
+    ("sitemap_extract", _sitemap_extract, _SITEMAP_EXTRACT_DUCK),
+    ("url_surt_keys", _sql(_url_surt_spark_sql()), _URL_SURT_DUCK),
+    ("docs_langid_confusion", _sql(_DOCS_LANGID_CONFUSION),
+     _DOCS_LANGID_CONFUSION),
+    ("text_nfc_normalize", _text_nfc_normalize,
+     _text_nfc_normalize_oracle()),
+    ("extract_selector_pages", _extract_selector_pages,
+     "SELECT url, sel_sha256, sel_len"
+     f" FROM {_frozen('extract_selector')} ORDER BY url"),
+    ("docs_curation_verdict", _docs_curation_verdict,
+     _docs_curation_verdict_oracle()),
+    ("docs_length_quantiles", _sql(_DOCS_LENGTH_QUANTILES),
+     _DOCS_LENGTH_QUANTILES),
+    ("extract_anchor_texts", _extract_anchor_texts,
+     _ANCHOR_AGG_SQL.format(src=_frozen("extract_anchors"))),
+    ("docs_dup_spans", *_dual(_docs_dup_spans_sql)),
+    ("docs_quality_tiers", *_dual(_docs_quality_tiers_sql)),
+    ("docs_token_cms", *_dual(_docs_token_cms_sql)),
+    ("docs_shard_assign", *_dual(_docs_shard_assign_sql)),
+    ("events_zorder_key", *_dual(_events_zorder_sql)),
+    ("docs_bpe_token_stats", _sql(_DOCS_BPE_TOKENS), _DOCS_BPE_TOKENS_DUCK),
+    ("docs_repetition", *_dual(_docs_repetition_sql)),
+    ("docs_sample_stratified", *_dual(_docs_sample_sql)),
+    ("docs_winnow_fp", *_dual(_docs_winnow_sql)),
+    # similarity search over embeddings
+    ("ann_cosine_topk", _sql(_ANN_TOPK_SPARK), _ANN_TOPK_DUCK),
+    ("emb_quantize", *_dual(_emb_quantize_sql)),
+    ("ann_lsh_buckets", _ann_lsh_buckets, _ann_lsh_buckets_oracle()),
+    ("ann_lsh_topk", _ann_lsh_topk, _ann_lsh_topk_oracle()),
     # The driver runs oracles at sf0.01 (contract); k is derived from
     # that table's rowcount so the oracle replays the same k=√N config
     # the Spark side derives from its sf_dir.
-    "ann_ivf_topk": _ann_ivf_topk_sql(
-        "duck", _emb_rowcount("/root/testdata/sf0.01")),
-    "emb_near_dup_pairs": _emb_near_dup_pairs_oracle(),
-    # The parser is not SQL-expressible, but its expected output IS
-    # checkable: these parquets were produced by the golden-verified
-    # in-process engine (scripts/freeze_expected.py), so the driver's
-    # three-way compare runs Spark-through-Arrow vs an independent path.
-    "page_links": (
-        "SELECT url, n_links, first_href FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'page_links_{_FIXED_PAGES_N}.parquet'}')"
-        " ORDER BY url"
-    ),
-    "page_titles": (
-        "SELECT url, title FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'page_titles_{_FIXED_PAGES_N}.parquet'}')"
-        " ORDER BY url"
-    ),
-    "page_xpath_stats": (
-        "SELECT url, title_norm, n_ref_links, first_nav_href,"
-        " n_nonempty_paras FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'page_xpath_stats_{_FIXED_PAGES_N}.parquet'}')"
-        " ORDER BY url"
-    ),
-    "extract_pages": (
-        "SELECT url, text_sha256, n_nodes, main_len, err"
-        " FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'extract_pages_{_FIXED_PAGES_N}.parquet'}')"
-        " ORDER BY url"
-    ),
-    # warc_extract_pages: the WARC round-trip must reproduce the
-    # byte-identical extraction, so it shares extract_pages' oracle.
-    "warc_extract_pages": (
-        "SELECT url, text_sha256, n_nodes, main_len, err"
-        " FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'extract_pages_{_FIXED_PAGES_N}.parquet'}')"
-        " ORDER BY url"
-    ),
-    # warc_gz_extract_pages: per-record gzip members must be lossless
-    # framing too — same frozen oracle again.
-    "warc_gz_extract_pages": (
-        "SELECT url, text_sha256, n_nodes, main_len, err"
-        " FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'extract_pages_{_FIXED_PAGES_N}.parquet'}')"
-        " ORDER BY url"
-    ),
-    # wat_extract_meta: the WAT JSON envelope round-trip must preserve
-    # every title and link, replayed from the frozen page_titles +
-    # page_links parquets (per-url aggregation: the fixture holds
-    # recrawled duplicate urls, so a row-per-page join would inflate).
-    "wat_extract_meta": (
-        "WITH t AS (SELECT url, CAST(COUNT(*) AS BIGINT) AS n_pages,"
-        " MIN(title) AS min_title FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'page_titles_{_FIXED_PAGES_N}.parquet'}')"
-        " GROUP BY url),"
-        " l AS (SELECT url, CAST(SUM(n_links) AS BIGINT) AS total_links,"
-        " MIN(first_href) AS min_first_href FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'page_links_{_FIXED_PAGES_N}.parquet'}')"
-        " GROUP BY url)"
-        " SELECT t.url, t.n_pages, t.min_title, l.total_links,"
-        " l.min_first_href FROM t JOIN l ON t.url = l.url"
-        " ORDER BY t.url"
-    ),
-    "pdf_text_roundtrip": _PDF_ROUNDTRIP_ORACLE,
-    "extract_lang_stats": (
-        "SELECT lang, n_pages, sum_text_bytes, sum_nodes"
-        " FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'extract_lang_stats_{_FIXED_PAGES_N}.parquet'}')"
-        " ORDER BY lang"
-    ),
-    "extract_near_dups": (
-        "SELECT fullsig, keep_url, n_pages FROM read_parquet('"
-        f"{_EXPECTED_DIR / f'extract_near_dups_{_FIXED_PAGES_N}.parquet'}')"
-        " ORDER BY fullsig"
-    ),
-}
+    ("ann_ivf_topk", _ann_ivf_topk,
+     _ann_ivf_topk_sql("duck", _emb_rowcount("/root/testdata/sf0.01"))),
+    ("emb_near_dup_pairs", _emb_near_dup_pairs,
+     _emb_near_dup_pairs_oracle()),
+    # HTML extraction over the fixed fixture.  The parser is not
+    # SQL-expressible, but its expected output IS checkable: the frozen
+    # parquets were produced by the golden-verified in-process engine
+    # (scripts/freeze_expected.py), so the driver's three-way compare
+    # runs Spark-through-Arrow vs an independent path.
+    ("extract_pages", _extract_pages, _EXTRACT_PAGES_ORACLE),
+    # The WARC round-trip, plain and with per-record gzip members, must
+    # reproduce the byte-identical extraction: extract_pages' oracle.
+    ("warc_extract_pages", _warc_extract_pages, _EXTRACT_PAGES_ORACLE),
+    ("warc_gz_extract_pages",
+     lambda spark, sf_dir: _warc_extract_pages(spark, sf_dir, gz=True),
+     _EXTRACT_PAGES_ORACLE),
+    # The WAT JSON envelope round-trip must preserve every title and
+    # link, replayed from the frozen page_titles + page_links parquets
+    # (per-url aggregation: the fixture holds recrawled duplicate urls,
+    # so a row-per-page join would inflate).
+    ("wat_extract_meta", _wat_extract_meta,
+     "WITH t AS (SELECT url, CAST(COUNT(*) AS BIGINT) AS n_pages,"
+     f" MIN(title) AS min_title FROM {_frozen('page_titles')}"
+     " GROUP BY url),"
+     " l AS (SELECT url, CAST(SUM(n_links) AS BIGINT) AS total_links,"
+     f" MIN(first_href) AS min_first_href FROM {_frozen('page_links')}"
+     " GROUP BY url)"
+     " SELECT t.url, t.n_pages, t.min_title, l.total_links,"
+     " l.min_first_href FROM t JOIN l ON t.url = l.url"
+     " ORDER BY t.url"),
+    ("page_links", _page_links,
+     f"SELECT url, n_links, first_href FROM {_frozen('page_links')}"
+     " ORDER BY url"),
+    ("page_titles", _page_titles,
+     f"SELECT url, title FROM {_frozen('page_titles')} ORDER BY url"),
+    ("page_xpath_stats", _page_xpath_stats,
+     "SELECT url, title_norm, n_ref_links, first_nav_href,"
+     f" n_nonempty_paras FROM {_frozen('page_xpath_stats')} ORDER BY url"),
+    ("extract_lang_stats", _extract_lang_stats,
+     "SELECT lang, n_pages, sum_text_bytes, sum_nodes"
+     f" FROM {_frozen('extract_lang_stats')} ORDER BY lang"),
+    ("pdf_text_roundtrip", _pdf_text_roundtrip, _PDF_ROUNDTRIP_ORACLE),
+    ("extract_near_dups", _extract_near_dups,
+     f"SELECT fullsig, keep_url, n_pages FROM {_frozen('extract_near_dups')}"
+     " ORDER BY fullsig"),
+)
+
+QUERIES: dict = {name: build for name, build, _ in _REGISTRY}
+ORACLES: dict = {name: oracle for name, _, oracle in _REGISTRY}

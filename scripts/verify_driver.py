@@ -3,8 +3,7 @@
 entry on Spark and its oracle_sql() on DuckDB over the same sf parquet,
 compare row count, column-name-sorted values, and Arrow types.
 
-Exit code 0 only if every query passes (rows-only queries must be
-deterministic across two runs and non-empty).
+Exit code 0 only if every query passes.
 """
 
 from __future__ import annotations
@@ -71,22 +70,16 @@ def main() -> None:
         try:
             sdf = fn(spark, SF)
             arrow = sdf.toArrow()
-            if name in oracles:
-                ora = con.execute(oracles[name]).arrow()
-                rows_ok = arrow.num_rows == ora.num_rows
-                schema_ok = (sorted(arrow.column_names)
-                             == sorted(ora.column_names))
-                vals_ok = canon(arrow) == canon(ora)
-                ok = rows_ok and schema_ok and vals_ok
-                results[name] = {
-                    "rows": arrow.num_rows, "oracle_rows": ora.num_rows,
-                    "rows_match": rows_ok, "schema_match": schema_ok,
-                    "hash_match": vals_ok}
-            else:
-                again = fn(spark, SF).toArrow()
-                ok = arrow.num_rows > 0 and canon(arrow) == canon(again)
-                results[name] = {"rows": arrow.num_rows,
-                                 "rows_only_deterministic": ok}
+            ora = con.execute(oracles[name]).arrow()
+            rows_ok = arrow.num_rows == ora.num_rows
+            schema_ok = (sorted(arrow.column_names)
+                         == sorted(ora.column_names))
+            vals_ok = canon(arrow) == canon(ora)
+            ok = rows_ok and schema_ok and vals_ok
+            results[name] = {
+                "rows": arrow.num_rows, "oracle_rows": ora.num_rows,
+                "rows_match": rows_ok, "schema_match": schema_ok,
+                "hash_match": vals_ok}
         except Exception as e:  # noqa: BLE001
             ok = False
             results[name] = {"err": f"{type(e).__name__}: {e}"[:300]}

@@ -61,13 +61,24 @@ def test_two_snapshot_ingest_matches_batch(spark, tmp_path):
     assert got_all.filter("doc_id = 999999 AND band_no = -1").count() == 1
     got = got_all.filter("band_no >= 0")
     corpus.createOrReplaceTempView("documents")
-    from crystal_html5_spark.sparkjob.queries import (
-        _mh_prefix,
-        invalidate_views,
-    )
-    invalidate_views(spark)  # we just shadowed the sf `documents` view
+    from crystal_html5_spark.sparkjob.queries import _mh_prefix
     want = spark.sql(_mh_prefix("spark", with_bands=True)
                      + " SELECT doc_id, band_no, band_key FROM bands")
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.collect()))
-    invalidate_views(spark)  # and leave no stale skip behind us
+
+
+def test_one_snapshot_of_the_whole_corpus(spark, tmp_path):
+    """The delta's content key sums one 56-bit int per doc, which a
+    BIGINT sum overflows past ~128 docs: the whole 500-doc corpus in
+    one ingest must still report exactly the batch pair set."""
+    corpus = spark.read.parquet(f"{SF}/documents.parquet") \
+        .select("doc_id", "text")
+    got = {(r.doc_a, r.doc_b, r.n_bands_agree)
+           for r in ingest(spark, corpus, str(tmp_path / "index"))
+           .collect()}
+    load_views(spark, SF)
+    batch = {(r.doc_a, r.doc_b, r.n_bands_agree)
+             for r in spark.sql(_docs_near_dup_pairs_sql("spark"))
+             .collect()}
+    assert got == batch

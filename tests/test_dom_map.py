@@ -102,7 +102,8 @@ _BAD_PAGE = b'<title>t\xff</title><a href="x\xff">y</a>'
     (Q._wat_row,
      pa.schema([("title", pa.string()), ("hrefs", pa.list_(pa.string()))]),
      "hrefs", ["x\ufffd"]),
-], ids=["links", "xpath_stats", "wat"])
+    (Q._title_row, TITLE, "title", "t\ufffd"),
+], ids=["links", "xpath_stats", "wat", "titles"])
 def test_undecodable_byte_becomes_replacement_char(extract, schema, column,
                                                     bad):
     """An undecodable input byte reaches the extractor as a lone

@@ -47,4 +47,5 @@ def test_oracle_texts_are_byte_identical(surface):
     assert {k: _sha(v) for k, v in oracles.items()} == \
         surface["oracle_sha256"]
     assert list(oracles) == list(surface["oracle_sha256"])
+    assert list(entrymod.oracle_sql()) == list(entrymod.queries())
     assert _sha(json.dumps(oracles)) == surface["oracles_sha256"]

@@ -100,18 +100,6 @@ def test_query_matches_oracle(name, spark, duck):
         )
 
 
-ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_deterministic(name, spark):
-    q = entrymod.queries()[name]
-    a = [tuple(r) for r in q(spark, SF_DIR).collect()]
-    b = [tuple(r) for r in q(spark, SF_DIR).collect()]
-    assert len(a) > 0
-    assert a == b, f"{name} not deterministic"
-
-
 def test_ann_plans_scale_safe(spark):
     """The round-1 scale-killers stay dead: top-k is TakeOrderedAndProject
     (distributed per-partition top-k), the LSH candidate prune is a
@@ -210,15 +198,18 @@ def test_ngram_dup_plan_hashes_before_shuffle(spark):
 
 
 def test_new_doc_ops_plans_are_jvm_only(spark):
-    """unigram-LM scoring and the HLL sketch stay in JVM built-ins."""
+    """unigram-LM scoring, the HLL sketch and the LSH bucket (one
+    built-in expression, no Arrow UDF) stay in JVM built-ins."""
     from crystal_html5_spark.sparkjob.queries import QUERIES
 
-    for name in ("docs_unigram_logprob", "docs_shingle_hll"):
+    for name in ("docs_unigram_logprob", "docs_shingle_hll",
+                 "ann_lsh_buckets", "ann_lsh_topk", "emb_near_dup_pairs"):
         plan = QUERIES[name](spark, SF_DIR)._jdf.queryExecution() \
             .executedPlan().toString()
-        assert "BatchEvalPython" not in plan
-        assert "ArrowEvalPython" not in plan
-        assert "PythonUDF" not in plan
+        assert "BatchEvalPython" not in plan, name
+        assert "ArrowEvalPython" not in plan, name
+        assert "PythonUDF" not in plan, name
+        assert "MapInArrow" not in plan, name
 
 
 def test_ann_pq_recall_vs_exact_l2(spark):
