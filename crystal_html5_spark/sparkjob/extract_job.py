@@ -14,8 +14,9 @@ one error row, and ``url``/``warc_ts`` ride along by an Arrow take.
                                            tokenizer+tree+extract per doc
       -> sink (parquet) + per-partition metrics table
 
-Resume (``done_keys``) dedups with a window on url and anti-joins the
-exact (url, warc_ts) keys before the repartition.
+Resume (``done_keys``) first drops every capture whose url already has
+an at-least-as-new capture at the sink (one anti-join on url), then
+runs the same plan.
 
 Scale notes (100 TB / 1000 executors):
 - ONE shuffle on the hot path: the salted key is a pure function of url,
@@ -31,7 +32,7 @@ from __future__ import annotations
 import time
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
@@ -44,6 +45,8 @@ TEXT_SCHEMA_DDL = "text binary, main_text string, n_nodes int"
 
 DEFAULT_MAX_DOC_BYTES = 64 * 1024 * 1024
 _TARGET_OUT_BATCH_BYTES = 32 * 1024 * 1024
+# Before the first row no url has been seen; None is a url value (null).
+_NO_URL = object()
 
 
 def text_rows(doc) -> list[tuple]:
@@ -93,7 +96,7 @@ def dom_batches(batches, extract, schema, *, latest: bool = False,
     ``_TARGET_OUT_BATCH_BYTES``."""
     null_row = (None,) * len(schema)
     names = list(schema.names) + ["html_bytes", "err", "parse_ms"]
-    last_url = None
+    last_url = _NO_URL
 
     def assemble(batch, keys, recs):
         src, rows, sizes, errs, ms = zip(*recs)
@@ -162,16 +165,6 @@ def dom_map(frame: DataFrame, extract, schema: str, *, latest: bool = False,
     return frame.mapInArrow(body, f"{key_ddl}, {schema}, {DOC_COLUMNS_DDL}")
 
 
-def dedup_latest_capture(pages: DataFrame) -> DataFrame:
-    """Keep the latest (url, warc_ts) capture per url."""
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (
-        pages.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def salted_repartition(df: DataFrame, num_partitions: int,
                        salt: int | None = None) -> DataFrame:
     """Repartition on host + url-hash salt: keeps per-host grouping for
@@ -198,35 +191,29 @@ def run_extract(
     num_partitions: int | None = None,
     salt: int | None = None,
     max_doc_bytes: int = DEFAULT_MAX_DOC_BYTES,
-    dedup: bool = True,
     done_keys: DataFrame | None = None,
 ) -> DataFrame:
-    """Full pipeline: prune -> [resume-filter ->] dedup -> salt -> extract.
+    """Full pipeline: prune -> [resume filter ->] ``dom_map(latest=True)``,
+    ONE shuffle of the pages on the fresh path.
 
-    Hot path (no resume): ``dom_map(latest=True)``, ONE shuffle.  The
-    resume path (done_keys) keeps the explicit window dedup so the
-    anti-join can run on exact (url, warc_ts) keys after it.
+    Resume (``done_keys``, the (url, warc_ts) keys already at the sink)
+    drops every capture whose url has a done capture at least as new, so
+    what is left of a url is newer than anything done and an older
+    capture of a finished url cannot resurface.  No broadcast hint:
+    done_keys grows without bound as extraction progresses, so the join
+    strategy is left to AQE (broadcast while the done set is small,
+    shuffle after).
     """
     cols = pages.select("url", "warc_ts", "html")
-    if dedup and done_keys is None:
-        return dom_map(cols, text_rows, TEXT_SCHEMA_DDL, latest=True,
-                       num_partitions=num_partitions, salt=salt,
-                       max_doc_bytes=max_doc_bytes)
-    if dedup:
-        cols = dedup_latest_capture(cols)
     if done_keys is not None:
-        # Resume: drop already-extracted (url, warc_ts) pairs.  Runs after
-        # dedup so an older capture of a finished url cannot resurface.
-        # No broadcast hint: done_keys grows without bound as extraction
-        # progresses, so the join strategy is left to AQE (which picks
-        # broadcast while the done set is small and shuffle after).
+        done = done_keys.groupBy(F.col("url").alias("done_url")).agg(
+            F.max("warc_ts").alias("done_ts"))
         cols = cols.join(
-            done_keys.select("url", "warc_ts").distinct(),
-            ["url", "warc_ts"], "left_anti",
-        )
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    return dom_map(salted_repartition(cols, n, salt), text_rows,
-                   TEXT_SCHEMA_DDL, max_doc_bytes=max_doc_bytes)
+            done, (F.col("url") == F.col("done_url"))
+            & (F.col("done_ts") >= F.col("warc_ts")), "left_anti")
+    return dom_map(cols, text_rows, TEXT_SCHEMA_DDL, latest=True,
+                   num_partitions=num_partitions, salt=salt,
+                   max_doc_bytes=max_doc_bytes)
 
 
 def partition_metrics(extracted: DataFrame) -> DataFrame:
@@ -263,10 +250,3 @@ def write_with_lineage(extracted: DataFrame, out_dir: str) -> None:
     spark = extracted.sparkSession
     tableio.write_extracted(spark, extracted, out_dir)
     tableio.write_metrics(partition_metrics(extracted), out_dir)
-
-
-def read_done_keys(spark, out_dir: str) -> DataFrame | None:
-    """High-water-mark for resume: keys already extracted (io seam)."""
-    from crystal_html5_spark.sparkjob import io as tableio
-
-    return tableio.read_done_keys(spark, out_dir)

@@ -10,9 +10,11 @@ storage backend at runtime instead of hard-coding one:
 - **Otherwise (parquet path)**: reads via ``spark.read.parquet``, sink
   anti-joins the incoming batch against the keys already present before
   appending, so re-running a failed/duplicate batch cannot write
-  duplicate rows.  Same contract, weaker isolation (no snapshot commit),
-  which is exactly what the resume anti-join in
-  ``extract_job.run_extract(done_keys=...)`` covers.
+  duplicate rows.  Same contract, weaker isolation (no snapshot commit).
+
+On both backends ``read_done_keys`` feeds a resumed
+``extract_job.run_extract(done_keys=...)``, which parses only the
+captures newer than every capture the sink holds for their url.
 
 Every production read (pages scan, relational views, embeddings) and the
 extraction sink route through these functions: pointing the pipeline at
@@ -155,6 +157,17 @@ def write_extracted(spark, extracted: DataFrame, dest: str) -> None:
     extracted.write.mode("append").parquet(f"{dest}/extracted")
 
 
+def _latest_capture_sql(columns) -> str:
+    """compact_latest's one row selection, over the relation ``{t}``
+    with ``columns``: the latest capture per url, then the latest
+    batch_ts (legacy tables may lack it)."""
+    order = "warc_ts DESC" + (", batch_ts DESC"
+                              if "batch_ts" in columns else "")
+    return ("SELECT * EXCEPT (_rn) FROM (SELECT t.*, ROW_NUMBER() OVER ("
+            f"PARTITION BY url ORDER BY {order}) AS _rn FROM {{t}} t)"
+            " WHERE _rn = 1")
+
+
 def compact_latest(spark, dest: str) -> int:
     """Offline compaction: rewrite the extracted table keeping only the
     LATEST capture per url (the read-time contract the streaming sink
@@ -175,20 +188,10 @@ def compact_latest(spark, dest: str) -> int:
     import os
     import shutil
 
-    from pyspark.sql import Window
-
     if use_catalog(spark, dest):
-        # batch_ts is stamped by write_extracted, but tolerate legacy
-        # tables without it (the parquet branch's guard, mirrored).
-        cols = spark.read.table(dest).columns
-        order = "warc_ts DESC" + (", batch_ts DESC"
-                                  if "batch_ts" in cols else "")
-        spark.sql(
-            f"CREATE OR REPLACE TABLE {dest} AS "
-            f"SELECT * EXCEPT (_rn) FROM (SELECT t.*, ROW_NUMBER() OVER ("
-            f"PARTITION BY url ORDER BY {order}) AS _rn"
-            f" FROM {dest} t) WHERE _rn = 1"
-        )
+        select = _latest_capture_sql(spark.read.table(dest).columns)
+        spark.sql(f"CREATE OR REPLACE TABLE {dest} AS "
+                  + select.format(t=dest))
         return spark.read.table(dest).count()
 
     if "://" in dest:
@@ -200,12 +203,7 @@ def compact_latest(spark, dest: str) -> int:
     if not os.path.exists(src) and os.path.exists(old):
         os.rename(old, src)  # heal a crash between a prior run's renames
     df = spark.read.parquet(src)
-    order = [F.desc("warc_ts")]
-    if "batch_ts" in df.columns:
-        order.append(F.desc("batch_ts"))
-    w = Window.partitionBy("url").orderBy(*order)
-    latest = (df.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") == 1).drop("_rn"))
+    latest = spark.sql(_latest_capture_sql(df.columns), t=df)
     tmp = f"{dest}/extracted.compact.tmp"
     latest.write.mode("overwrite").parquet(tmp)
     kept = spark.read.parquet(tmp).count()

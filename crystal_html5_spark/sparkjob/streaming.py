@@ -5,8 +5,9 @@ captures -> watermarked duplicate-capture drop -> the same Arrow-vectorized
 extract UDF -> parquet sink with checkpointed exactly-once progress (the
 streaming counterpart of the batch job's anti-join resume).
 
-The latest-capture-wins window of the batch job is not expressible in a
-stream (it would need unbounded state); the streaming contract is instead
+The batch job's latest-capture rule (every capture of a url sorted
+together, newest parsed) is not expressible in a stream (it would need
+unbounded state); the streaming contract is instead
 exactly-once per (url, warc_ts) capture within the watermark, with
 downstream compaction picking the latest capture at read time.
 """

@@ -57,7 +57,6 @@ def main() -> None:
 
     from crystal_html5_spark.sparkjob import io as tableio
     from crystal_html5_spark.sparkjob.extract_job import (
-        read_done_keys,
         run_extract,
         write_with_lineage,
     )
@@ -68,7 +67,7 @@ def main() -> None:
         pages = read_warc_pages(spark, args.pages)
     else:
         pages = tableio.read_pages(spark, args.pages)
-    done = read_done_keys(spark, args.out) if args.resume else None
+    done = tableio.read_done_keys(spark, args.out) if args.resume else None
     out = run_extract(
         spark, pages, num_partitions=args.partitions, salt=args.salt,
         done_keys=done,

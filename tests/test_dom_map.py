@@ -136,6 +136,20 @@ def test_latest_keeps_newest_capture_across_batch_boundary():
     assert out[1]["warc_ts"] == newer
 
 
+def test_latest_keeps_the_newest_null_url_capture():
+    """A null url is a url like any other: the partition sort puts its
+    captures first, and the newest of them is parsed, not skipped."""
+    t = dt.datetime(2024, 1, 1)
+    batch = _batch([None, None, "a"],
+                   [b"<title>n2</title>", b"<title>n1</title>",
+                    b"<title>a1</title>"],
+                   [t + dt.timedelta(days=1), t, t])
+    out = _rows(dom_batches(iter([batch]), Q._title_row, TITLE,
+                            latest=True))
+    assert [(r["url"], r["title"]) for r in out] == [
+        (None, "n2"), ("a", "a1")]
+
+
 def test_graded_fixture_has_no_error_rows():
     """Every page of the 500-page query fixture parses, and no query
     extractor raises on it, so the unified error policy cannot move a

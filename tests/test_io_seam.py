@@ -200,6 +200,46 @@ def test_compact_latest_keeps_only_latest_capture(spark, tmp_path):
     assert spark.read.parquet(f"{dest}/extracted").count() == 2
 
 
+def test_compact_latest_one_selection_on_both_backends(spark, tmp_path,
+                                                      monkeypatch):
+    """The parquet branch selects the kept rows with one SQL text over
+    its frame; the Iceberg branch, which cannot run here, must issue one
+    CREATE OR REPLACE TABLE ... AS that embeds that same text."""
+    import datetime as dt
+
+    dest = str(tmp_path / "tbl")
+    b = spark.createDataFrame([("u1", dt.datetime(2024, 1, 1), b"a")],
+                              "url string, warc_ts timestamp, text binary")
+    tableio.write_extracted(spark, b, dest)
+    columns = spark.read.parquet(f"{dest}/extracted").columns
+    ran = []
+    real_sql = spark.sql
+
+    def spy(text, *args, **kwargs):
+        ran.append(text)
+        return real_sql(text, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", spy)
+    assert tableio.compact_latest(spark, dest) == 1
+    (select,) = ran
+    assert "ROW_NUMBER() OVER (PARTITION BY url ORDER BY warc_ts DESC," \
+        " batch_ts DESC)" in select
+
+    class _Table:
+        def __init__(self):
+            self.columns = columns
+
+        def count(self):
+            return 1
+
+    monkeypatch.setattr(tableio, "iceberg_available", lambda _s: True)
+    rec = _Recorder()
+    monkeypatch.setattr(rec.read, "table", lambda _name: _Table())
+    assert tableio.compact_latest(rec, "cat.db.extracted") == 1
+    assert rec.calls == [("sql", "CREATE OR REPLACE TABLE cat.db.extracted"
+                          " AS " + select.format(t="cat.db.extracted"))]
+
+
 def test_compact_latest_heals_interrupted_swap(spark, tmp_path):
     """A crash between the two renames (live dir moved aside, new one
     not yet in place) is healed on the next call; remote-looking dests

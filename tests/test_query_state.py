@@ -4,6 +4,8 @@ holds only the ten sf TABLES views; and ``load_views`` re-registers
 those on every call, so a view a caller registered under one of their
 names never reaches a query."""
 
+import os
+
 import duckdb
 import pytest
 
@@ -18,6 +20,7 @@ from crystal_html5_spark.sparkjob.queries import (  # noqa: E402
 from crystal_html5_spark.sparkjob.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+SF_LARGER = os.path.join(os.path.dirname(SF), "sf0.01")
 
 
 @pytest.fixture(scope="module")
@@ -39,6 +42,26 @@ def test_queries_leave_only_the_table_views(spark, tmp_path):
     ingest(spark, docs, str(tmp_path / "index")).count()
     names = {t.name for t in spark.catalog.listTables()}
     assert names <= set(TABLES), sorted(names - set(TABLES))
+
+
+def _oracle(name, sf):
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM"
+                f" read_parquet('{sf}/documents.parquet')")
+    return sorted(con.execute(entrymod.oracle_sql()[name]).fetchall())
+
+
+def test_two_sessions_interleaved(spark):
+    """Frames built on two sessions at two scale factors, all four built
+    before any is collected, each equal their own oracle."""
+    other = spark.newSession()
+    names = ("docs_dedup_exact", "extract_anchor_texts")
+    frames = [(name, sf, entrymod.queries()[name](session, sf))
+              for session, sf in ((spark, SF), (other, SF_LARGER))
+              for name in names]
+    for name, sf, frame in frames:
+        assert sorted(map(tuple, frame.collect())) == _oracle(name, sf), \
+            (name, sf)
 
 
 def test_a_foreign_documents_view_never_reaches_a_query(spark):

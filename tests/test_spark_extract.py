@@ -2,15 +2,17 @@
 text to the pure-Python core, independent of partitioning; dedup, error-row
 policy and resume are exercised too."""
 
+import datetime as dt
+
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
 
+from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from crystal_html5_spark.html5x.extract import extract_document  # noqa: E402
 from crystal_html5_spark.sparkjob.extract_job import (  # noqa: E402
-    dedup_latest_capture,
     partition_metrics,
     run_extract,
 )
@@ -63,17 +65,17 @@ def test_partition_invariance(spark, pages):
 
 
 def test_dedup_latest(spark, pages):
-    deduped = dedup_latest_capture(pages)
-    counts = deduped.groupBy("url").count().filter("count > 1").count()
-    assert counts == 0
-    # the latest capture (the recrawl) must win
-    recrawled = (
-        pages.groupBy("url").count().filter("count > 1").select("url")
-    )
-    joined = deduped.join(recrawled, "url").select("html").collect()
-    assert joined and all(
-        bytes(r["html"]).endswith(b"<!-- recrawl -->") for r in joined
-    )
+    """One row per url, its latest capture (the recrawl), on a fresh run
+    and on a resumed one whose done set holds every older capture."""
+    newest = pages.groupBy("url").agg(F.max("warc_ts").alias("warc_ts"))
+    older = pages.join(newest, ["url", "warc_ts"], "left_anti") \
+        .select("url", "warc_ts")
+    assert older.count() > 0  # the fixture has recrawls
+    want = sorted(map(tuple, newest.collect()))
+    for done in (None, older):
+        out = run_extract(spark, pages, num_partitions=4, done_keys=done)
+        assert sorted(map(tuple, out.select("url", "warc_ts").collect())) \
+            == want
 
 
 def test_oversize_error_rows(spark, pages):
@@ -90,6 +92,69 @@ def test_resume_anti_join(spark, pages):
     done = full.limit(50).select("url", "warc_ts")
     rest = run_extract(spark, pages, num_partitions=4, done_keys=done)
     assert rest.count() == full.count() - 50
+
+
+def _keys(df):
+    return sorted(map(tuple, df.select("url", "warc_ts").collect()))
+
+
+def _window_resume(pages, done):
+    """The resume rule kept as the reference: the latest capture per url
+    by a window, then an anti-join on the exact (url, warc_ts) keys."""
+    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
+    latest = pages.withColumn("_rn", F.row_number().over(w)) \
+        .filter("_rn = 1").drop("_rn")
+    return latest.join(done.distinct(), ["url", "warc_ts"], "left_anti")
+
+
+@pytest.mark.parametrize("shape", ["prefix", "every_other", "latest_only",
+                                   "older_only"])
+def test_resume_matches_the_window_rule(spark, pages, shape):
+    """Where every done key is a capture of the input, the url anti-join
+    against the newest done capture keeps what the window rule kept."""
+    keys = _keys(pages)
+    newest = dict(keys)  # keys are sorted, so each url's newest ts wins
+    picked = {
+        "prefix": keys[:len(keys) // 3],
+        "every_other": keys[::2],
+        "latest_only": sorted(newest.items()),
+        "older_only": [k for k in keys if newest[k[0]] != k[1]],
+    }[shape]
+    assert picked
+    done = spark.createDataFrame(picked, "url string, warc_ts timestamp")
+    got = run_extract(spark, pages, num_partitions=4, done_keys=done)
+    assert _keys(got) == _keys(_window_resume(pages, done))
+
+
+def test_resume_never_parses_a_capture_older_than_the_sink(spark):
+    """A sink that already holds a newer capture of a url than any in the
+    input keeps its row: the stale captures yield nothing."""
+    t1, t2, t3 = (dt.datetime(2024, 1, d) for d in (1, 2, 3))
+    pages = spark.createDataFrame(
+        [("u", t1, b"<p>one"), ("u", t2, b"<p>two"), ("v", t1, b"<p>v")],
+        "url string, warc_ts timestamp, html binary")
+    done = spark.createDataFrame([("u", t3)], "url string, warc_ts timestamp")
+    got = run_extract(spark, pages, num_partitions=4, done_keys=done)
+    assert _keys(got) == [("v", t1)]
+
+
+def test_null_url_capture_is_extracted(spark):
+    pages = spark.createDataFrame(
+        [(None, dt.datetime(2024, 1, 1), b"<p>orphan")],
+        "url string, warc_ts timestamp, html binary")
+    got = run_extract(spark, pages, num_partitions=4).collect()
+    assert [(r["url"], r["main_text"]) for r in got] == [(None, "orphan")]
+
+
+def test_fresh_and_resumed_plans_share_one_dom_map(spark, pages):
+    """Resume adds a join in front of the fresh plan, not a second
+    latest-capture mechanism: one MapInArrow, no window, either way."""
+    done = pages.limit(50).select("url", "warc_ts")
+    for df in (run_extract(spark, pages, num_partitions=4),
+               run_extract(spark, pages, num_partitions=4, done_keys=done)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, plan
+        assert "Window" not in plan, plan
 
 
 def test_partition_metrics(spark, pages):

@@ -253,7 +253,11 @@ def test_stream_warc_segments_and_resume(spark, tmp_path_factory):
 
     from pyspark.sql import functions as F
 
-    from crystal_html5_spark.sparkjob.extract_job import run_extract
+    from crystal_html5_spark.sparkjob.extract_job import (
+        TEXT_SCHEMA_DDL,
+        dom_map,
+        text_rows,
+    )
     from crystal_html5_spark.sparkjob.pages import synth_rows
     from crystal_html5_spark.sparkjob.streaming import start_stream
     from crystal_html5_spark.sparkjob.warcio import write_warc
@@ -288,8 +292,8 @@ def test_stream_warc_segments_and_resume(spark, tmp_path_factory):
         [(u, t, h, "", "") for u, t, h in rows],
         "url string, warc_ts timestamp, html binary, text string,"
         " lang string")
-    batch = run_extract(spark, pages, num_partitions=4, dedup=False) \
-        .dropDuplicates(["url", "warc_ts"])
+    batch = dom_map(pages.dropDuplicates(["url", "warc_ts"]), text_rows,
+                    TEXT_SCHEMA_DDL)
     b = {(r["url"], r["warc_ts"]): bytes(r["text"])
          for r in batch.collect()}
     s = {(r["url"], r["warc_ts"]): bytes(r["text"])
