@@ -230,17 +230,6 @@ def partition_metrics(extracted: DataFrame) -> DataFrame:
     )
 
 
-def top_error_pages(extracted: DataFrame, k: int = 20) -> DataFrame:
-    """Fixture/error triage report: the k worst pages by error presence
-    and size (SURVEY.md §2.8 'fixture top-k error report')."""
-    return (
-        extracted.filter(F.col("err") != "")
-        .select("url", "warc_ts", "err", "html_bytes")
-        .orderBy(F.desc("html_bytes"), "url")
-        .limit(k)
-    )
-
-
 def write_with_lineage(extracted: DataFrame, out_dir: str) -> None:
     """Idempotent sink: extracted rows + metrics side table, through the
     io seam (Iceberg MERGE INTO keyed on (url, warc_ts) when the runtime

@@ -135,7 +135,7 @@ def write_extracted(spark, extracted: DataFrame, dest: str) -> None:
     spark = getattr(extracted, "sparkSession", None) or spark
     if "batch_ts" not in extracted.columns:
         # Stamped HERE, in the seam, so every writer of a dest (batch
-        # job, idempotent streaming sink) produces the same schema —
+        # job, streaming micro-batches) produces the same schema —
         # mixed-schema parquet under one directory reads back
         # non-deterministically, and an Iceberg MERGE INSERT * fails
         # outright on a column-count mismatch.

@@ -291,10 +291,9 @@ ORDER BY event_type
 """
 
 
-# Tumbling-window event aggregation — the batch counterpart of
-# streaming.windowed_event_counts (same 10-minute windows; watermarking
-# is meaningless on a bounded table).  Sums are integer-cent quantized
-# like event_type_stats so the cross-engine hash cannot hinge on float
+# Tumbling-window event aggregation over 10-minute windows (a bounded
+# table needs no watermark).  Sums are integer-cent quantized like
+# event_type_stats so the cross-engine hash cannot hinge on float
 # summation order.  DuckDB buckets with time_bucket (epoch-aligned for
 # 10-minute intervals, same boundaries as Spark's window()).
 _EVENTS_WINDOWED_SPARK = """
@@ -320,8 +319,7 @@ ORDER BY 1, 2
 
 # ------------------------ training-data ops ------------------------------
 
-# Gaps-and-islands sessionization (30-min inactivity gap) — the batch
-# counterpart of the streaming applyInPandasWithState operator.
+# Gaps-and-islands sessionization (30-min inactivity gap).
 _EVENTS_SESSIONIZE = """
 WITH marked AS (
   SELECT user_id, ts, event_id,
@@ -528,8 +526,7 @@ def _mh_perm_consts() -> list[tuple[int, int]]:
             for _ in range(_MH_PERMS)]
 
 
-def _mh_core_ctes(dialect: str, min_tokens: int = 3,
-                  docs: str = "documents") -> str:
+def _mh_core_ctes(dialect: str, min_tokens: int = 3) -> str:
     """toks/sh/hq/sigs CTEs, entirely in array functions: tokenize, build
     3-shingles by index, md5 once per shingle, decode the 8-hex prefix to
     a BIGINT, take 64 permutation minima per document.
@@ -543,8 +540,7 @@ def _mh_core_ctes(dialect: str, min_tokens: int = 3,
     toks level: a WHERE on a later derived array column gets
     filter-pushed by substituting the whole lambda chain into an
     interpreted per-row predicate — measured 20x slower than filtering
-    on the plain regexp (round-2 lesson).  ``docs`` names the
-    (doc_id, text) relation the toks CTE reads."""
+    on the plain regexp (round-2 lesson)."""
     if dialect == "spark":
         toks_arr = "regexp_extract_all(text, '\\\\S+', 0)"
         shingles = ("transform(sequence(0, size(ws) - 3), i -> "
@@ -577,7 +573,7 @@ def _mh_core_ctes(dialect: str, min_tokens: int = 3,
         for k, (a, b) in enumerate(_mh_perm_consts())
     )
     return f"""
-toks AS (SELECT doc_id, {toks_arr} AS ws FROM {docs} WHERE {guard}),
+toks AS (SELECT doc_id, {toks_arr} AS ws FROM documents WHERE {guard}),
 sh AS (SELECT doc_id, {shingles} AS shingles FROM toks),
 hq AS (
   SELECT doc_id, shingles,
@@ -617,9 +613,8 @@ bands AS (
 )"""
 
 
-def _mh_prefix(dialect: str, with_bands: bool, min_tokens: int = 3,
-               docs: str = "documents") -> str:
-    out = f"WITH {_mh_core_ctes(dialect, min_tokens, docs)}"
+def _mh_prefix(dialect: str, with_bands: bool, min_tokens: int = 3) -> str:
+    out = f"WITH {_mh_core_ctes(dialect, min_tokens)}"
     if with_bands:
         out += f", {_mh_bands_cte(dialect)}"
     return out

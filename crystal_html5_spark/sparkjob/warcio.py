@@ -500,9 +500,7 @@ def read_wet_text(spark, wet_dir: str, on_error: str = "salvage"):
         "url string, warc_ts timestamp, text binary")
 
 
-def stream_warc_pages(spark, warc_dir: str,
-                      max_files_per_trigger: int | None = None,
-                      on_error: str = "salvage"):
+def stream_warc_pages(spark, warc_dir: str, on_error: str = "salvage"):
     """Streaming WARC source: the continuous-crawl ingest shape —
     .warc(.gz) segments arriving in a directory become a file-source
     stream (one input row per segment, checkpoint tracks which segments
@@ -511,13 +509,11 @@ def stream_warc_pages(spark, warc_dir: str,
     must not kill the long-running ingest query."""
     # binaryFile's schema is fixed by the source but streaming reads
     # must state it explicitly.
-    reader = spark.readStream.format("binaryFile") \
+    files = spark.readStream.format("binaryFile") \
         .schema("path string, modificationTime timestamp,"
                 " length long, content binary") \
-        .option("pathGlobFilter", "*.{warc,warc.gz}")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(warc_dir).select("content")
+        .option("pathGlobFilter", "*.{warc,warc.gz}") \
+        .load(warc_dir).select("content")
     return files.mapInArrow(
         _record_batches(parse_warc, "html", on_error), PAGES_DDL)
 

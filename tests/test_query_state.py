@@ -12,7 +12,6 @@ import pytest
 pytest.importorskip("pyspark")
 
 import __spark_entry__ as entrymod  # noqa: E402
-from crystal_html5_spark.sparkjob.dedup_index import ingest  # noqa: E402
 from crystal_html5_spark.sparkjob.queries import (  # noqa: E402
     TABLES,
     load_views,
@@ -31,15 +30,12 @@ def spark():
     s.stop()
 
 
-def test_queries_leave_only_the_table_views(spark, tmp_path):
+def test_queries_leave_only_the_table_views(spark):
     q = entrymod.queries()
     for name in ("extract_line_dedup", "extract_anchor_texts",
                  "docs_curation_verdict", "extract_content_blocks",
                  "emb_near_dup_pairs", "extract_near_dups"):
         q[name](spark, SF).count()
-    docs = spark.read.parquet(f"{SF}/documents.parquet") \
-        .select("doc_id", "text")
-    ingest(spark, docs, str(tmp_path / "index")).count()
     names = {t.name for t in spark.catalog.listTables()}
     assert names <= set(TABLES), sorted(names - set(TABLES))
 

@@ -163,12 +163,3 @@ def test_partition_metrics(spark, pages):
     assert sum(r["n_docs"] for r in m) == out.count()
     assert all(r["sum_html_bytes"] >= 0 for r in m)
 
-
-def test_top_error_pages(spark, pages):
-    from crystal_html5_spark.sparkjob.extract_job import top_error_pages
-
-    out = run_extract(spark, pages, num_partitions=4,
-                      max_doc_bytes=100_000)
-    top = top_error_pages(out, k=5).collect()
-    assert 0 < len(top) <= 5
-    assert all(r["err"] for r in top)
