@@ -12,7 +12,10 @@ one error row, and ``url``/``warc_ts`` ride along by an Arrow take.
       -> partition sort                 -- (url, warc_ts desc)
       -> dom_map                        -- skip-consecutive latest capture,
                                            tokenizer+tree+extract per doc
-      -> sink (parquet) + per-partition metrics table
+      -> sink (parquet or Iceberg)      -- write_with_lineage
+      -> per-partition metrics table    -- read back from the rows the
+                                           sink committed, no second
+                                           extraction
 
 Resume (``done_keys``) first drops every capture whose url already has
 an at-least-as-new capture at the sink (one anti-join on url), then
@@ -216,26 +219,37 @@ def run_extract(
                    max_doc_bytes=max_doc_bytes)
 
 
-def partition_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-partition lineage/metrics table (north_rule: per-partition
-    lineage + metrics enabling resume)."""
-    return extracted.groupBy(
-        F.spark_partition_id().alias("partition_id")
-    ).agg(
+def partition_metrics(written: DataFrame) -> DataFrame:
+    """The per-partition lineage/metrics table of rows read back from the
+    sink (``io.write_extracted``'s return): one row per batch and sink
+    write task, keyed by ``partition_id``, the task's part-file number
+    (``part-00003-…`` on parquet, ``00003-…`` on Iceberg).  It counts the
+    rows the batch wrote, not the rows it extracted, so a re-delivered
+    batch counts none; ``partition_id`` is ``dom_map``'s partition
+    wherever no resume anti-join reshuffles in between."""
+    part = F.regexp_extract(F.input_file_name(), r"/(?:part-)?(\d+)-[^/]*$",
+                            1).cast("int")
+    return written.groupBy(part.alias("partition_id"), "batch_ts").agg(
         F.count("*").alias("n_docs"),
         F.sum("html_bytes").alias("sum_html_bytes"),
         F.sum(F.length("text")).alias("sum_text_bytes"),
         F.sum("parse_ms").alias("sum_parse_ms"),
         F.sum(F.when(F.col("err") == "", 0).otherwise(1)).alias("n_errors"),
-    )
+    ).select("partition_id", "n_docs", "sum_html_bytes", "sum_text_bytes",
+             "sum_parse_ms", "n_errors", "batch_ts")
 
 
 def write_with_lineage(extracted: DataFrame, out_dir: str) -> None:
-    """Idempotent sink: extracted rows + metrics side table, through the
-    io seam (Iceberg MERGE INTO keyed on (url, warc_ts) when the runtime
-    is present; parquet with a key anti-join otherwise — see io.py)."""
+    """Idempotent sink, then the metrics side table, through the io seam
+    (Iceberg MERGE INTO keyed on (url, warc_ts) when the runtime is
+    present; parquet with a key anti-join otherwise — see io.py).
+
+    The metrics are built from a column-pruned read-back of the rows the
+    sink committed, so each document reaches ``dom_map`` once: the
+    uncached ``extracted`` frame is never executed a second time."""
     from crystal_html5_spark.sparkjob import io as tableio
 
-    spark = extracted.sparkSession
-    tableio.write_extracted(spark, extracted, out_dir)
-    tableio.write_metrics(partition_metrics(extracted), out_dir)
+    written = tableio.write_extracted(extracted.sparkSession, extracted,
+                                      out_dir)
+    if written is not None:
+        tableio.write_metrics(partition_metrics(written), out_dir)

@@ -27,6 +27,8 @@ table abstraction is the Spark-native equivalent surface.
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import DataFrame, functions as F
 
 MERGE_KEYS = ("url", "warc_ts")
@@ -103,19 +105,40 @@ def merge_into_sql(dest: str, view: str,
     )
 
 
+def _has_data_files(spark, path: str) -> bool:
+    """True when ``path`` exists and holds a data file, asked of the Hadoop
+    ``FileSystem`` Spark itself reads through.  Names starting with
+    ``_`` or ``.`` (``_SUCCESS``, checksums) are not data, as for Spark's
+    own reader."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.exists(jpath) and any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(jpath))
+
+
+def read_extracted(spark, dest: str) -> DataFrame | None:
+    """THE reader of the sink's rows: the catalog table ``dest``, or the
+    parquet under ``<dest>/extracted``.  None only while the sink holds
+    nothing: no table, no directory, or a directory without data files.
+    Every other failure (a corrupt part file, a denied read) propagates:
+    read as "nothing done", it would make the sink append a whole batch
+    with no key anti-join and a resume re-extract everything."""
+    if use_catalog(spark, dest):
+        return (spark.read.table(dest) if spark.catalog.tableExists(dest)
+                else None)
+    path = f"{dest}/extracted"
+    return spark.read.parquet(path) if _has_data_files(spark, path) else None
+
+
 def read_done_keys(spark, dest: str) -> DataFrame | None:
     """Keys already durable at the sink (high-water mark for resume)."""
-    try:
-        if use_catalog(spark, dest):
-            done = spark.read.table(dest)
-        else:
-            done = spark.read.parquet(f"{dest}/extracted")
-        return done.select(*MERGE_KEYS)
-    except Exception:  # noqa: BLE001 — first run: nothing done yet
-        return None
+    done = read_extracted(spark, dest)
+    return None if done is None else done.select(*MERGE_KEYS)
 
 
-def write_extracted(spark, extracted: DataFrame, dest: str) -> None:
+def write_extracted(spark, extracted: DataFrame,
+                    dest: str) -> DataFrame | None:
     """THE sink seam — idempotent under re-delivery of the same batch.
 
     Iceberg: one atomic MERGE INTO commit (concurrent writers serialize
@@ -125,6 +148,18 @@ def write_extracted(spark, extracted: DataFrame, dest: str) -> None:
     The anti-join reads only the two key columns (column-pruned scan),
     and AQE picks broadcast while the done-set is small.
 
+    Every row is stamped with the write's ``batch_ts``, one literal UTC
+    timestamp, so every writer of a dest (batch job, streaming
+    micro-batches) produces the same schema — mixed-schema parquet under
+    one directory reads back non-deterministically, and an Iceberg MERGE
+    INSERT * fails outright on a column-count mismatch.
+
+    Returns the rows this write committed, as a lazy read-back of the
+    sink: the rows carrying its ``batch_ts``.  On parquet the read is
+    also pruned to the part files the write added, since Spark's INT96
+    timestamps carry no footer statistics to skip other batches' row
+    groups.  None when a fresh parquet sink received no data file.
+
     The session is derived from the frame itself when possible:
     Structured Streaming's foreachBatch hands a DataFrame bound to a
     per-micro-batch CLONED session, and the MERGE temp view is only
@@ -133,28 +168,31 @@ def write_extracted(spark, extracted: DataFrame, dest: str) -> None:
     Iceberg is present.
     """
     spark = getattr(extracted, "sparkSession", None) or spark
-    if "batch_ts" not in extracted.columns:
-        # Stamped HERE, in the seam, so every writer of a dest (batch
-        # job, streaming micro-batches) produces the same schema —
-        # mixed-schema parquet under one directory reads back
-        # non-deterministically, and an Iceberg MERGE INSERT * fails
-        # outright on a column-count mismatch.
-        extracted = extracted.withColumn(
-            "batch_ts", F.current_timestamp())
+    batch_ts = datetime.datetime.now(datetime.timezone.utc)
+    extracted = extracted.withColumn("batch_ts", F.lit(batch_ts))
+    mine = F.col("batch_ts") == F.lit(batch_ts)
     if use_catalog(spark, dest):
         if not spark.catalog.tableExists(dest):
             extracted.writeTo(dest).create()
-            return
-        view = "_incoming_extracted"
-        extracted.createOrReplaceTempView(view)
-        spark.sql(merge_into_sql(dest, view))
-        return
+        else:
+            view = "_incoming_extracted"
+            extracted.createOrReplaceTempView(view)
+            spark.sql(merge_into_sql(dest, view))
+        return read_extracted(spark, dest).filter(mine)
     done = read_done_keys(spark, dest)
+    before = set()
     if done is not None:
+        before = set(done.inputFiles())
         extracted = extracted.join(
             done.distinct(), list(MERGE_KEYS), "left_anti"
         )
     extracted.write.mode("append").parquet(f"{dest}/extracted")
+    rows = read_extracted(spark, dest)
+    if rows is None:
+        return None
+    added = [f.rsplit("/", 1)[-1] for f in rows.inputFiles()
+             if f not in before]
+    return rows.filter(mine & F.col("_metadata.file_name").isin(added))
 
 
 def _latest_capture_sql(columns) -> str:
@@ -215,10 +253,10 @@ def compact_latest(spark, dest: str) -> int:
 
 
 def write_metrics(metrics: DataFrame, dest: str) -> None:
-    """Per-batch lineage/metrics side table (append-only by design:
-    each batch's row is a lineage fact, not state)."""
-    stamped = metrics.withColumn("batch_ts", F.current_timestamp())
+    """Append rows to the metrics side table (append-only by design:
+    each row is a lineage fact of one batch's sink write task, not
+    state)."""
     if use_catalog(metrics.sparkSession, dest):
-        stamped.writeTo(f"{dest}_metrics").append()
+        metrics.writeTo(f"{dest}_metrics").append()
         return
-    stamped.write.mode("append").parquet(f"{dest}/metrics")
+    metrics.write.mode("append").parquet(f"{dest}/metrics")

@@ -876,10 +876,10 @@ def _selector_row(doc) -> list[tuple]:
 
 
 def _extract_selector_pages(spark, sf_dir: str) -> DataFrame:
-    return dom_map(
+    return _parsed_once(dom_map(
         _pages_fixed(spark), _selector_row,
         "sel_sha256 string, sel_len long", latest=True,
-    ).select("url", "sel_sha256", "sel_len").orderBy("url")
+    ).select("url", "sel_sha256", "sel_len")).orderBy("url")
 
 
 # ---------------- Unicode NFC normalization (dual engine) ----------------
@@ -1296,7 +1296,7 @@ def _extract_line_dedup(spark, sf_dir: str) -> DataFrame:
         " LATERAL VIEW posexplode(split(main_text, '\\n')) t AS pos, l"
     )
     return spark.sql(_line_dedup_sql("spark", lines_src),
-                     extracted=out.select("url", "main_text"))
+                     extracted=_parsed_once(out.select("url", "main_text")))
 
 
 # ---------------- range join (bucketed point-in-interval) ----------------
@@ -3549,6 +3549,16 @@ def _pages_fixed(spark, spread: bool = False) -> DataFrame:
     return _scan(spark, pages_parquet(spark, _FIXED_PAGES_N), spread)
 
 
+def _parsed_once(parsed: DataFrame) -> DataFrame:
+    """``parsed`` (a dom_map output) behind a hash exchange on url, so
+    that each page is parsed once however often the plan reads it.  A
+    global sort's range partitioner samples its input in a job of its
+    own, and a self-join reads its input once per side; either would
+    run the dom_map stage again, where over the exchange it samples or
+    reuses shuffle output instead."""
+    return parsed.repartition("url")
+
+
 # Per-page extractors for dom_map (Node -> rows) shared by the queries.
 _A_HREF = compile_selector("a[href]")
 
@@ -3593,13 +3603,13 @@ def _xpath_stats_row(doc) -> list[tuple]:
 def _extract_summary(spark, pages: DataFrame) -> DataFrame:
     """run_extract, reduced to the per-url columns of extract_pages'
     frozen oracle."""
-    return run_extract(spark, pages).select(
+    return _parsed_once(run_extract(spark, pages).select(
         "url",
         F.sha2(F.col("text"), 256).alias("text_sha256"),
         "n_nodes",
         F.length("main_text").alias("main_len"),
         "err",
-    ).orderBy("url")
+    )).orderBy("url")
 
 
 def _extract_pages(spark, sf_dir: str) -> DataFrame:
@@ -3741,16 +3751,18 @@ def _page_links(spark, sf_dir: str) -> DataFrame:
     """CSS-driven link extraction per page (a[href]); oracle-checked
     against the frozen in-process-engine output."""
     pages = _pages_fixed(spark, spread=True).select("url", "html")
-    return dom_map(pages, _links_row, "n_links int, first_href string") \
-        .select("url", "n_links", "first_href").orderBy("url")
+    return _parsed_once(dom_map(pages, _links_row,
+                                "n_links int, first_href string")
+                        .select("url", "n_links", "first_href")) \
+        .orderBy("url")
 
 
 def _page_titles(spark, sf_dir: str) -> DataFrame:
     """XPath-driven title extraction per page (//title); oracle-checked
     against the frozen in-process-engine output."""
     pages = _pages_fixed(spark, spread=True).select("url", "html")
-    return dom_map(pages, _title_row, "title string") \
-        .select("url", "title").orderBy("url")
+    return _parsed_once(dom_map(pages, _title_row, "title string")
+                        .select("url", "title")).orderBy("url")
 
 
 def xpath_stats_over(pages: DataFrame) -> DataFrame:
@@ -3762,7 +3774,7 @@ def xpath_stats_over(pages: DataFrame) -> DataFrame:
         "title_norm string, n_ref_links bigint, first_nav_href string,"
         " n_nonempty_paras bigint",
     ).select("url", "title_norm", "n_ref_links", "first_nav_href",
-             "n_nonempty_paras").orderBy("url")
+             "n_nonempty_paras")
 
 
 def _page_xpath_stats(spark, sf_dir: str) -> DataFrame:
@@ -3771,8 +3783,9 @@ def _page_xpath_stats(spark, sf_dir: str) -> DataFrame:
     normalize-space(), axes, positional predicates, count().  Pinned to
     the fixed 500-page fixture so the frozen in-process-engine parquet
     (scripts/freeze_expected.py) is its oracle at every sf."""
-    return xpath_stats_over(
-        _pages_fixed(spark, spread=True).select("url", "html"))
+    return _parsed_once(xpath_stats_over(
+        _pages_fixed(spark, spread=True).select("url", "html"))) \
+        .orderBy("url")
 
 
 def page_xpath_stats_scaled(spark, sf_dir: str) -> DataFrame:

@@ -87,9 +87,8 @@ def main() -> None:
         # linger beside them.  Error rows (err != '') stay in the
         # parquet table for triage but are not text — they would be
         # indistinguishable from genuinely empty documents in WET.
-        src = (args.out if tableio.use_catalog(spark, args.out)
-               else f"{args.out}/extracted")
-        full = tableio.read_table(spark, src).filter(F.col("err") == "")
+        full = tableio.read_extracted(spark, args.out) \
+            .filter(F.col("err") == "")
         shutil.rmtree(args.wet_out, ignore_errors=True)
         write_wet_sink(full, args.wet_out, gz=True)
     if args.warc_out:
@@ -105,8 +104,8 @@ def main() -> None:
         write_warc_sink_indexed(
             pages.select("url", "warc_ts", "html"), args.warc_out,
             gz=True)
-    done = tableio.read_done_keys(spark, args.out)
-    n = done.count() if done is not None else 0
+    rows = tableio.read_extracted(spark, args.out)
+    n = rows.count() if rows is not None else 0
     print(f"extracted_total={n}")
     spark.stop()
 

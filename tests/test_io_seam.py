@@ -4,6 +4,8 @@ parquet + key anti-join otherwise)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
@@ -107,11 +109,18 @@ def test_write_extracted_merge_branch(monkeypatch):
 
     class _FakeDF:
         sparkSession = batch  # frames carry their own (cloned) session
-        columns = ["url", "warc_ts", "text", "batch_ts"]  # seam-stamped
+
+        def withColumn(self, _name, _value):
+            return self  # the seam's batch_ts stamp
 
         def createOrReplaceTempView(self, name):
             batch.calls.append(("view", name))
 
+        def filter(self, _cond):
+            return self  # the read-back of the merged batch
+
+    batch.read.table = lambda name: (batch.calls.append(("table", name))
+                                     or _FakeDF())
     tableio.write_extracted(outer, _FakeDF(), "cat.db.extracted")
     # The temp view and the MERGE must both run on the FRAME's session
     # (foreachBatch clone), never the captured outer session, or the
@@ -121,7 +130,84 @@ def test_write_extracted_merge_branch(monkeypatch):
         ("view", "_incoming_extracted"),
         ("sql", tableio.merge_into_sql("cat.db.extracted",
                                        "_incoming_extracted")),
+        ("table", "cat.db.extracted"),
     ]
+
+
+def test_iceberg_lineage_reads_back_the_merged_batch(spark, monkeypatch):
+    """On Iceberg, write_with_lineage runs the MERGE, then reads the table
+    back filtered on the batch_ts the MERGE stamped, then appends the
+    metrics of that read-back to ``<dest>_metrics``.  The extracted frame
+    is only stamped and merged, never run a second time: the fake frame
+    has no method that would execute it."""
+    from crystal_html5_spark.sparkjob import extract_job
+
+    monkeypatch.setattr(tableio, "iceberg_available", lambda _s: True)
+    rec = _Recorder(table_exists=True)
+    dest = "cat.db.extracted"
+
+    class _Frame:
+        sparkSession = rec
+
+        def __init__(self, name):
+            self.name = name
+
+        def withColumn(self, col, value):
+            rec.calls.append(("stamp", self.name, col, str(value)))
+            return self
+
+        def createOrReplaceTempView(self, view):
+            rec.calls.append(("view", self.name, view))
+
+        def filter(self, cond):
+            rec.calls.append(("filter", self.name, str(cond)))
+            return self
+
+        def writeTo(self, table):
+            rec.calls.append(("writeTo", self.name, table))
+            return self
+
+        def append(self):
+            rec.calls.append(("append", self.name))
+
+    def metrics_of(frame):
+        rec.calls.append(("metrics of", frame.name))
+        return _Frame("metrics")
+
+    rec.read.table = lambda name: (rec.calls.append(("table", name))
+                                   or _Frame(name))
+    monkeypatch.setattr(extract_job, "partition_metrics", metrics_of)
+    write_with_lineage(_Frame("extracted"), dest)
+
+    (_, _, col, stamp), *rest = rec.calls
+    literal = stamp[len("Column<'"):-len("'>")]
+    assert col == "batch_ts"
+    assert re.fullmatch(r"\d{4}-\d\d-\d\d \d\d:\d\d:\d\d(\.\d+)?", literal)
+    (_, table, cond) = rest.pop(3)
+    assert table == dest and "batch_ts" in cond and literal in cond
+    assert rest == [
+        ("view", "extracted", "_incoming_extracted"),
+        ("sql", tableio.merge_into_sql(dest, "_incoming_extracted")),
+        ("table", dest),
+        ("metrics of", dest),
+        ("writeTo", "metrics", f"{dest}_metrics"),
+        ("append", "metrics"),
+    ]
+
+
+def test_only_an_absent_or_empty_sink_reads_as_nothing_done(spark, tmp_path):
+    """No directory, or one without a data file, is "nothing done"; a
+    corrupt part file is an error, not an empty sink that would let the
+    next batch append everything with no key anti-join."""
+    dest = str(tmp_path / "out")
+    assert tableio.read_done_keys(spark, dest) is None
+    sink = tmp_path / "out" / "extracted"
+    sink.mkdir(parents=True)
+    (sink / "_SUCCESS").write_bytes(b"")
+    assert tableio.read_done_keys(spark, dest) is None
+    (sink / "part-00000-x-c000.snappy.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE|not a Parquet"):
+        tableio.read_done_keys(spark, dest)
 
 
 def test_parquet_sink_idempotent(spark, tmp_path):

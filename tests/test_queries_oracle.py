@@ -9,6 +9,8 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from crystal_html5_spark.sparkjob import extract_job
+from crystal_html5_spark.sparkjob import queries as Q
 from crystal_html5_spark.sparkjob.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -144,6 +146,35 @@ def test_extract_near_dups_plan_shuffle_free(spark):
         ._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert "Generate" not in plan
+
+
+# The page-parsing keys: the parser is not SQL-expressible, so every
+# key that parses pages is graded against a frozen parquet of the
+# in-process engine over the fixed fixture.  A new page-parsing key
+# joins this list by its oracle.
+PAGE_PARSING = sorted(
+    name for name, sql in entrymod.oracle_sql().items()
+    if str(Q._EXPECTED_DIR) in sql)
+
+
+@pytest.mark.parametrize("name", PAGE_PARSING)
+def test_page_parsing_key_parses_each_page_once(name, spark, monkeypatch):
+    """Collecting a key feeds each input page to its extractor at most
+    once: no job the plan runs (a sort's range sampling, a reused
+    subplan) executes the dom_map stage a second time."""
+    calls = spark.sparkContext.accumulator(0)
+    real = extract_job.dom_map
+
+    def counting_dom_map(frame, extract, schema, **kw):
+        def counted(doc, _calls=calls, _extract=extract):
+            _calls.add(1)
+            return _extract(doc)
+        return real(frame, counted, schema, **kw)
+
+    monkeypatch.setattr(extract_job, "dom_map", counting_dom_map)
+    monkeypatch.setattr(Q, "dom_map", counting_dom_map)
+    entrymod.queries()[name](spark, SF_DIR).collect()
+    assert 0 < calls.value <= Q._FIXED_PAGES_N, calls.value
 
 
 def test_entry_smoke(spark):

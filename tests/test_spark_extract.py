@@ -13,8 +13,11 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from crystal_html5_spark.html5x.extract import extract_document  # noqa: E402
 from crystal_html5_spark.sparkjob.extract_job import (  # noqa: E402
-    partition_metrics,
+    TEXT_SCHEMA_DDL,
+    dom_map,
     run_extract,
+    text_rows,
+    write_with_lineage,
 )
 from crystal_html5_spark.sparkjob.pages import pages_df, synth_rows  # noqa: E402
 from crystal_html5_spark.sparkjob.session import get_spark  # noqa: E402
@@ -157,9 +160,44 @@ def test_fresh_and_resumed_plans_share_one_dom_map(spark, pages):
         assert "Window" not in plan, plan
 
 
-def test_partition_metrics(spark, pages):
-    out = run_extract(spark, pages, num_partitions=4)
-    m = partition_metrics(out).collect()
-    assert sum(r["n_docs"] for r in m) == out.count()
-    assert all(r["sum_html_bytes"] >= 0 for r in m)
+def test_lineage_parses_each_capture_once_and_counts_rows_written(
+        spark, pages, tmp_path):
+    """write_with_lineage feeds each latest capture to the extractor once
+    (the metrics table reads back the rows the sink wrote): one metrics
+    row per part file, holding that file's row count, and a re-delivered
+    batch, which writes no row, appends no metrics row."""
+    import os
 
+    import pyarrow.parquet as pq
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(doc, _calls=calls):
+        _calls.add(1)
+        return text_rows(doc)
+
+    out = dom_map(pages, counted, TEXT_SCHEMA_DDL, latest=True,
+                  num_partitions=4)
+    dest = str(tmp_path / "out")
+    write_with_lineage(out, dest)
+    latest = pages.select("url").distinct().count()
+    assert calls.value == latest
+
+    parts = {int(f.split("-")[1]): pq.read_metadata(
+        f"{dest}/extracted/{f}").num_rows
+        for f in os.listdir(f"{dest}/extracted") if f.startswith("part-")}
+    metrics = spark.read.parquet(f"{dest}/metrics").collect()
+    assert {r["partition_id"]: r["n_docs"] for r in metrics} == parts
+    assert sum(parts.values()) == latest
+    written = spark.read.parquet(f"{dest}/extracted")
+    assert {r["batch_ts"] for r in metrics} == {
+        r["batch_ts"] for r in written.select("batch_ts").distinct().collect()}
+    totals = written.agg(F.sum("html_bytes"), F.sum(F.length("text")),
+                         F.sum((F.col("err") != "").cast("int"))).first()
+    assert tuple(sum(r[c] for r in metrics) for c in (
+        "sum_html_bytes", "sum_text_bytes", "n_errors")) == tuple(totals)
+
+    write_with_lineage(out, dest)  # re-delivered: the anti-join drops all
+    assert calls.value == 2 * latest
+    assert spark.read.parquet(f"{dest}/extracted").count() == latest
+    assert spark.read.parquet(f"{dest}/metrics").count() == len(metrics)
