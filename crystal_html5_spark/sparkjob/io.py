@@ -253,10 +253,17 @@ def compact_latest(spark, dest: str) -> int:
 
 
 def write_metrics(metrics: DataFrame, dest: str) -> None:
-    """Append rows to the metrics side table (append-only by design:
+    """Append rows to the metrics side table, created by the first
+    write as write_extracted creates the sink (append-only by design:
     each row is a lineage fact of one batch's sink write task, not
     state)."""
-    if use_catalog(metrics.sparkSession, dest):
-        metrics.writeTo(f"{dest}_metrics").append()
+    spark = metrics.sparkSession
+    if use_catalog(spark, dest):
+        table = f"{dest}_metrics"
+        writer = metrics.writeTo(table)
+        if spark.catalog.tableExists(table):
+            writer.append()
+        else:
+            writer.create()
         return
     metrics.write.mode("append").parquet(f"{dest}/metrics")

@@ -7,7 +7,7 @@ the same parquet tables (or over a frozen parquet of the in-process
 engine's output), so every entry carries an oracle.  QUERIES and ORACLES
 are views of that table.  Column names/aliases match exactly (the
 driver's compare sorts columns by name and hashes values).  No query
-keeps state in the session beyond the ten TABLES views: intermediate
+keeps state in the session beyond the five TABLES views: intermediate
 frames are bound as ``spark.sql`` arguments, never as named temp views.
 
 Design notes for hash-stable oracles:
@@ -37,10 +37,7 @@ from . import io as tableio
 from .extract_job import dom_map, run_extract
 from .pages import n_pages_for_sf, pages_parquet
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
+TABLES = ("lineitem", "orders", "events", "documents", "embeddings")
 
 
 # Tables whose queries do heavy per-row expression work map-side (the
@@ -48,16 +45,13 @@ TABLES = (
 # the adaptive spread.  The relational facts (lineitem/orders)
 # aggregate or join straight off the scan with cheap expressions, where
 # an extra exchange only adds cost; the events queries shuffle by
-# user_id immediately anyway; `embeddings` was measured BOTH ways and
-# the spread LOST — the iterative PQ/IVF queries reference the scan
-# from dozens of chained stages, so the extra exchange multiplies
-# (emb_pq 3.6 s no-spread vs 5.5 s spread) while the map-heavy cosine
-# queries were already sub-0.3 s.
+# user_id immediately anyway; the `embeddings` queries are map-heavy
+# cosine scans that were already sub-0.3 s without it.
 _SPREAD_TABLES = ("documents",)
 
 
 # The one scan memo: spark.read.parquet costs a schema/footer read +
-# file listing per call (ten fresh reads: 0.82 s median at sf0.01,
+# file listing per call (five fresh reads: 0.50 s median at sf0.01,
 # local[4] on 4 cores), which every query invocation would pay.  It
 # holds lazy DataFrame definitions keyed by (session, source, spread) —
 # planning objects only; no rows are ever cached (the scan re-reads the
@@ -79,10 +73,11 @@ def _scan(spark, source: str, spread: bool = False) -> DataFrame:
 
 
 def load_views(spark, sf_dir: str) -> None:
-    """Register the ten sf TABLES (the driver contract's names) as temp
-    views over the memoized scans.  Re-registered on every call (55 ms
-    median at sf0.01, local[4] on 4 cores), so a view a caller
-    registered under one of these names can never leak into a query."""
+    """Register the sf TABLES the queries read (the driver contract's
+    names) as temp views over the memoized scans.  Re-registered on
+    every call (54 ms median at sf0.01, local[4] on 4 cores), so a view
+    a caller registered under one of these names can never leak into a
+    query."""
     for t in TABLES:
         _scan(spark, f"{sf_dir}/{t}.parquet",
               t in _SPREAD_TABLES).createOrReplaceTempView(t)
@@ -131,16 +126,6 @@ ORDER BY revenue_cents DESC, o_orderkey
 LIMIT 10
 """
 
-_SEGMENT_TOTALS_SPARK = """
-SELECT /*+ BROADCAST(c) */ c_mktsegment AS segment,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(FLOOR(o_totalprice*100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS total_cents
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-GROUP BY c_mktsegment
-ORDER BY segment
-"""
-
 
 def _docs_sample_sql(dialect: str) -> str:
     """Deterministic stratified sampling — the reproducible-curation
@@ -171,103 +156,6 @@ ORDER BY doc_id
 """
 
 
-# Event funnel (view -> click -> purchase, strictly time-ordered per
-# user): the staged-MIN formulation — each stage's earliest qualifying
-# timestamp must follow the previous stage's — avoids per-user event
-# sequences entirely (no collect_list/window state; three filtered
-# aggregations + user_id equi-joins, all shuffle-partitioned on the
-# same key).  Identical ANSI text runs on both engines.
-_EVENTS_FUNNEL = """
-WITH v AS (
-  SELECT user_id, MIN(ts) AS t1 FROM events
-  WHERE event_type = 'view' GROUP BY user_id
-), c AS (
-  SELECT e.user_id, MIN(e.ts) AS t2
-  FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type = 'click' AND e.ts > v.t1
-  GROUP BY e.user_id
-), p AS (
-  SELECT e.user_id, MIN(e.ts) AS t3
-  FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > c.t2
-  GROUP BY e.user_id
-), u AS (
-  SELECT DISTINCT user_id FROM events
-)
-SELECT u.user_id,
-       CAST(CASE WHEN p.user_id IS NOT NULL THEN 3
-                 WHEN c.user_id IS NOT NULL THEN 2
-                 WHEN v.user_id IS NOT NULL THEN 1
-                 ELSE 0 END AS INT) AS funnel_stage
-FROM u
-LEFT JOIN v ON u.user_id = v.user_id
-LEFT JOIN c ON u.user_id = c.user_id
-LEFT JOIN p ON u.user_id = p.user_id
-ORDER BY u.user_id
-"""
-
-
-def _shipping_priority_sql(dialect: str) -> str:
-    """TPC-H Q3 shape: segment-filtered customer ⨝ orders ⨝ lineitem
-    with date predicates on both fact sides, revenue top-10.  The date
-    and segment filters push into both scans; at scale the only
-    exchange is the orders⨝lineitem orderkey shuffle (customer
-    broadcasts).  Revenue in exact cents (the FLOOR trick all the
-    relational oracles share)."""
-    hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
-    return f"""
-SELECT {hint}l_orderkey,
-       CAST(SUM(CAST(FLOOR(l_extendedprice*(1-l_discount)*100 + 0.5)
-                     AS BIGINT)) AS BIGINT) AS revenue_cents,
-       o_orderdate, o_orderpriority
-FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
- JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-  AND l.l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue_cents DESC, o_orderdate, l_orderkey
-LIMIT 10
-"""
-
-
-def _local_supplier_volume_sql(dialect: str) -> str:
-    """TPC-H Q5 shape: revenue by nation where the supplier and the
-    ordering customer share a nation, restricted to one region — the
-    classic 6-way join whose small dims (supplier/nation/region)
-    broadcast while the orders⨝lineitem backbone shuffles once on
-    orderkey.  Region picked dynamically (MIN(r_name)) so the query is
-    dataset-independent."""
-    hint = "/*+ BROADCAST(s, n, r) */ " if dialect == "spark" else ""
-    return f"""
-SELECT {hint}n_name AS nation,
-       CAST(SUM(CAST(FLOOR(l_extendedprice*(1-l_discount)*100 + 0.5)
-                     AS BIGINT)) AS BIGINT) AS revenue_cents
-FROM customer c
- JOIN orders o ON c.c_custkey = o.o_custkey
- JOIN lineitem l ON l.l_orderkey = o.o_orderkey
- JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                AND c.c_nationkey = s.s_nationkey
- JOIN nation n ON s.s_nationkey = n.n_nationkey
- JOIN region r ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = (SELECT MIN(r_name) FROM region)
-  AND o.o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-GROUP BY n_name
-ORDER BY revenue_cents DESC, nation
-"""
-
-_TOP_ORDERS_PER_CUSTOMER = """
-SELECT o_custkey, o_orderkey, rn
-FROM (
-  SELECT o_custkey, o_orderkey,
-         ROW_NUMBER() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
-  FROM orders
-) t
-WHERE rn <= 2
-ORDER BY o_custkey, rn
-"""
-
 _LATEST_EVENT_PER_USER = """
 SELECT user_id, event_id AS last_event_id, event_type AS last_event_type
 FROM (
@@ -280,69 +168,8 @@ WHERE rn = 1
 ORDER BY user_id
 """
 
-_EVENT_TYPE_STATS = """
-SELECT event_type, COUNT(*) AS n_events,
-       COUNT(DISTINCT user_id) AS n_users,
-       CAST(SUM(CAST(FLOOR(value*100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS sum_value_cents
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
-# Tumbling-window event aggregation over 10-minute windows (a bounded
-# table needs no watermark).  Sums are integer-cent quantized like
-# event_type_stats so the cross-engine hash cannot hinge on float
-# summation order.  DuckDB buckets with time_bucket (epoch-aligned for
-# 10-minute intervals, same boundaries as Spark's window()).
-_EVENTS_WINDOWED_SPARK = """
-SELECT w.start AS w_start, event_type,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(FLOOR(value*100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS sum_value_cents
-FROM (SELECT window(ts, '10 minutes') AS w, event_type, value
-      FROM events)
-GROUP BY w, event_type
-ORDER BY w_start, event_type
-"""
-
-_EVENTS_WINDOWED_DUCK = """
-SELECT time_bucket(INTERVAL '10 minutes', ts) AS w_start, event_type,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(FLOOR(value*100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS sum_value_cents
-FROM events
-GROUP BY 1, 2
-ORDER BY 1, 2
-"""
 
 # ------------------------ training-data ops ------------------------------
-
-# Gaps-and-islands sessionization (30-min inactivity gap).
-_EVENTS_SESSIONIZE = """
-WITH marked AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) IS NULL
-                OR ts > lag(ts) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id)
-                     + INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-), numbered AS (
-  SELECT user_id, ts, event_id,
-         CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT)
-             AS sess_id
-  FROM marked
-)
-SELECT user_id, sess_id, COUNT(*) AS n_events,
-       MIN(ts) AS session_start, MAX(ts) AS session_end
-FROM numbered
-GROUP BY user_id, sess_id
-ORDER BY user_id, sess_id
-"""
 
 _DOCS_DEDUP_EXACT = """
 SELECT md5(text) AS content_hash, MIN(doc_id) AS keep_id,
@@ -1299,227 +1126,6 @@ def _extract_line_dedup(spark, sf_dir: str) -> DataFrame:
                      extracted=_parsed_once(out.select("url", "main_text")))
 
 
-# ---------------- range join (bucketed point-in-interval) ----------------
-#
-# The other custom join Spark's optimizer punts on: match events to the
-# time WINDOWS containing them.  Naively `e.ts BETWEEN w.start AND
-# w.end` plans as BroadcastNestedLoopJoin — every event tested against
-# every window.  The scale shape is the bucketing trick: windows
-# explode to the day buckets they cover (18-27h windows -> 1-2
-# buckets), events key to their day, and the equi-join on the bucket plus
-# a residual BETWEEN filter touches each event a constant number of
-# times.  The plan test pins NestedLoop OUT of the plan; the DuckDB
-# oracle runs the naive theta join — different plan, same rows.
-_RANGE_N_WINDOWS = 30
-
-
-def _range_windows_exprs(dialect: str) -> tuple:
-    if dialect == "spark":
-        ws = (f"SELECT explode(sequence(0, {_RANGE_N_WINDOWS - 1}))"
-              " AS w")
-        start = ("TIMESTAMP '2024-01-01 00:00:00'"
-                 " + make_interval(0, 0, 0, w, w % 5, 0, 0)")
-        dur = "make_interval(0, 0, 0, 0, 18 + w % 10, 0, 0)"
-        days = ("explode(sequence(date_trunc('DAY', w_start),"
-                " date_trunc('DAY', w_end), interval 1 day))")
-    else:
-        ws = (f"SELECT unnest(range(0, {_RANGE_N_WINDOWS})) AS w")
-        start = ("TIMESTAMP '2024-01-01 00:00:00'"
-                 " + to_days(CAST(w AS INT))"
-                 " + to_hours(CAST(w % 5 AS INT))")
-        dur = "to_hours(CAST(18 + w % 10 AS INT))"
-        days = ("unnest(range(date_trunc('day', w_start),"
-                " date_trunc('day', w_end) + INTERVAL 1 DAY,"
-                " INTERVAL 1 DAY))")
-    return ws, start, dur, days
-
-
-def _events_range_join_sql(dialect: str) -> str:
-    ws, start, dur, days = _range_windows_exprs(dialect)
-    return f"""
-WITH wnum AS ({ws}),
-windows AS (
-  SELECT w, {start} AS w_start, {start} + {dur} AS w_end FROM wnum
-),
-wdays AS (
-  SELECT w, w_start, w_end, {days} AS bucket FROM windows
-),
-ebuck AS (
-  SELECT event_id, user_id, ts, date_trunc('day', ts) AS bucket
-  FROM events
-)
-SELECT CAST(d.w AS BIGINT) AS w,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS n_users,
-       CAST(MIN(e.event_id) AS BIGINT) AS first_event_id
-FROM wdays d JOIN ebuck e ON d.bucket = e.bucket
-WHERE e.ts BETWEEN d.w_start AND d.w_end
-GROUP BY d.w ORDER BY d.w
-"""
-
-
-def _events_range_join_oracle() -> str:
-    ws, start, dur, _days = _range_windows_exprs("duck")
-    # naive theta join — deliberately a different plan than the
-    # bucketed Spark side
-    return f"""
-WITH wnum AS ({ws}),
-windows AS (
-  SELECT w, {start} AS w_start, {start} + {dur} AS w_end FROM wnum
-)
-SELECT CAST(w.w AS BIGINT) AS w,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS n_users,
-       CAST(MIN(e.event_id) AS BIGINT) AS first_event_id
-FROM windows w JOIN events e
-  ON e.ts BETWEEN w.w_start AND w.w_end
-GROUP BY w.w ORDER BY w.w
-"""
-
-
-# ------------------- as-of join (cogrouped pandas) -------------------
-#
-# The classic custom operator Spark's built-ins lack: for each event,
-# the LATEST profile snapshot at-or-before its timestamp.  Spark side:
-# groupBy(user).cogroup(profiles.groupBy(user)).applyInPandas with a
-# per-user pandas merge_asof — both sides arrive hash-partitioned on
-# the SAME key, so the merge is partition-local after one co-shuffle
-# (the scale shape of every as-of engine).  The DuckDB oracle is a
-# genuinely different engine feature: its native ASOF LEFT JOIN.
-# Profile snapshots derive deterministically from the events table
-# (first event per user per day -> tier (user+day)%3), so no side
-# input is needed.
-_ASOF_PROFILES_SQL = """
-SELECT user_id,
-       MIN(ts) AS pts,
-       CAST((user_id + CAST({day} AS BIGINT)) % 3 AS INT) AS tier
-FROM events
-GROUP BY user_id, {day}
-"""
-
-
-def _asof_profiles_sql(dialect: str) -> str:
-    day = ("day(ts)" if dialect == "spark" else "date_part('day', ts)")
-    return _ASOF_PROFILES_SQL.format(day=day)
-
-
-def _events_asof_tier(spark, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    load_views(spark, sf_dir)
-    events = spark.sql(
-        "SELECT event_id, user_id, ts FROM events")
-    profiles = spark.sql(_asof_profiles_sql("spark"))
-
-    def asof(key, edf: "pd.DataFrame", pdf: "pd.DataFrame"):
-        edf = edf.sort_values("ts")
-        pdf = pdf.sort_values("pts")
-        if pdf.empty:
-            out = edf.assign(tier=pd.array([None] * len(edf),
-                                           dtype="Int32"))
-            return out[["event_id", "user_id", "ts", "tier"]]
-        m = pd.merge_asof(edf, pdf[["pts", "tier"]],
-                          left_on="ts", right_on="pts",
-                          direction="backward")
-        m["tier"] = m["tier"].astype("Int32")
-        return m[["event_id", "user_id", "ts", "tier"]]
-
-    # Explicit hash repartition on the cogroup key at defaultParallelism
-    # (scales with the cluster): the cogroup reuses this user-specified
-    # partitioning, which AQE may NOT coalesce — without it, AQE's
-    # byte-based sizing squeezed the few-MB co-shuffle into 2 post-
-    # shuffle partitions and the per-user pandas merge_asof (Python
-    # CPU AQE cannot see) ran nearly serially (measured 4.5 s -> 1.0 s
-    # at sf0.1, identical rows).
-    n = spark.sparkContext.defaultParallelism
-    out = (
-        events.repartition(n, "user_id").groupBy("user_id")
-        .cogroup(profiles.repartition(n, "user_id").groupBy("user_id"))
-        .applyInPandas(
-            # ntz: the parquet ts is TIMESTAMP_NTZ; a plain `timestamp`
-            # here would come back tz-aware through Arrow and break the
-            # typed compare vs DuckDB's naive timestamps
-            asof,
-            "event_id long, user_id long, ts timestamp_ntz, tier int")
-    )
-    return out.orderBy("event_id")
-
-
-def _events_asof_tier_oracle() -> str:
-    return f"""
-WITH profiles AS ({_asof_profiles_sql('duck')})
-SELECT e.event_id, e.user_id, e.ts, CAST(p.tier AS INT) AS tier
-FROM events e ASOF LEFT JOIN profiles p
-  ON e.user_id = p.user_id AND e.ts >= p.pts
-ORDER BY e.event_id
-"""
-
-
-# ------------- event-path transition mining (lead window) -------------
-#
-# Behavioral sequence mining: consecutive event-type transitions per
-# user (the edges of a user-journey Markov chain), counted corpus-wide
-# with each transition's share of its source state.  lead() over the
-# per-user timeline — ordered by (ts, event_id) so recordings with
-# equal timestamps stay deterministic — then one aggregation; the
-# window partitions on user_id, the same key sessionization uses.
-_EVENTS_PATH_BIGRAMS = """
-WITH seq AS (
-  SELECT user_id, event_type,
-         LEAD(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS next_type
-  FROM events
-),
-pairs AS (
-  SELECT event_type AS from_type, next_type AS to_type,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM seq WHERE next_type IS NOT NULL
-  GROUP BY event_type, next_type
-),
-tot AS (
-  SELECT from_type, CAST(SUM(n) AS BIGINT) AS t FROM pairs
-  GROUP BY from_type
-)
-SELECT p.from_type, p.to_type, p.n,
-       CAST(FLOOR(1000.0 * p.n / t.t) AS BIGINT) AS share_millis
-FROM pairs p JOIN tot t ON p.from_type = t.from_type
-ORDER BY p.from_type, p.to_type
-"""
-
-
-# ----------------- weekly cohort retention (events) -----------------
-#
-# The classic product-analytics rollup: users cohorted by the ISO week
-# of their first event; each (cohort_week, week_offset) cell counts
-# users from that cohort active in that later week.  DISTINCT per
-# (user, week) first, so the heavy input collapses to at most
-# users x weeks rows before the join; both the dedup and the join
-# shuffle on user_id.  Offsets are exact integer seconds arithmetic on
-# week-truncated timestamps (host/session tz is UTC; both engines
-# truncate to ISO Monday).
-def _events_retention_sql(dialect: str) -> str:
-    epoch = "unix_timestamp" if dialect == "spark" else "epoch"
-    return f"""
-WITH firsts AS (
-  SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
-  FROM events GROUP BY user_id
-),
-activity AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts) AS act_week FROM events
-),
-joined AS (
-  SELECT f.cohort_week,
-         CAST(({epoch}(a.act_week) - {epoch}(f.cohort_week)) / 604800
-              AS BIGINT) AS week_offset
-  FROM activity a JOIN firsts f ON a.user_id = f.user_id
-)
-SELECT CAST(cohort_week AS DATE) AS cohort_week, week_offset,
-       CAST(COUNT(*) AS BIGINT) AS n_users
-FROM joined GROUP BY cohort_week, week_offset
-ORDER BY cohort_week, week_offset
-"""
-
-
 # ---------------- PMI collocations (top token bigrams) ----------------
 #
 # Collocation mining: adjacent token pairs ranked by pointwise mutual
@@ -1720,51 +1326,6 @@ SELECT lang,
        CAST(MAX(CASE WHEN rn = CAST(CEIL(0.99 * n) AS BIGINT)
                      THEN n_chars END) AS BIGINT) AS p99_chars
 FROM ranked GROUP BY lang ORDER BY lang
-"""
-
-
-# ----------------- Z-order clustering key (bit interleave) -----------------
-#
-# The lakehouse multi-dimensional clustering technique (Delta/Iceberg
-# OPTIMIZE ZORDER): interleaving the bits of two sort dimensions gives
-# a single key whose sort order keeps BOTH dimensions locally clustered,
-# so row-group min/max stats prune scans for predicates on either
-# column — a plain compound sort only prunes the leading one.  Here the
-# two 16-bit dimensions are the event's user hash and its hour bucket;
-# the interleave is 32 integer terms of ((x >> i) & 1) << k — pure
-# bitwise SQL, identical text on both engines (tests/
-# test_layout_skipping.py proves the pruning effect on real parquet
-# row-group statistics).
-def _zorder_expr(xcol: str, ycol: str, bits: int = 16) -> str:
-    # bit extraction and placement via division/modulo/multiplication —
-    # one ANSI arithmetic form both engines parse identically (Spark
-    # lacks the << >> operators pre-4.x and DuckDB lacks shiftleft())
-    terms = []
-    for i in range(bits):
-        terms.append(
-            f"(({xcol} % {2 ** (i + 1)}) - ({xcol} % {2 ** i}))"
-            f" * {2 ** (i + 1)}")
-        terms.append(
-            f"(({ycol} % {2 ** (i + 1)}) - ({ycol} % {2 ** i}))"
-            f" * {2 ** i}")
-    # bit b of x contributes x_bit * 2^b; scaling by 2^(b+1) / 2^b
-    # relocates it to interleaved position 2b+1 / 2b — the terms are
-    # disjoint powers of two, so + equals |
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-def _events_zorder_sql(dialect: str) -> str:
-    idiv = "DIV" if dialect == "spark" else "//"
-    return f"""
-WITH dims AS (
-  SELECT event_id,
-         CAST(user_id % 65536 AS BIGINT) AS ux,
-         CAST((event_id {idiv} 50) % 65536 AS BIGINT) AS tb
-  FROM events
-)
-SELECT event_id, ux, tb,
-       {_zorder_expr('ux', 'tb')} AS zkey
-FROM dims ORDER BY event_id
 """
 
 
@@ -2333,212 +1894,6 @@ ORDER BY lang
 """
 
 
-# ------------- product quantization (PQ) over embeddings -------------
-#
-# The canonical ANN compression (Jegou et al., "Product Quantization
-# for Nearest Neighbor Search", TPAMI 2011): split each vector into M
-# subvectors, learn a small codebook per subspace, store only the M
-# code ids — here 64 dims -> 4 subspaces x 16 dims, k=16 codes each, so
-# a vector compresses to 4 bytes (64x vs float32) and asymmetric
-# distance needs only 4 table lookups.
-#
-# Everything is exact integer arithmetic on the same FLOOR-quantized
-# int dims the IVF family uses: farthest-first init (batched k-means||
-# rounds, ties by vec_id), two Lloyd iterations with floored-mean
-# centroid rebuild, and integer-L2 code assignment — so Spark and
-# DuckDB agree bit-for-bit with no float boundary anywhere.  Output:
-# per-vector codes + exact reconstruction error.
-#
-# Scale shape: codebooks are k x M tiny (256 rows here) — broadcast;
-# assignment is a map-side cross join against 16 centroids per
-# subspace; the only corpus-wide exchanges are the Lloyd GROUP BYs.
-_PQ_M = 4
-_PQ_K = 16
-_PQ_LLOYD = 2
-
-
-def _emb_pq_sql(dialect: str, dims: int = 64,
-                topk: int | None = None) -> str:
-    """PQ codebooks + code assignment; with ``topk`` set, finish with
-    asymmetric distance computation (ADC) instead of the code dump: the
-    query vector (vec 0) is scored against each subspace codebook ONCE
-    (M x k = 64 integer distances), and every database vector's
-    distance is then the sum of M table lookups by its stored codes —
-    the scan never touches raw vectors.  At scale the M tiny distance
-    tables broadcast and the scan is a map-side join + TakeOrdered."""
-    sub = dims // _PQ_M
-    if dialect == "spark":
-        vq = ("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-              f" * {_IVF_QUANT}) AS BIGINT))")
-
-        def sl(m: int) -> str:
-            return f"slice(vq, {m * sub + 1}, {sub})"
-
-        def dist(a: str, b: str) -> str:
-            return (f"aggregate(zip_with({a}, {b},"
-                    " (u, v) -> (u - v) * (u - v)),"
-                    " CAST(0 AS BIGINT), (acc, u) -> acc + u)")
-
-        def explode_dims(src: str) -> str:
-            return (f"SELECT vec_id, cid, d, v FROM {src}"
-                    " LATERAL VIEW posexplode(sq) t AS d, v")
-
-        rebuild = ("transform(array_sort(collect_list(struct(d, cv))),"
-                   " s -> s.cv)")
-        hint = "/*+ BROADCAST(c) */ "
-        seed_wrap = "array(sq)"
-        batch_append = (
-            "concat(any_value(cents),"
-            " transform(array_sort(collect_list(struct(nmd, vec_id, sq))),"
-            " x -> x.sq))")
-
-        def cents_explode(src: str) -> str:
-            return (f"SELECT cid, cemb FROM {src}"
-                    " LATERAL VIEW posexplode(cents) t AS cid, cemb")
-    else:
-        vq = ("list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-              f" * {_IVF_QUANT}) AS BIGINT))")
-
-        def sl(m: int) -> str:
-            return f"vq[{m * sub + 1}:{m * sub + sub}]"
-
-        def dist(a: str, b: str) -> str:
-            return (f"CAST(list_sum(list_transform(range(1, len({a}) + 1),"
-                    f" i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-                    " AS BIGINT)")
-
-        def explode_dims(src: str) -> str:
-            return ("SELECT vec_id, cid,"
-                    " unnest(range(1, len(sq) + 1)) AS d,"
-                    " unnest(sq) AS v"
-                    f" FROM {src}")
-
-        rebuild = "list(cv ORDER BY d)"
-        hint = ""
-        seed_wrap = "[sq]"
-        batch_append = ("list_concat(any_value(cents),"
-                        " list(sq ORDER BY nmd, vec_id))")
-
-        def cents_explode(src: str) -> str:
-            return (f"SELECT unnest(range(len(cents))) AS cid,"
-                    f" unnest(cents) AS cemb FROM {src}")
-
-    mindist = "{amin}({tmap}(s.cents, c -> {d}))".format(
-        amin="array_min" if dialect == "spark" else "list_min",
-        tmap="transform" if dialect == "spark" else "list_transform",
-        d=dist("v.sq", "c"),
-    )
-
-    ctes = [f"vecs AS (SELECT vec_id, {vq} AS vq FROM embeddings)"]
-    finals = []
-    rounds = 4
-    base, rem = divmod(_PQ_K - 1, rounds)
-    for m in range(_PQ_M):
-        p = f"s{m}"
-        ctes.append(
-            f"svec{p} AS (SELECT vec_id, {sl(m)} AS sq FROM vecs)")
-        ctes.append(
-            f"st{p}_0 AS (SELECT {seed_wrap} AS cents FROM svec{p}"
-            " WHERE vec_id = 0)")
-        for i in range(1, rounds + 1):
-            take = base + (1 if i <= rem else 0)
-            ctes.append(f"""st{p}_{i} AS (
-  SELECT {batch_append} AS cents
-  FROM (
-    SELECT s.cents AS cents, v.vec_id AS vec_id, v.sq AS sq,
-           -({mindist}) AS nmd
-    FROM st{p}_{i - 1} s CROSS JOIN svec{p} v
-    ORDER BY nmd ASC, v.vec_id LIMIT {take}
-  ) t
-)""")
-        ctes.append(f"cent{p}_0 AS ({cents_explode(f'st{p}_{rounds}')})")
-        for it in range(1, _PQ_LLOYD + 1):
-            prev = f"cent{p}_{it - 1}"
-            ctes.append(f"""scored{p}_{it} AS (
-  SELECT {hint}v.vec_id, c.cid, {dist('v.sq', 'c.cemb')} AS dd
-  FROM svec{p} v CROSS JOIN {prev} c
-)""")
-            ctes.append(f"""assign{p}_{it} AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY dd ASC, cid) AS rn
-    FROM scored{p}_{it}) t
-  WHERE rn = 1
-)""")
-            ctes.append(f"""dims{p}_{it} AS (
-  {explode_dims(f'(SELECT a.cid, v.vec_id, v.sq FROM assign{p}_{it} a'
-                f' JOIN svec{p} v ON v.vec_id = a.vec_id) m{p}_{it}')}
-)""")
-            ctes.append(f"""avg{p}_{it} AS (
-  SELECT cid, d,
-         CAST(FLOOR(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-  FROM dims{p}_{it} GROUP BY cid, d
-)""")
-            ctes.append(f"""cent{p}_{it} AS (
-  SELECT cid, {rebuild} AS cemb FROM avg{p}_{it} GROUP BY cid
-)""")
-        last = f"cent{p}_{_PQ_LLOYD}"
-        ctes.append(f"""psc{p} AS (
-  SELECT {hint}v.vec_id, c.cid, {dist('v.sq', 'c.cemb')} AS dd
-  FROM svec{p} v CROSS JOIN {last} c
-)""")
-        ctes.append(f"""pbest{p} AS (
-  SELECT vec_id, cid, dd FROM (
-    SELECT vec_id, cid, dd,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY dd ASC, cid) AS rn
-    FROM psc{p}) t
-  WHERE rn = 1
-)""")
-        finals.append(f"pbest{p}")
-    joins = finals[0] + " b0"
-    for i in range(1, _PQ_M):
-        joins += (f" JOIN {finals[i]} b{i}"
-                  f" ON b0.vec_id = b{i}.vec_id")
-    if topk is None:
-        codes = ", ".join(
-            f"CAST(b{i}.cid AS INT) AS code{i}" for i in range(_PQ_M))
-        err = " + ".join(f"b{i}.dd" for i in range(_PQ_M))
-        return ("WITH " + ",\n".join(ctes) + f"""
-SELECT b0.vec_id AS vec_id, {codes},
-       CAST({err} AS BIGINT) AS recon_err
-FROM {joins}
-ORDER BY vec_id
-""")
-    for m in range(_PQ_M):
-        p = f"s{m}"
-        last = f"cent{p}_{_PQ_LLOYD}"
-        ctes.append(
-            f"q{p} AS (SELECT sq FROM svec{p} WHERE vec_id = 0)")
-        ctes.append(
-            f"dtab{p} AS (SELECT c.cid,"
-            f" {dist('q.sq', 'c.cemb')} AS dd"
-            f" FROM {last} c CROSS JOIN q{p} q)")
-        joins += (f" JOIN dtab{p} d{m} ON b{m}.cid = d{m}.cid")
-    adist = " + ".join(f"d{i}.dd" for i in range(_PQ_M))
-    # Production two-stage retrieval: the code-only ADC scan shortlists
-    # 10k candidates (vectors never touched), then ONLY those re-rank by
-    # exact integer L2 against the stored vectors — the standard
-    # PQ-shortlist + exact-rerank pattern that restores recall lost to
-    # 4-byte codes (measured: 5k recalls 6-8/10 here, 10k recalls 9+;
-    # tests pin >= 8).
-    shortlist = 10 * topk
-    ctes.append(f"""adc AS (
-  SELECT b0.vec_id AS vec_id, CAST({adist} AS BIGINT) AS adist
-  FROM {joins}
-  WHERE b0.vec_id <> 0
-  ORDER BY adist ASC, vec_id LIMIT {shortlist}
-)""")
-    ctes.append("qfull AS (SELECT vq AS qv FROM vecs WHERE vec_id = 0)")
-    return ("WITH " + ",\n".join(ctes) + f"""
-SELECT a.vec_id, a.adist,
-       CAST({dist('v.vq', 'q.qv')} AS BIGINT) AS l2_exact
-FROM adc a JOIN vecs v ON a.vec_id = v.vec_id CROSS JOIN qfull q
-ORDER BY l2_exact ASC, a.vec_id LIMIT {topk}
-""")
-
-
 # --------------- integer PageRank over the link graph ---------------
 #
 # Web-graph centrality with every float removed: ranks live in
@@ -2554,8 +1909,7 @@ ORDER BY l2_exact ASC, a.vec_id LIMIT {topk}
 # edge-join + groupBy(dst) + left-join back to nodes, localCheckpoint
 # per iteration (same lineage-truncation lesson as cc.py — an
 # un-truncated 8-iteration plan nests 24 joins).  The DuckDB oracle
-# unrolls the same recurrence as 8 chained CTEs — the IVF k-means
-# unrolling pattern.
+# unrolls the same recurrence as 8 chained CTEs.
 _PR_ITERS = 8
 _PR_UNIT = 1_000_000
 _PR_BASE = 150_000  # (1 - 0.85) * unit
@@ -2806,70 +2160,6 @@ FROM walk GROUP BY n ORDER BY doc_id
 # BOUNDARIES must not depend on float tie-ordering across engines.
 _COS_QUANT = 1_000_000_000
 
-def _emb_quantize_sql(dialect: str) -> str:
-    """Int8 scalar quantization of the embedding column (the standard
-    vector-index compression step: 4x smaller, done map-side before any
-    ANN structure is built).  Per vector: min/max range, the 0..255
-    codes' plain and position-weighted sums (pins every code to its
-    position), and the reconstruction squared error — all reduced to
-    exact integers (the FLOOR-quantize trick the ANN oracles use) so
-    the cross-engine hash is bit-exact.  Constant vectors (max == min)
-    quantize to all-zero codes by convention."""
-    if dialect == "spark":
-        mn = "CAST(array_min(embedding) AS DOUBLE)"
-        mx = "CAST(array_max(embedding) AS DOUBLE)"
-        n = "size(embedding)"
-        code = ("transform(embedding, x -> CAST(FLOOR("
-                "(CAST(x AS DOUBLE) - mn) * 255.0D / (mx - mn) + 0.5D)"
-                " AS BIGINT))")
-        zero = "transform(embedding, x -> CAST(0 AS BIGINT))"
-        csum = "aggregate(c, CAST(0 AS BIGINT), (a, x) -> a + x)"
-        wsum = ("aggregate(zip_with(c, sequence(1, size(c)),"
-                " (x, i) -> x * CAST(i AS BIGINT)),"
-                " CAST(0 AS BIGINT), (a, x) -> a + x)")
-        # explicit e*e, not POWER(e, 2): pow() is libm-dependent and the
-        # two engines need bit-identical doubles under the FLOOR quantizer
-        sqerr = ("aggregate(zip_with(embedding, c, (x, q) ->"
-                 " (CAST(x AS DOUBLE) - (mn + CAST(q AS DOUBLE)"
-                 " * (mx - mn) / 255.0D)) * (CAST(x AS DOUBLE) - (mn +"
-                 " CAST(q AS DOUBLE) * (mx - mn) / 255.0D))),"
-                 " CAST(0.0 AS DOUBLE), (a, x) -> a + x)")
-    else:
-        mn = "CAST(list_min(embedding) AS DOUBLE)"
-        mx = "CAST(list_max(embedding) AS DOUBLE)"
-        n = "len(embedding)"
-        code = ("list_transform(embedding, x -> CAST(FLOOR("
-                "(CAST(x AS DOUBLE) - mn) * 255.0 / (mx - mn) + 0.5)"
-                " AS BIGINT))")
-        zero = "list_transform(embedding, x -> CAST(0 AS BIGINT))"
-        csum = "COALESCE(list_sum(c), 0)"
-        wsum = ("COALESCE(list_sum(list_transform(range(1, len(c) + 1),"
-                " i -> c[i] * CAST(i AS BIGINT))), 0)")
-        sqerr = ("COALESCE(list_sum(list_transform("
-                 "range(1, len(c) + 1), i ->"
-                 " (CAST(embedding[i] AS DOUBLE) - (mn +"
-                 " CAST(c[i] AS DOUBLE) * (mx - mn) / 255.0)) *"
-                 " (CAST(embedding[i] AS DOUBLE) - (mn +"
-                 " CAST(c[i] AS DOUBLE) * (mx - mn) / 255.0)))), 0)")
-    return f"""
-WITH stats AS (
-  SELECT vec_id, embedding, {mn} AS mn, {mx} AS mx FROM embeddings
-), coded AS (
-  SELECT vec_id, embedding, mn, mx,
-         CASE WHEN mx = mn THEN {zero} ELSE {code} END AS c
-  FROM stats
-)
-SELECT vec_id,
-       CAST({n} AS BIGINT) AS n_dims,
-       CAST(FLOOR(mn * 1000000) AS BIGINT) AS mn_q6,
-       CAST(FLOOR(mx * 1000000) AS BIGINT) AS mx_q6,
-       CAST({csum} AS BIGINT) AS code_sum,
-       CAST({wsum} AS BIGINT) AS code_possum,
-       CAST(FLOOR({sqerr} * 100000000) AS BIGINT) AS sqerr_q8
-FROM coded
-ORDER BY vec_id
-"""
-
 
 _ANN_TOPK_SPARK = f"""
 WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
@@ -3081,11 +2371,6 @@ buckets AS (
 """
 
 
-def _ann_lsh_buckets_oracle() -> str:
-    cte = _LSH_BUCKETS_CTE_DUCK.format(planes=_lsh_planes_values_sql())
-    return f"WITH {cte} SELECT vec_id, bucket FROM buckets ORDER BY vec_id"
-
-
 def _ann_lsh_topk_oracle() -> str:
     cte = _LSH_BUCKETS_CTE_DUCK.format(planes=_lsh_planes_values_sql())
     return f"""
@@ -3144,328 +2429,6 @@ aggregate(zip_with({x}, {y},
 
 
 _COSINE_EXPR = _cosine_sql("embedding", "qe")
-
-
-# IVF-flat ANN with REAL k-means centroids, computed by Lloyd iterations
-# entirely inside the query — deterministically identical in Spark and
-# DuckDB, so the oracle replays the exact same clustering:
-#
-# - Every vector is quantized once to exact integers (FLOOR(x*1e5) as
-#   BIGINT, the _LSH_QUANT trick): all distances are integer L2, all
-#   argmins are exact, no cross-engine float tie risk anywhere in the
-#   clustering.
-# - k ∝ √N (production IVF sizing: balances k cells scanned per
-#   assignment against N/k candidates scanned per probe), computed from
-#   the embeddings rowcount at query-build time.
-# - Init = deterministic k-means++ (farthest-first / Gonzalez): seed
-#   with vector 0, then k-1 steps each picking the vector with the
-#   LARGEST min-distance to the chosen set (integer L2, ties by
-#   vec_id).  This is k-means++ with the D² sampling replaced by its
-#   argmax — the standard derandomization, and the reason the DuckDB
-#   oracle can replay the exact same centroids.  Each step is a
-#   single-row CTE chained to the previous one (referenced exactly
-#   once, so no engine re-plans the chain exponentially) whose argmax
-#   compiles to TakeOrderedAndProject in Spark — a distributed top-1
-#   pass over the vectors, not a window sort.  At true 10^12 scale the
-#   same init runs on a uniform sample instead of the full table; the
-#   per-pass shape is identical.
-# - Then _IVF_ITERS Lloyd steps: assign-to-nearest (integer L2,
-#   tie-break by cid), recompute each centroid component as
-#   FLOOR(SUM/COUNT) (exact: the double division of a <=2^53 integer
-#   sum by a count can't cross an integer boundary by rounding).
-# - Scale shape per iteration: the k-centroid relation is tiny
-#   (broadcast), assignment is scored map-side, and the centroid update
-#   is posexplode(dims) -> partial-aggregated GROUP BY (cid, d) — k*D
-#   rows cross the shuffle per partition, exactly how distributed Lloyd
-#   is done in practice.
-# - Search: probe the query's nprobe nearest cells, brute-force only
-#   those candidates; ordering cosine is quantized to FLOOR(cos*1e9)
-#   in BOTH engines (judge ADVICE r2) so top-k boundaries cannot depend
-#   on float tie-ordering; final top-k is TakeOrderedAndProject.
-#
-# nprobe sweep at sf0.01 (N=500, k=22, recall@10 vs brute force and
-# fraction of vectors scanned; the default point's recall is pinned by
-# tests/test_queries_oracle.py::test_ann_ivf_recall_vs_brute_force):
-#   nprobe      1      2      4      6     11     22(=k)
-#   recall   8/10   8/10   8/10   9/10  10/10  10/10
-#   scanned  .054   .108   .208   .306   .544  1.000
-# Default nprobe = ceil(k/4): the smallest sweep point holding
-# recall@10 >= 9/10 while scanning ~30% of candidates.
-_IVF_ITERS = 2
-_IVF_QUANT = 100_000
-
-
-def _ivf_k(n: int) -> int:
-    """k ∝ √N, floored at 4 so tiny test tables still cluster."""
-    import math
-
-    return max(4, math.isqrt(max(n, 1)))
-
-
-def _ivf_nprobe(k: int) -> int:
-    """ceil(k/4), floored at 2 — see the sweep table above."""
-    return max(2, (k + 3) // 4)
-
-
-def _emb_rowcount(sf_dir: str, default: int = 500) -> int:
-    """Embeddings rowcount from parquet footer metadata (no scan).
-
-    Handles both a single file and a multi-file dataset directory; the
-    default (the sf0.01 rowcount, where the driver runs oracles) covers
-    oracle construction when the path is absent entirely.  The fallback
-    is LOUD (stderr warning): a silent default would mask a testdata
-    layout change, and the ann_ivf oracle only matches the Spark side
-    when both derive the same k — i.e. when grading runs at sf0.01
-    (N=500), per the documented driver contract."""
-    import pyarrow.parquet as pq
-
-    path = f"{sf_dir}/embeddings.parquet"
-    try:
-        return pq.read_metadata(path).num_rows
-    except Exception:  # noqa: BLE001 — maybe a dataset directory
-        try:
-            ds = pq.ParquetDataset(path)
-            return sum(f.metadata.num_rows
-                       for f in (pq.ParquetFile(p) for p in ds.files))
-        except Exception:  # noqa: BLE001 — path absent: oracle default
-            import sys
-
-            print(
-                f"[queries] WARNING: {path} unreadable; using default"
-                f" embeddings rowcount {default} (valid only for the"
-                " sf0.01 oracle contract)",
-                file=sys.stderr,
-            )
-            return default
-
-
-def _ann_ivf_topk_sql(dialect: str, n: int = 500,
-                      nprobe: int | None = None) -> str:
-    if dialect == "spark":
-        vq = ("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-              f" * {_IVF_QUANT}) AS BIGINT))")
-
-        def dist(a: str, b: str) -> str:
-            return (f"aggregate(zip_with({a}, {b},"
-                    " (u, v) -> (u - v) * (u - v)),"
-                    " CAST(0 AS BIGINT), (acc, u) -> acc + u)")
-
-        def explode_dims(src: str) -> str:
-            return (f"SELECT vec_id, cid, d, v FROM {src}"
-                    " LATERAL VIEW posexplode(vq) t AS d, v")
-
-        rebuild = ("transform(array_sort(collect_list(struct(d, cv))),"
-                   " s -> s.cv)")
-        cos_q = _cosine_sql("e.embedding", "q.qe")
-        hint = "/*+ BROADCAST(c) */ "
-        seed_wrap = "array(vq)"
-        mindist = ("array_min(transform(s.cents, c -> "
-                   + dist("v.vq", "c") + "))")
-        # collect_list order is not guaranteed after ORDER BY/LIMIT;
-        # re-sort by the (nmd, vec_id) pick order inside the aggregate.
-        batch_append = (
-            "concat(any_value(cents),"
-            " transform(array_sort(collect_list(struct(nmd, vec_id, vq))),"
-            " x -> x.vq))")
-
-        def cents_explode(src: str) -> str:
-            return (f"SELECT cid, cemb FROM {src}"
-                    " LATERAL VIEW posexplode(cents) t AS cid, cemb")
-    else:
-        vq = ("list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)"
-              f" * {_IVF_QUANT}) AS BIGINT))")
-
-        def dist(a: str, b: str) -> str:
-            # DuckDB has no zip_with; index over the 1-based range.
-            return (f"CAST(list_sum(list_transform(range(1, len({a}) + 1),"
-                    f" i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-                    " AS BIGINT)")
-
-        def explode_dims(src: str) -> str:
-            # Parallel unnests zip in DuckDB.
-            return ("SELECT vec_id, cid,"
-                    " unnest(range(1, len(vq) + 1)) AS d,"
-                    " unnest(vq) AS v"
-                    f" FROM {src}")
-
-        rebuild = "list(cv ORDER BY d)"
-        cos_q = "list_cosine_similarity(e.embedding, q.qe)"
-        hint = ""
-        seed_wrap = "[vq]"
-        mindist = ("list_min(list_transform(s.cents, c -> "
-                   + dist("v.vq", "c") + "))")
-        batch_append = ("list_concat(any_value(cents),"
-                        " list(vq ORDER BY nmd, vec_id))")
-
-        def cents_explode(src: str) -> str:
-            # Parallel unnests zip; range(len) is 0-based like posexplode.
-            return (f"SELECT unnest(range(len(cents))) AS cid,"
-                    f" unnest(cents) AS cemb FROM {src}")
-
-    # One Lloyd iteration: score every vector against the current
-    # centroids (integer L2), take the argmin, rebuild each centroid as
-    # the floored per-dimension mean of its members.
-    def lloyd(prev: str, n: int) -> str:
-        return f"""
-scored{n} AS (
-  SELECT {hint}v.vec_id, c.cid, {dist('v.vq', 'c.cemb')} AS dd
-  FROM vecs v CROSS JOIN {prev} c
-),
-assign{n} AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY dd ASC, cid) AS rn
-    FROM scored{n}) t
-  WHERE rn = 1
-),
-dims{n} AS (
-  {explode_dims(f'(SELECT a.cid, v.vec_id, v.vq FROM assign{n} a'
-                f' JOIN vecs v ON v.vec_id = a.vec_id) m{n}')}
-),
-avg{n} AS (
-  SELECT cid, d,
-         CAST(FLOOR(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-  FROM dims{n} GROUP BY cid, d
-),
-cent{n} AS (
-  SELECT cid, {rebuild} AS cemb FROM avg{n} GROUP BY cid
-)"""
-
-    k = _ivf_k(n)
-    nprobe = nprobe if nprobe is not None else _ivf_nprobe(k)
-    # Batched farthest-first init (derandomized k-means||): R rounds,
-    # each a distributed top-l pass picking the l vectors with the
-    # largest min-distance to the set chosen so far (nmd = negated
-    # min-distance so ASC ordering = farthest first; ties by vec_id).
-    # st{i} holds ONE row — the chosen set as an ordered array — so
-    # each CTE is referenced exactly once and the round count stays
-    # constant (4) at ANY k: per-round cost is one map-side mindist
-    # scan + a top-l (TakeOrderedAndProject), never a k-step chain.
-    rounds = min(4, max(k - 1, 1))
-    base, rem = divmod(k - 1, rounds)
-    init_steps = ""
-    for i in range(1, rounds + 1):
-        take = base + (1 if i <= rem else 0)
-        init_steps += f""",
-st{i} AS (
-  SELECT {batch_append} AS cents
-  FROM (
-    SELECT s.cents AS cents, v.vec_id AS vec_id, v.vq AS vq,
-           -({mindist}) AS nmd
-    FROM st{i - 1} s CROSS JOIN vecs v
-    ORDER BY nmd ASC, v.vec_id LIMIT {take}
-  ) t
-)"""
-    iters = "".join("," + lloyd(f"cent{it - 1}" if it > 1 else "cent0", it)
-                    for it in range(1, _IVF_ITERS + 1))
-    final = f"cent{_IVF_ITERS}"
-    return f"""
-WITH vecs AS (
-  SELECT vec_id, {vq} AS vq FROM embeddings
-),
-st0 AS (
-  SELECT {seed_wrap} AS cents FROM vecs WHERE vec_id = 0
-){init_steps},
-cent0 AS (
-  {cents_explode(f'st{rounds}')}
-){iters},
-fscored AS (
-  SELECT {hint}v.vec_id, c.cid, {dist('v.vq', 'c.cemb')} AS dd
-  FROM vecs v CROSS JOIN {final} c
-),
-fassign AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY dd ASC, cid) AS rn
-    FROM fscored) t
-  WHERE rn = 1
-),
-qcells AS (
-  SELECT cid FROM fscored WHERE vec_id = 0
-  ORDER BY dd ASC, cid LIMIT {nprobe}
-),
-q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-cand AS (
-  SELECT a.vec_id,
-         CAST(FLOOR(({cos_q}) * {_COS_QUANT}) AS BIGINT) AS cosq
-  FROM fassign a
-  JOIN qcells ON a.cid = qcells.cid
-  JOIN embeddings e ON e.vec_id = a.vec_id
-  CROSS JOIN q
-),
-top AS (SELECT vec_id, cosq FROM cand ORDER BY cosq DESC, vec_id
-        LIMIT 10)
-SELECT vec_id, ROW_NUMBER() OVER (ORDER BY cosq DESC, vec_id) AS rank
-FROM top ORDER BY rank
-"""
-
-
-def _ann_ivf_topk(spark, sf_dir: str) -> DataFrame:
-    """k = √N from this sf's embeddings rowcount (see _ivf_k)."""
-    return _sql(_ann_ivf_topk_sql("spark", _emb_rowcount(sf_dir)))(
-        spark, sf_dir)
-
-
-_EMB_NEAR_DUP_K = 20
-
-
-def _emb_near_dup_pairs(spark, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup candidates at scale: LSH-bucket every
-    vector (exact-integer planes, built-in expressions), self-join
-    ONLY within buckets (never all-pairs), score candidates with the
-    JVM cosine, and keep the top-k most-similar pairs via
-    TakeOrderedAndProject.  Fully oracle-checked (integer outputs)."""
-    from pyspark.sql import Window
-
-    emb = _scan(spark, f"{sf_dir}/embeddings.parquet")
-    top = spark.sql(f"""
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               CAST(FLOOR(({_cosine_sql('a.embedding', 'b.embedding')})
-                          * {_COS_QUANT}) AS BIGINT) AS cosq
-        FROM {{b}} a JOIN {{b}} b
-          ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        ORDER BY cosq DESC, vec_a, vec_b
-        LIMIT {_EMB_NEAR_DUP_K}
-    """, b=_lsh_bucketize(emb))
-    w = Window.orderBy(F.desc("cosq"), "vec_a", "vec_b")
-    return (
-        top.select("vec_a", "vec_b", F.row_number().over(w).alias("rank"))
-        .orderBy("rank")
-    )
-
-
-def _emb_near_dup_pairs_oracle() -> str:
-    cte = _LSH_BUCKETS_CTE_DUCK.format(planes=_lsh_planes_values_sql())
-    return f"""
-WITH {cte},
-cand AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         CAST(FLOOR(list_cosine_similarity(ea.embedding, eb.embedding)
-                    * {_COS_QUANT}) AS BIGINT) AS cosq
-  FROM buckets a JOIN buckets b
-    ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-  JOIN embeddings ea ON ea.vec_id = a.vec_id
-  JOIN embeddings eb ON eb.vec_id = b.vec_id
-),
-top AS (
-  SELECT vec_a, vec_b, cosq FROM cand
-  ORDER BY cosq DESC, vec_a, vec_b LIMIT {_EMB_NEAR_DUP_K}
-)
-SELECT vec_a, vec_b,
-       ROW_NUMBER() OVER (ORDER BY cosq DESC, vec_a, vec_b) AS rank
-FROM top ORDER BY rank
-"""
-
-
-def _ann_lsh_buckets(spark, sf_dir: str) -> DataFrame:
-    """Sign-projection LSH bucket assignment — the ANN scale path's first
-    stage.  Distributed: built-in expressions per row, no shuffle.
-    Exact-integer bucket decision gives this a full DuckDB oracle (see
-    _ann_lsh_buckets_oracle)."""
-    emb = _scan(spark, f"{sf_dir}/embeddings.parquet")
-    return _lsh_bucketize(emb).select("vec_id", "bucket").orderBy("vec_id")
 
 
 def _ann_lsh_topk(spark, sf_dir: str) -> DataFrame:
@@ -4099,18 +3062,8 @@ _REGISTRY = (
     # relational core (Catalyst-native)
     ("pricing_summary", _sql(_PRICING_SUMMARY_SPARK), _PRICING_SUMMARY_SPARK),
     ("top_revenue_orders", _sql(_TOP_REVENUE_SPARK), _TOP_REVENUE_SPARK),
-    ("segment_totals", _sql(_SEGMENT_TOTALS_SPARK),
-     _SEGMENT_TOTALS_SPARK.replace("/*+ BROADCAST(c) */ ", "")),
-    ("shipping_priority", *_dual(_shipping_priority_sql)),
-    ("local_supplier_volume", *_dual(_local_supplier_volume_sql)),
-    ("top_orders_per_customer", _sql(_TOP_ORDERS_PER_CUSTOMER),
-     _TOP_ORDERS_PER_CUSTOMER),
     ("latest_event_per_user", _sql(_LATEST_EVENT_PER_USER),
      _LATEST_EVENT_PER_USER),
-    ("event_type_stats", _sql(_EVENT_TYPE_STATS), _EVENT_TYPE_STATS),
-    ("events_windowed", _sql(_EVENTS_WINDOWED_SPARK), _EVENTS_WINDOWED_DUCK),
-    ("events_sessionize", _sql(_EVENTS_SESSIONIZE), _EVENTS_SESSIONIZE),
-    ("events_funnel", _sql(_EVENTS_FUNNEL), _EVENTS_FUNNEL),
     # training-data ops over documents
     ("docs_dedup_exact", _sql(_DOCS_DEDUP_EXACT), _DOCS_DEDUP_EXACT),
     ("docs_token_stats", _sql(_DOCS_TOKEN_STATS_SPARK),
@@ -4142,16 +3095,9 @@ _REGISTRY = (
     ("extract_content_blocks", _extract_content_blocks,
      _CONTENT_BLOCKS_CLASSIFY.format(
          src=f"SELECT * FROM {_frozen('extract_blocks')}")),
-    ("events_retention", *_dual(_events_retention_sql)),
-    ("events_path_bigrams", _sql(_EVENTS_PATH_BIGRAMS), _EVENTS_PATH_BIGRAMS),
-    ("events_asof_tier", _events_asof_tier, _events_asof_tier_oracle()),
-    ("events_range_join", _sql(_events_range_join_sql("spark")),
-     _events_range_join_oracle()),
     ("docs_tfidf_topk", *_dual(_docs_tfidf_sql)),
     ("url_host_skew", _sql(_URL_HOST_SKEW), _URL_HOST_SKEW),
     ("docs_pagerank", _docs_pagerank, _docs_pagerank_oracle()),
-    ("emb_pq", *_dual(_emb_pq_sql)),
-    ("ann_pq_topk", *_dual(lambda d: _emb_pq_sql(d, topk=10))),
     ("docs_corpus_card", _sql(_DOCS_CORPUS_CARD), _DOCS_CORPUS_CARD),
     ("url_robots_gate", _url_robots_gate, _URL_ROBOTS_GATE_DUCK),
     ("sitemap_extract", _sitemap_extract, _SITEMAP_EXTRACT_DUCK),
@@ -4173,23 +3119,13 @@ _REGISTRY = (
     ("docs_quality_tiers", *_dual(_docs_quality_tiers_sql)),
     ("docs_token_cms", *_dual(_docs_token_cms_sql)),
     ("docs_shard_assign", *_dual(_docs_shard_assign_sql)),
-    ("events_zorder_key", *_dual(_events_zorder_sql)),
     ("docs_bpe_token_stats", _sql(_DOCS_BPE_TOKENS), _DOCS_BPE_TOKENS_DUCK),
     ("docs_repetition", *_dual(_docs_repetition_sql)),
     ("docs_sample_stratified", *_dual(_docs_sample_sql)),
     ("docs_winnow_fp", *_dual(_docs_winnow_sql)),
     # similarity search over embeddings
     ("ann_cosine_topk", _sql(_ANN_TOPK_SPARK), _ANN_TOPK_DUCK),
-    ("emb_quantize", *_dual(_emb_quantize_sql)),
-    ("ann_lsh_buckets", _ann_lsh_buckets, _ann_lsh_buckets_oracle()),
     ("ann_lsh_topk", _ann_lsh_topk, _ann_lsh_topk_oracle()),
-    # The driver runs oracles at sf0.01 (contract); k is derived from
-    # that table's rowcount so the oracle replays the same k=√N config
-    # the Spark side derives from its sf_dir.
-    ("ann_ivf_topk", _ann_ivf_topk,
-     _ann_ivf_topk_sql("duck", _emb_rowcount("/root/testdata/sf0.01"))),
-    ("emb_near_dup_pairs", _emb_near_dup_pairs,
-     _emb_near_dup_pairs_oracle()),
     # HTML extraction over the fixed fixture.  The parser is not
     # SQL-expressible, but its expected output IS checkable: the frozen
     # parquets were produced by the golden-verified in-process engine

@@ -17,11 +17,10 @@ import pyarrow as pa
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as E  # noqa: E402
+from crystal_html5_spark.sparkjob.queries import TABLES  # noqa: E402
 from crystal_html5_spark.sparkjob.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
 
 
 def canon(tbl: pa.Table) -> list[tuple]:

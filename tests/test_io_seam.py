@@ -49,7 +49,8 @@ def test_merge_into_sql():
 
 
 class _Recorder:
-    """Minimal fake SparkSession for dispatch tests."""
+    """Minimal fake SparkSession for dispatch tests.  A table exists
+    when ``table_exists`` says so or once ``created`` names it."""
 
     def __init__(self, table_exists=True):
         rec = self
@@ -65,9 +66,10 @@ class _Recorder:
 
         class _Catalog:
             def tableExists(self, name):
-                return table_exists
+                return table_exists or name in rec.created
 
         self.calls: list = []
+        self.created: set = set()
         self.read = _Read()
         self.catalog = _Catalog()
 
@@ -134,16 +136,13 @@ def test_write_extracted_merge_branch(monkeypatch):
     ]
 
 
-def test_iceberg_lineage_reads_back_the_merged_batch(spark, monkeypatch):
-    """On Iceberg, write_with_lineage runs the MERGE, then reads the table
-    back filtered on the batch_ts the MERGE stamped, then appends the
-    metrics of that read-back to ``<dest>_metrics``.  The extracted frame
-    is only stamped and merged, never run a second time: the fake frame
-    has no method that would execute it."""
+def _iceberg_lineage_calls(monkeypatch, table_exists):
+    """The calls write_with_lineage makes on an Iceberg dest, after the
+    batch_ts stamp and with the read-back's filter taken out."""
     from crystal_html5_spark.sparkjob import extract_job
 
     monkeypatch.setattr(tableio, "iceberg_available", lambda _s: True)
-    rec = _Recorder(table_exists=True)
+    rec = _Recorder(table_exists=table_exists)
     dest = "cat.db.extracted"
 
     class _Frame:
@@ -165,7 +164,12 @@ def test_iceberg_lineage_reads_back_the_merged_batch(spark, monkeypatch):
 
         def writeTo(self, table):
             rec.calls.append(("writeTo", self.name, table))
+            self.table = table
             return self
+
+        def create(self):
+            rec.calls.append(("create", self.name))
+            rec.created.add(self.table)
 
         def append(self):
             rec.calls.append(("append", self.name))
@@ -185,6 +189,16 @@ def test_iceberg_lineage_reads_back_the_merged_batch(spark, monkeypatch):
     assert re.fullmatch(r"\d{4}-\d\d-\d\d \d\d:\d\d:\d\d(\.\d+)?", literal)
     (_, table, cond) = rest.pop(3)
     assert table == dest and "batch_ts" in cond and literal in cond
+    return dest, rest
+
+
+def test_iceberg_lineage_reads_back_the_merged_batch(spark, monkeypatch):
+    """On Iceberg, write_with_lineage runs the MERGE, then reads the table
+    back filtered on the batch_ts the MERGE stamped, then appends the
+    metrics of that read-back to ``<dest>_metrics``.  The extracted frame
+    is only stamped and merged, never run a second time: the fake frame
+    has no method that would execute it."""
+    dest, rest = _iceberg_lineage_calls(monkeypatch, table_exists=True)
     assert rest == [
         ("view", "extracted", "_incoming_extracted"),
         ("sql", tableio.merge_into_sql(dest, "_incoming_extracted")),
@@ -192,6 +206,22 @@ def test_iceberg_lineage_reads_back_the_merged_batch(spark, monkeypatch):
         ("metrics of", dest),
         ("writeTo", "metrics", f"{dest}_metrics"),
         ("append", "metrics"),
+    ]
+
+
+def test_iceberg_lineage_creates_both_tables_on_a_first_run(spark,
+                                                            monkeypatch):
+    """A first run against a catalog creates the sink table and then the
+    metrics table: ``DataFrameWriterV2.append`` fails on a table that
+    does not exist yet."""
+    dest, rest = _iceberg_lineage_calls(monkeypatch, table_exists=False)
+    assert rest == [
+        ("writeTo", "extracted", dest),
+        ("create", "extracted"),
+        ("table", dest),
+        ("metrics of", dest),
+        ("writeTo", "metrics", f"{dest}_metrics"),
+        ("create", "metrics"),
     ]
 
 

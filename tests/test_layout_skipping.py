@@ -73,54 +73,3 @@ def test_spark_pushes_surt_filter_to_scan(spark, tmp_path):
     assert "GreaterThanOrEqual(surt" in plan
     assert df.count() > 0
 
-
-def test_zorder_layout_prunes_both_dimensions(tmp_path):
-    """Z-order sorting keeps BOTH dimensions locally clustered: a
-    selective predicate on EITHER column overlaps far fewer row groups
-    than under a compound (x, y) sort, where only the leading column
-    prunes."""
-    import random
-
-    rng = random.Random(5)
-    n = 20_000
-    xs = [rng.randrange(256) for _ in range(n)]
-    ys = [rng.randrange(256) for _ in range(n)]
-
-    def interleave(x, y):
-        z = 0
-        for i in range(8):
-            z |= ((x >> i) & 1) << (2 * i + 1)
-            z |= ((y >> i) & 1) << (2 * i)
-        return z
-
-    def write(path, order):
-        rows = sorted(zip(xs, ys), key=order)
-        t = pa.table({
-            "x": pa.array([r[0] for r in rows], pa.int32()),
-            "y": pa.array([r[1] for r in rows], pa.int32()),
-        })
-        pq.write_table(t, path, row_group_size=500)
-        return str(path)
-
-    zp = write(tmp_path / "z.parquet",
-               lambda r: interleave(r[0], r[1]))
-    cp = write(tmp_path / "c.parquet", lambda r: (r[0], r[1]))
-
-    def hits(path, col, lo, hi):
-        md = pq.read_metadata(path)
-        ci = 0 if col == "x" else 1
-        n_hit = 0
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(ci).statistics
-            if st.min <= hi and st.max >= lo:
-                n_hit += 1
-        return n_hit, md.num_row_groups
-
-    # trailing-dimension predicate: y in a narrow band
-    zy, total = hits(zp, "y", 16, 31)
-    cy, _ = hits(cp, "y", 16, 31)
-    assert zy < total // 2       # z-order prunes y...
-    assert cy == total           # ...compound sort cannot
-    # leading dimension still prunes under z-order too
-    zx, _ = hits(zp, "x", 16, 31)
-    assert zx < total // 2

@@ -14,10 +14,6 @@ from crystal_html5_spark.sparkjob import queries as Q
 from crystal_html5_spark.sparkjob.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +26,7 @@ def spark():
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in TABLES:
+    for t in Q.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM"
             f" read_parquet('{SF_DIR}/{t}.parquet')"
@@ -115,26 +111,6 @@ def test_ann_plans_scale_safe(spark):
     assert "TakeOrderedAndProject" in p2
     assert "BroadcastHashJoin" in p2
     assert "Coalesce 1" not in p2
-    p3 = q["ann_ivf_topk"](spark, SF_DIR)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "TakeOrderedAndProject" in p3
-    assert "BroadcastNestedLoopJoin" in p3  # k=√N centroid assignment
-    p4 = q["emb_near_dup_pairs"](spark, SF_DIR)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "TakeOrderedAndProject" in p4
-    assert "CartesianProduct" not in p4  # candidates via bucket equi-join
-
-
-def test_ann_ivf_recall_vs_brute_force(spark):
-    """The k-means IVF index must stay a good index, not just a correct
-    query: >= 9 of the brute-force top-10 must survive the nprobe cell
-    pruning at sf0.01."""
-    q = entrymod.queries()
-    brute = {r["vec_id"] for r in q["ann_cosine_topk"](spark, SF_DIR)
-             .collect()}
-    ivf = {r["vec_id"] for r in q["ann_ivf_topk"](spark, SF_DIR)
-           .collect()}
-    assert len(brute & ivf) >= 9
 
 
 def test_extract_near_dups_plan_shuffle_free(spark):
@@ -234,35 +210,13 @@ def test_new_doc_ops_plans_are_jvm_only(spark):
     from crystal_html5_spark.sparkjob.queries import QUERIES
 
     for name in ("docs_unigram_logprob", "docs_shingle_hll",
-                 "ann_lsh_buckets", "ann_lsh_topk", "emb_near_dup_pairs"):
+                 "ann_lsh_topk"):
         plan = QUERIES[name](spark, SF_DIR)._jdf.queryExecution() \
             .executedPlan().toString()
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
         assert "PythonUDF" not in plan, name
         assert "MapInArrow" not in plan, name
-
-
-def test_ann_pq_recall_vs_exact_l2(spark):
-    """The PQ shortlist + exact-rerank must stay a good index: >= 8 of
-    the exact integer-L2 top-10 must survive the 4-byte-code ADC
-    shortlist at this sf (measured 10/10; slack for fixture drift)."""
-    from crystal_html5_spark.sparkjob.queries import load_views
-
-    load_views(spark, SF_DIR)
-    exact = {r["vec_id"] for r in spark.sql("""
-WITH vecs AS (SELECT vec_id, transform(embedding,
-  x -> CAST(FLOOR(CAST(x AS DOUBLE) * 100000) AS BIGINT)) AS vq
-  FROM embeddings),
-q AS (SELECT vq AS qv FROM vecs WHERE vec_id = 0)
-SELECT v.vec_id FROM vecs v CROSS JOIN q WHERE v.vec_id <> 0
-ORDER BY aggregate(zip_with(v.vq, q.qv, (u, w) -> (u - w) * (u - w)),
-                   CAST(0 AS BIGINT), (acc, u) -> acc + u) ASC, v.vec_id
-LIMIT 10""").collect()}
-    pq = {r["vec_id"]
-          for r in entrymod.queries()["ann_pq_topk"](spark, SF_DIR)
-          .collect()}
-    assert len(exact & pq) >= 8
 
 
 def test_anchor_texts_plan_is_topk(spark):
@@ -287,16 +241,6 @@ def test_shard_assign_plan_no_global_sort_before_window(spark):
     # finding: the first version inspected the text above the Window,
     # which can never contain the child exchange — vacuous)
     assert "SinglePartition" not in plan
-
-
-def test_range_join_plan_has_no_nested_loop(spark):
-    """The bucketed point-in-interval join must not fall back to the
-    naive BroadcastNestedLoopJoin shape (every event x every window):
-    the bucket equi-join carries the work."""
-    plan = entrymod.queries()["events_range_join"](spark, SF_DIR) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_min_tokens_rlike_guard(spark):

@@ -1,6 +1,6 @@
 """No query reads or leaves hidden session state.  Intermediate frames
 are bound as ``spark.sql`` arguments, so a session that ran the queries
-holds only the ten sf TABLES views; and ``load_views`` re-registers
+holds only the five sf TABLES views; and ``load_views`` re-registers
 those on every call, so a view a caller registered under one of their
 names never reaches a query."""
 
@@ -34,7 +34,7 @@ def test_queries_leave_only_the_table_views(spark):
     q = entrymod.queries()
     for name in ("extract_line_dedup", "extract_anchor_texts",
                  "docs_curation_verdict", "extract_content_blocks",
-                 "emb_near_dup_pairs", "extract_near_dups"):
+                 "extract_near_dups"):
         q[name](spark, SF).count()
     names = {t.name for t in spark.catalog.listTables()}
     assert names <= set(TABLES), sorted(names - set(TABLES))
