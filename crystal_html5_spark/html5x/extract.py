@@ -6,7 +6,9 @@ byte-identical-per-url target.
 
 ``main_text`` is the boilerplate-stripped variant (north_star): the same
 document-order traversal with script/style/template/nav/header/footer/
-aside/form subtrees (and comments) removed.
+aside/form subtrees (and comments) removed.  ``text_fields`` produces
+both in one walk; ``main_text_selector`` is the configurable-policy
+variant.
 """
 
 from __future__ import annotations
@@ -22,29 +24,6 @@ BOILERPLATE_TAGS = frozenset((
     "script", "style", "template", "nav", "header", "footer", "aside",
     "form", "noscript", "iframe",
 ))
-
-
-def main_text(doc: Node) -> str:
-    """Document-order text with boilerplate subtrees stripped."""
-    out: list[str] = []
-    stack = [doc]
-    while stack:
-        n = stack.pop()
-        t = n.type
-        if t == TEXT_NODE:
-            out.append(n.data)
-            continue
-        if t == COMMENT_NODE:
-            continue
-        if n.namespace == "" and n.data in BOILERPLATE_TAGS:
-            continue
-        kids = []
-        c = n.first_child
-        while c is not None:
-            kids.append(c)
-            c = c.next_sibling
-        stack.extend(reversed(kids))
-    return "".join(out)
 
 
 DEFAULT_DROP_SELECTOR = (
@@ -65,7 +44,7 @@ def main_text_selector(doc: Node,
     ``drop_selector`` (any CSS the engine supports — classes like
     ``.sidebar``, attributes like ``[role=banner]``) are stripped, then
     text serializes in document order.  The tag-set fast path
-    (``main_text``) is the production default; this variant makes the
+    (``text_fields``) is the production default; this variant makes the
     boilerplate policy configurable per job."""
     from .css import compile_selector
 

@@ -15,14 +15,17 @@ views, so a framing fix lands once — the full crawl-corpus triad.
 Compression matches the corpus-native layout: ``.warc.gz`` files are a
 concatenation of per-record gzip members (each record its own member —
 what makes records independently seekable and files splittable at
-scale).  The parser auto-detects the gzip magic and iterates members;
-the writers emit deterministic members (mtime=0) when ``gz=True``.
+scale).  One member walk (``_members``) inflates them for both the
+strict parsers and the salvaging reader; one in-memory segment writer
+(``_segment``) frames every format, emitting deterministic members
+(mtime=0) when ``gz=True``.
 
 WARC-Date follows WARC/1.1 leniency: fractional seconds are accepted on
 parse and emitted when the timestamp has microseconds, so sub-second
 capture times round-trip exactly (they decide latest-capture dedup
 winners on ties).  A record with an unparsable date is skipped — one bad
-record must not abort a multi-GB segment (and kill its Spark task).
+record must not abort a multi-GB segment (and kill its Spark task) — and
+the salvaging reader counts the skip as a drop.
 
 Spark integration mirrors the scale pattern for raw-byte corpora: one
 WARC file per input split read as ``binaryFile`` (a real deployment
@@ -36,9 +39,14 @@ from __future__ import annotations
 
 import datetime as dt
 import gzip as _gzip
+from itertools import chain
 
 _CRLF = b"\r\n"
 _GZIP_MAGIC = b"\x1f\x8b"
+# warcinfo blocks: the leading record of each format's segments
+WARC_INFO = b"software: spark-graft\r\n"
+WAT_INFO = b"format: WAT\r\n"
+WET_INFO = b"format: WET\r\n"
 
 
 class WarcError(ValueError):
@@ -79,6 +87,15 @@ def _member(rec: bytes, gz: bool) -> bytes:
     return _gzip.compress(rec, 6, mtime=0) if gz else rec
 
 
+def _segment(records, warcinfo: bytes, gz: bool) -> bytes:
+    """One in-memory segment: a ``warcinfo`` record, then each record
+    of ``records``, every one its own member when ``gz``."""
+    out = bytearray(_member(_warcinfo_record(warcinfo), gz))
+    for rec in records:
+        out += _member(rec, gz)
+    return bytes(out)
+
+
 def _warcinfo_record(warcinfo: bytes) -> bytes:
     return _record_bytes(
         [(b"WARC-Type", b"warcinfo"),
@@ -109,7 +126,7 @@ def _conversion_record(url: str, ts: dt.datetime, text: bytes) -> bytes:
     ], text)
 
 
-def write_warc(rows, warcinfo: bytes = b"software: spark-graft\r\n",
+def write_warc(rows, warcinfo: bytes = WARC_INFO,
                gz: bool = False) -> bytes:
     """Serialize (url, warc_ts datetime, html bytes) rows as WARC/1.0.
 
@@ -151,24 +168,21 @@ def _metadata_record(url: str, ts: dt.datetime, payload: dict) -> bytes:
     ], block)
 
 
-def write_wat(rows, warcinfo: bytes = b"format: WAT\r\n",
+def write_wat(rows, warcinfo: bytes = WAT_INFO,
               gz: bool = False) -> bytes:
     """Serialize (url, warc_ts, html_meta dict) rows as WAT — the WARC
     variant real pipelines emit for per-page metadata (titles, link
     graphs): ``metadata`` records with a JSON envelope block, preceded
     by a ``warcinfo`` record, per the Common-Crawl-published layout."""
-    out = bytearray(_member(_warcinfo_record(warcinfo), gz))
-    for url, ts, meta in rows:
-        out.extend(_member(_metadata_record(url, ts, meta), gz))
-    return bytes(out)
+    return _segment((_metadata_record(*r) for r in rows), warcinfo, gz)
 
 
-def parse_wat(data: bytes):
+def parse_wat(data: bytes, dropped=None):
     """Yield (url, warc_ts, html_meta dict) from WAT metadata records
     (same record grammar; the block is the JSON envelope)."""
     import json
 
-    for url, ts, block in _typed_records(data, b"metadata"):
+    for url, ts, block in _wat_blocks(data, dropped):
         try:
             env = json.loads(block)
         except ValueError as exc:
@@ -180,16 +194,13 @@ def parse_wat(data: bytes):
         yield url, ts, meta
 
 
-def write_wet(rows, warcinfo: bytes = b"format: WET\r\n",
+def write_wet(rows, warcinfo: bytes = WET_INFO,
               gz: bool = False) -> bytes:
     """Serialize (url, warc_ts, text bytes) rows as WET — the WARC
     variant real pipelines emit for extracted text: ``conversion``
     records whose block is the raw text (no HTTP envelope), preceded by
     a ``warcinfo`` record, per the Common-Crawl-published WET layout."""
-    out = bytearray(_member(_warcinfo_record(warcinfo), gz))
-    for url, ts, text in rows:
-        out.extend(_member(_conversion_record(url, ts, text), gz))
-    return bytes(out)
+    return _segment((_conversion_record(*r) for r in rows), warcinfo, gz)
 
 
 # ---------------------------------------------------------------- parse
@@ -242,22 +253,22 @@ def _iter_plain_records(data: bytes):
         yield headers, block
 
 
-def _iter_records(data: bytes):
-    """Yield (headers, block) from WARC bytes, plain or .warc.gz.
+def _members(data: bytes, dropped=None):
+    """Yield the inflated bytes of each gzip member of ``data``, or
+    ``data`` itself when it is plain.
 
-    Gzip input is walked member by member (per-record members, per the
-    corpus layout) so a reader never inflates more than one record at a
-    time; a member holding several records still parses."""
+    The walk feeds the decompressor bounded zero-copy chunks of a
+    memoryview: feeding it ``data[pos:]`` per member would copy the
+    whole tail once per record (O(n^2) on the per-record-member layout
+    this module itself recommends — measured quadratic), so it stays
+    linear and the inflate buffer stays one member big.  A corrupt or
+    truncated member raises WarcError; with ``dropped`` it is counted
+    instead and the walk resyncs on the next gzip header."""
     if data[:2] != _GZIP_MAGIC:
-        yield from _iter_plain_records(data)
+        yield data
         return
     import zlib
 
-    # Bounded-chunk member walk over a memoryview cursor: feeding the
-    # decompressor `data[pos:]` per member would copy the whole tail
-    # once per record (O(n^2) on the per-record-member layout this
-    # module itself recommends — measured quadratic); zero-copy slices
-    # keep it linear and the inflate buffer stays one member big.
     mv = memoryview(data)
     chunk_size = 1 << 18
     pos = 0
@@ -265,29 +276,36 @@ def _iter_records(data: bytes):
     while pos < n:
         d = zlib.decompressobj(31)  # wbits=31: gzip header + trailer
         out = bytearray()
-        start = pos
-        while pos < n and not d.eof:
-            chunk = mv[pos:pos + chunk_size]
-            try:
+        end = pos
+        error = "truncated gzip member"
+        try:
+            while end < n and not d.eof:
+                chunk = mv[end:end + chunk_size]
                 out += d.decompress(chunk)
-            except zlib.error as exc:
-                raise WarcError("corrupt gzip member") from exc
-            pos += len(chunk)
-            if d.eof:
-                pos -= len(d.unused_data)  # rewind past-member bytes
-                out += d.flush()
-        if not d.eof:
-            raise WarcError("truncated gzip member")
-        if pos <= start:
-            raise WarcError("empty gzip member")
-        yield from _iter_plain_records(bytes(out))
+                end += len(chunk)
+        except zlib.error:
+            error = "corrupt gzip member"
+        if d.eof:
+            end -= len(d.unused_data)  # rewind past-member bytes
+            yield bytes(out + d.flush())
+        elif dropped is None:
+            raise WarcError(error)
+        else:
+            dropped()
+            # resync on the next gzip header (magic + deflate method)
+            end = data.find(_GZIP_MAGIC + b"\x08", pos + 1)
+            if end == -1:
+                return
+        pos = end
 
 
-def _typed_records(data: bytes, warc_type: bytes):
-    """Shared WARC/WET view: records of ``warc_type`` as
-    (url, warc_ts datetime, block).  Records with an unparsable
-    WARC-Date are skipped — one bad record must not abort the segment."""
-    for headers, block in _iter_records(data):
+def _typed_records(data: bytes, warc_type: bytes, dropped=None):
+    """Shared WARC/WAT/WET view: records of ``warc_type`` as
+    (url, warc_ts datetime, block).  A record with an unparsable
+    WARC-Date is skipped — one bad record must not abort the segment —
+    and reported to ``dropped`` when given."""
+    for headers, block in chain.from_iterable(
+            map(_iter_plain_records, _members(data))):
         if headers.get(b"warc-type") != warc_type:
             continue
         url = headers.get(b"warc-target-uri", b"").decode(
@@ -299,16 +317,18 @@ def _typed_records(data: bytes, warc_type: bytes):
             try:  # WARC/1.1 fractional seconds
                 ts = dt.datetime.strptime(date, "%Y-%m-%dT%H:%M:%S.%fZ")
             except ValueError:
+                if dropped is not None:
+                    dropped()
                 continue
         yield url, ts, block
 
 
-def parse_warc(data: bytes):
+def parse_warc(data: bytes, dropped=None):
     """Yield (url, warc_ts datetime, html bytes) from WARC bytes
     (plain or per-record-gzip .warc.gz).  Skips non-response records
-    and records with unparsable dates; raises WarcError on structural
-    damage."""
-    for url, ts, block in _typed_records(data, b"response"):
+    and records with unparsable dates (each reported to ``dropped``
+    when given); raises WarcError on structural damage."""
+    for url, ts, block in _typed_records(data, b"response", dropped):
         # Split the HTTP response block: body follows the first CRLFCRLF.
         hdr_end = block.find(_CRLF + _CRLF)
         if hdr_end == -1:
@@ -316,13 +336,19 @@ def parse_warc(data: bytes):
         yield url, ts, block[hdr_end + 4:]
 
 
-def parse_wet(data: bytes):
+def parse_wet(data: bytes, dropped=None):
     """Yield (url, warc_ts, text bytes) from WET conversion records
     (same record grammar as parse_warc; the block IS the text)."""
-    yield from _typed_records(data, b"conversion")
+    yield from _typed_records(data, b"conversion", dropped)
 
 
-def write_warc_indexed(rows, warcinfo: bytes = b"software: spark-graft\r\n",
+def _wat_blocks(data: bytes, dropped=None):
+    """Yield (url, warc_ts, JSON envelope bytes) from WAT metadata
+    records, undecoded: the Spark side decodes them with from_json."""
+    yield from _typed_records(data, b"metadata", dropped)
+
+
+def write_warc_indexed(rows, warcinfo: bytes = WARC_INFO,
                        gz: bool = True):
     """write_warc plus a CDX-style record index: returns
     (segment_bytes, [(url, warc_ts, offset, length), ...]).
@@ -356,7 +382,7 @@ PAGES_DDL = "url string, warc_ts timestamp, html binary"
 
 
 def _salvage_records(blob: bytes, stats: dict | None = None,
-                     parse=None):
+                     parse=parse_warc):
     """Salvage as much of a damaged segment as the layout allows, never
     raising: at 100 TB a corruption must cost the unreadable records,
     not the Spark task (the per-page analog — malformed page becomes an
@@ -366,59 +392,20 @@ def _salvage_records(blob: bytes, stats: dict | None = None,
     point of that layout: a corrupt member is skipped by resyncing on
     the next gzip magic and every later member still parses.  Plain
     segments keep the prefix before the first framing error (framing
-    cannot be trusted past it).  ``stats`` (if given) counts
-    ``drops`` so callers can surface the loss instead of hiding it.
-    ``parse`` selects the record view (parse_warc default; parse_wet
-    for WET segments)."""
-    if parse is None:
-        parse = parse_warc
-
+    cannot be trusted past it).  ``stats`` (if given) counts ``drops``
+    — damaged members, framing errors and unparsable-date records — so
+    callers can surface the loss instead of hiding it.  ``parse``
+    selects the record view (parse_warc default; parse_wet for WET
+    segments)."""
     def dropped() -> None:
         if stats is not None:
             stats["drops"] = stats.get("drops", 0) + 1
 
-    if blob[:2] != _GZIP_MAGIC:
+    for plain in _members(blob, dropped):
         try:
-            yield from parse(blob)
+            yield from parse(plain, dropped)
         except WarcError:
-            dropped()
-        return
-    import zlib
-
-    mv = memoryview(blob)
-    n = len(blob)
-    pos = 0
-    chunk_size = 1 << 18
-    while pos < n:
-        d = zlib.decompressobj(31)
-        out = bytearray()
-        mpos = pos
-        ok = True
-        while mpos < n and not d.eof:
-            chunk = mv[mpos:mpos + chunk_size]
-            try:
-                out += d.decompress(chunk)
-            except zlib.error:
-                ok = False
-                break
-            mpos += len(chunk)
-            if d.eof:
-                mpos -= len(d.unused_data)
-                out += d.flush()
-        if not ok or not d.eof or mpos <= pos:
-            # Corrupt/truncated member: resync on the next gzip header
-            # (magic + deflate method byte) and drop just this member.
-            dropped()
-            nxt = blob.find(_GZIP_MAGIC + b"\x08", pos + 1)
-            if nxt == -1:
-                return
-            pos = nxt
-            continue
-        pos = mpos
-        try:
-            yield from parse(bytes(out))
-        except WarcError:
-            dropped()  # framing damage inside one inflated member
+            dropped()  # framing damage: keep the member's parsed prefix
 
 
 def _record_batches(parse, payload_col: str, on_error: str):
@@ -455,8 +442,8 @@ def _record_batches(parse, payload_col: str, on_error: str):
                     # executor stderr carries the per-segment count.
                     print(
                         f"[warcio] salvage: dropped {stats['drops']}"
-                        f" damaged member(s)/span(s) in a"
-                        f" {len(raw)}-byte segment",
+                        f" damaged member(s)/span(s) or undated record(s)"
+                        f" in a {len(raw)}-byte segment",
                         file=sys.stderr,
                     )
             yield pa.RecordBatch.from_arrays(
@@ -465,6 +452,22 @@ def _record_batches(parse, payload_col: str, on_error: str):
                  pa.array(payloads, pa.binary())],
                 names=["url", "warc_ts", payload_col],
             )
+
+    return batches
+
+
+def segment_batches(cols: tuple, make_record, warcinfo: bytes, gz: bool):
+    """mapInArrow body factory, the write-side twin of _record_batches:
+    each input batch's ``cols`` rows become ``make_record`` records of
+    one in-memory segment, one ``content binary`` row per batch."""
+    def batches(iterator):
+        import pyarrow as pa
+
+        for batch in iterator:
+            rows = zip(*(batch.column(c).to_pylist() for c in cols))
+            seg = _segment((make_record(*r) for r in rows), warcinfo, gz)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([seg], pa.binary())], names=["content"])
 
     return batches
 
@@ -597,7 +600,7 @@ def write_wet_sink(extracted, out_dir: str, gz: bool = False) -> None:
     .warc.wet(.gz) segment per partition (see _segment_sink)."""
     _segment_sink(extracted, out_dir,
                   ".warc.wet.gz" if gz else ".warc.wet",
-                  b"format: WET\r\n", ("url", "warc_ts", "text"),
+                  WET_INFO, ("url", "warc_ts", "text"),
                   _wet_record, gz)
 
 
@@ -617,8 +620,7 @@ def write_wat_sink(meta_df, out_dir: str, gz: bool = True) -> None:
     segment-per-partition shape as the WET sink."""
     _segment_sink(meta_df, out_dir,
                   ".warc.wat.gz" if gz else ".warc.wat",
-                  b"format: WAT\r\n",
-                  ("url", "warc_ts", "title", "links"),
+                  WAT_INFO, ("url", "warc_ts", "title", "links"),
                   _wat_record, gz)
 
 
@@ -765,6 +767,5 @@ def write_warc_sink_indexed(pages, out_dir: str, gz: bool = True) -> None:
         _os.replace(tmp, final + ".cdxj")
 
     _segment_sink(pages, out_dir, ".warc.gz" if gz else ".warc",
-                  b"software: spark-graft\r\n",
-                  ("url", "warc_ts", "html"), make_record, gz,
+                  WARC_INFO, ("url", "warc_ts", "html"), make_record, gz,
                   index_fn=index_fn, sidecar=sidecar)

@@ -9,12 +9,14 @@ Exit code 0 only if every query passes.
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 
 import duckdb
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo")
+# Verify the checkout this script lives in (sys.path[0] is scripts/).
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as E  # noqa: E402
 from crystal_html5_spark.sparkjob.queries import TABLES  # noqa: E402

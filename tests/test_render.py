@@ -77,8 +77,8 @@ def test_parse_render_roundtrip_stable():
 def test_selector_driven_extraction():
     from crystal_html5_spark.html5x.extract import (
         DEFAULT_DROP_SELECTOR,
-        main_text,
         main_text_selector,
+        text_fields,
     )
 
     html = (
@@ -88,8 +88,9 @@ def test_selector_driven_extraction():
         "<footer>(c)</footer></body></html>"
     )
     doc = parse(html)
-    # default selector == tag-set fast path
-    assert main_text_selector(doc, DEFAULT_DROP_SELECTOR) == main_text(doc)
+    # default selector == the production tag-set walk's main text
+    assert (main_text_selector(doc, DEFAULT_DROP_SELECTOR)
+            == text_fields(doc)[1])
     # custom policy: also strip .ad and [role=note]
     custom = main_text_selector(
         doc, DEFAULT_DROP_SELECTOR + ", .ad, [role=note]"

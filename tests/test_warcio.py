@@ -326,6 +326,7 @@ def test_property_round_trip_hypothesis():
     from hypothesis import strategies as st
 
     from crystal_html5_spark.sparkjob.warcio import (
+        _salvage_records,
         parse_wet,
         write_wet,
     )
@@ -351,6 +352,11 @@ def test_property_round_trip_hypothesis():
     def prop(rows, gz):
         blob = write_warc(rows, gz=gz)
         assert list(parse_warc(blob)) == rows
+        # one member walk: on an undamaged segment the salvaging reader
+        # yields exactly what the strict parser does, and drops nothing
+        stats = {}
+        assert list(_salvage_records(blob, stats)) == list(parse_warc(blob))
+        assert stats == {}
         wet = write_wet(rows, gz=gz)
         assert list(parse_wet(wet)) == rows
 
@@ -408,6 +414,34 @@ def test_salvage_recovers_later_gzip_members():
     # records 0, 2, 3 survive; only the damaged member's record is lost
     assert [g[0] for g in got] == [ROWS[0][0], ROWS[2][0], ROWS[3][0]]
     assert got == [ROWS[0], ROWS[2], ROWS[3]]
+
+
+def test_salvage_counts_unparsable_date_and_corrupt_member():
+    """Every record the salvaging reader loses is counted: a record
+    skipped for an unparsable WARC-Date is one drop, a bit-flipped gzip
+    member another, and every other record survives."""
+    import gzip
+
+    from crystal_html5_spark.sparkjob.warcio import (
+        _salvage_records,
+        write_warc_indexed,
+    )
+
+    blob, idx = write_warc_indexed(ROWS, gz=True)
+    # record 0 re-framed with a date that does not parse; record 2's
+    # member bit-flipped
+    (_, _, off0, ln0), _, (_, _, off2, ln2), _ = idx
+    undated = gzip.compress(
+        gzip.decompress(blob[off0:off0 + ln0]).replace(
+            b"WARC-Date: 2024-01-01T00:00:00Z", b"WARC-Date: not-a-date"),
+        6, mtime=0)
+    flipped = bytearray(blob[off2:off2 + ln2])
+    flipped[ln2 // 2] ^= 0xFF
+    damaged = (blob[:off0] + undated + blob[off0 + ln0:off2]
+               + bytes(flipped) + blob[off2 + ln2:])
+    stats = {}
+    assert list(_salvage_records(damaged, stats)) == [ROWS[1], ROWS[3]]
+    assert stats == {"drops": 2}
 
 
 def test_read_wet_text_round_trips_sink_output(spark, tmp_path):
