@@ -42,9 +42,9 @@ from .warcio import (
     WAT_INFO,
     _record_batches,
     _response_record,
-    _wat_blocks,
     _wat_record,
     parse_warc,
+    read_wat_metadata,
     segment_batches,
 )
 
@@ -2612,14 +2612,6 @@ def _warc_extract_pages(spark, sf_dir: str, gz: bool = False) -> DataFrame:
     return _extract_summary(spark, restored)
 
 
-# The WAT envelope fields the round-trip reads, decoded by from_json.
-_WAT_ENVELOPE_DDL = (
-    "Envelope struct<`Payload-Metadata`: struct<`HTTP-Response-Metadata`:"
-    " struct<`HTML-Metadata`: struct<Head: struct<Title: string>,"
-    " Links: array<struct<url: string>>>>>>"
-)
-
-
 def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
     """WAT metadata round-trip (the third leg of the Common Crawl
     WARC/WAT/WET triad): per page, the engine extracts the title
@@ -2637,17 +2629,10 @@ def _wat_extract_meta(spark, sf_dir: str) -> DataFrame:
         .select(*cols) \
         .mapInArrow(segment_batches(cols, _wat_record, WAT_INFO, True),
                     "content binary")
-    restored = wat.mapInArrow(
-        _record_batches(_wat_blocks, "envelope", "fail"),
-        "url string, warc_ts timestamp, envelope binary")
-    meta = F.from_json(
-        F.col("envelope").cast("string"), _WAT_ENVELOPE_DDL,
-        {"mode": "FAILFAST"},
-    )["Envelope"]["Payload-Metadata"]["HTTP-Response-Metadata"][
-        "HTML-Metadata"]
+    meta = F.col("meta")
     links = meta["Links"]
     return (
-        restored.select(
+        read_wat_metadata(wat).select(
             "url",
             meta["Head"]["Title"].alias("title"),
             F.size(links).alias("n_links"),

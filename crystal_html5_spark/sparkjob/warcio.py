@@ -87,12 +87,18 @@ def _member(rec: bytes, gz: bool) -> bytes:
     return _gzip.compress(rec, 6, mtime=0) if gz else rec
 
 
-def _segment(records, warcinfo: bytes, gz: bool) -> bytes:
+def _segment(records, warcinfo: bytes, gz: bool,
+             spans: list | None = None) -> bytes:
     """One in-memory segment: a ``warcinfo`` record, then each record
-    of ``records``, every one its own member when ``gz``."""
+    of ``records``, every one its own member when ``gz``.  ``spans``,
+    when given, receives each record's (offset, length) in the
+    segment."""
     out = bytearray(_member(_warcinfo_record(warcinfo), gz))
     for rec in records:
-        out += _member(rec, gz)
+        rec = _member(rec, gz)
+        if spans is not None:
+            spans.append((len(out), len(rec)))
+        out += rec
     return bytes(out)
 
 
@@ -132,9 +138,8 @@ def write_warc(rows, warcinfo: bytes = WARC_INFO,
 
     Emits a leading ``warcinfo`` record like real crawler output, then
     one ``response`` record per row.  ``gz=True`` emits each record as
-    its own gzip member (the .warc.gz layout Common Crawl publishes).
-    One serialization loop serves both this and the indexed writer."""
-    return write_warc_indexed(rows, warcinfo, gz)[0]
+    its own gzip member (the .warc.gz layout Common Crawl publishes)."""
+    return _segment((_response_record(*r) for r in rows), warcinfo, gz)
 
 
 def _metadata_record(url: str, ts: dt.datetime, payload: dict) -> bytes:
@@ -168,6 +173,15 @@ def _metadata_record(url: str, ts: dt.datetime, payload: dict) -> bytes:
     ], block)
 
 
+# The envelope fields read_wat_metadata decodes, as from_json's schema:
+# the same path _metadata_record writes and parse_wat reads.
+WAT_ENVELOPE_DDL = (
+    "Envelope struct<`Payload-Metadata`: struct<`HTTP-Response-Metadata`:"
+    " struct<`HTML-Metadata`: struct<Head: struct<Title: string>,"
+    " Links: array<struct<url: string>>>>>>"
+)
+
+
 def write_wat(rows, warcinfo: bytes = WAT_INFO,
               gz: bool = False) -> bytes:
     """Serialize (url, warc_ts, html_meta dict) rows as WAT — the WARC
@@ -177,12 +191,12 @@ def write_wat(rows, warcinfo: bytes = WAT_INFO,
     return _segment((_metadata_record(*r) for r in rows), warcinfo, gz)
 
 
-def parse_wat(data: bytes, dropped=None):
+def parse_wat(data: bytes):
     """Yield (url, warc_ts, html_meta dict) from WAT metadata records
     (same record grammar; the block is the JSON envelope)."""
     import json
 
-    for url, ts, block in _wat_blocks(data, dropped):
+    for url, ts, block in _wat_blocks(data):
         try:
             env = json.loads(block)
         except ValueError as exc:
@@ -287,7 +301,8 @@ def _members(data: bytes, dropped=None):
             error = "corrupt gzip member"
         if d.eof:
             end -= len(d.unused_data)  # rewind past-member bytes
-            yield bytes(out + d.flush())
+            out += d.flush()
+            yield bytes(out)
         elif dropped is None:
             raise WarcError(error)
         else:
@@ -342,10 +357,10 @@ def parse_wet(data: bytes, dropped=None):
     yield from _typed_records(data, b"conversion", dropped)
 
 
-def _wat_blocks(data: bytes, dropped=None):
+def _wat_blocks(data: bytes):
     """Yield (url, warc_ts, JSON envelope bytes) from WAT metadata
-    records, undecoded: the Spark side decodes them with from_json."""
-    yield from _typed_records(data, b"metadata", dropped)
+    records, undecoded: read_wat_metadata decodes them with from_json."""
+    yield from _typed_records(data, b"metadata")
 
 
 def write_warc_indexed(rows, warcinfo: bytes = WARC_INFO,
@@ -358,13 +373,12 @@ def write_warc_indexed(rows, warcinfo: bytes = WARC_INFO,
     fetch ONE record from a multi-GB segment with a byte-range request
     (how the public crawl indexes serve single captures at corpus
     scale) instead of scanning the file."""
-    out = bytearray(_member(_warcinfo_record(warcinfo), gz))
-    index = []
-    for url, ts, html in rows:
-        rec = _member(_response_record(url, ts, html), gz)
-        index.append((url, ts, len(out), len(rec)))
-        out.extend(rec)
-    return bytes(out), index
+    rows = list(rows)
+    spans: list = []
+    seg = _segment((_response_record(*r) for r in rows), warcinfo, gz,
+                   spans)
+    return seg, [(url, ts, off, n)
+                 for (url, ts, _), (off, n) in zip(rows, spans)]
 
 
 def read_warc_record(data, offset: int, length: int):
@@ -501,6 +515,23 @@ def read_wet_text(spark, wet_dir: str, on_error: str = "salvage"):
     return files.mapInArrow(
         _record_batches(parse_wet, "text", on_error),
         "url string, warc_ts timestamp, text binary")
+
+
+def read_wat_metadata(segments):
+    """WAT segments (a ``content binary`` frame) -> (url, warc_ts, meta):
+    each metadata record's HTML-Metadata struct (Head.Title,
+    Links[].url), its JSON envelope decoded in SQL by from_json.  Damage
+    fails the task: framing in the record walk, a malformed envelope
+    under FAILFAST."""
+    from pyspark.sql import functions as F
+
+    raw = segments.mapInArrow(
+        _record_batches(_wat_blocks, "envelope", "fail"),
+        "url string, warc_ts timestamp, envelope binary")
+    env = F.from_json(F.col("envelope").cast("string"), WAT_ENVELOPE_DDL,
+                      {"mode": "FAILFAST"})
+    return raw.select("url", "warc_ts", env["Envelope"]["Payload-Metadata"][
+        "HTTP-Response-Metadata"]["HTML-Metadata"].alias("meta"))
 
 
 def stream_warc_pages(spark, warc_dir: str, on_error: str = "salvage"):
