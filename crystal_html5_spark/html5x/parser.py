@@ -41,10 +41,11 @@ from .tokenizer import Attribute, Token, Tokenizer
 WHITE_SPACE = " \t\r\n\f"
 WHITE_SPACE_NULL = WHITE_SPACE + "\x00"
 
-# Scope (parser.cr:13-21)
+# Scope (parser.cr:13-21).  Button scope (2) is only ever asked about
+# "p", and each open element carries that answer (Parser.add_child), so
+# it has no _scope_idx loop.
 DEFAULT_SCOPE = 0
 LIST_ITEM_SCOPE = 1
-BUTTON_SCOPE = 2
 TABLE_SCOPE = 3
 TABLE_ROW_SCOPE = 4
 TABLE_BODY_SCOPE = 5
@@ -58,8 +59,7 @@ DEFAULT_SCOPE_STOP_TAGS = {
     "svg": frozenset(("desc", "foreignObject", "title")),
 }
 _STOP_TAGS_EMPTY_NS = DEFAULT_SCOPE_STOP_TAGS[""]
-# Button scope = default scope stops + "button" (one fused set so the
-# specialized _scope_idx loop does a single membership test per frame).
+# Button scope = default scope stops + "button", in the HTML namespace.
 _STOP_TAGS_BUTTON = frozenset(_STOP_TAGS_EMPTY_NS) | {"button"}
 
 _IMPLIED_END_TAGS = frozenset((
@@ -304,26 +304,7 @@ class Parser:
                     if stop and tag_atom in stop:
                         return -1
             return -1
-        if s == BUTTON_SCOPE:
-            # Specialized loop for the second-hottest scope kind (fired
-            # by every block start via pop_until(BUTTON_SCOPE, "p")):
-            # one frozenset membership per frame instead of the general
-            # loop's scope-variant branch chain.  Semantics identical.
-            stop_button = _STOP_TAGS_BUTTON
-            for i in range(len(oe) - 1, -1, -1):
-                n = oe[i]
-                tag_atom = n.data_atom
-                if n.namespace == "":
-                    if tag_atom in match_tags:
-                        return i
-                    if tag_atom in stop_button:
-                        return -1
-                else:
-                    stop = DEFAULT_SCOPE_STOP_TAGS.get(n.namespace)
-                    if stop and tag_atom in stop:
-                        return -1
-            return -1
-        check_stop = s <= BUTTON_SCOPE  # DEFAULT/LIST_ITEM/BUTTON are 0,1,2
+        check_stop = s == LIST_ITEM_SCOPE  # default stops + ol/ul
         # The "" namespace is ~100% of frames on real pages: resolve its
         # stop set once instead of a per-frame dict lookup.
         stop_empty = _STOP_TAGS_EMPTY_NS
@@ -335,9 +316,6 @@ class Parser:
                     return i
                 if s == LIST_ITEM_SCOPE:
                     if tag_atom in ("ol", "ul"):
-                        return -1
-                elif s == BUTTON_SCOPE:
-                    if tag_atom == "button":
                         return -1
                 elif s == TABLE_SCOPE:
                     if tag_atom in ("html", "table", "template"):
@@ -362,6 +340,41 @@ class Parser:
             del self.oe[i:]
             return True
         return False
+
+    # "p in button scope" is a read of the current node's stored answer.
+    # Popping from the top leaves every answer below it true; the few
+    # sites that change the stack elsewhere, or a node's namespace after
+    # the push, call _reset_p_in_button_scope from there upward.
+
+    def p_in_button_scope(self) -> bool:
+        oe = self.oe
+        return oe[-1].p_in_button_scope != -1 if oe else False
+
+    def pop_p_in_button_scope(self) -> None:
+        """pop_until(button scope, "p")."""
+        oe = self.oe
+        if oe:
+            i = oe[-1].p_in_button_scope
+            if i != -1:
+                del oe[i:]
+
+    def _reset_p_in_button_scope(self, start: int) -> None:
+        """Recompute the stored answers of oe[start:], bottom up."""
+        oe = self.oe
+        ans = oe[start - 1].p_in_button_scope if start > 0 else -1
+        for i in range(start, len(oe)):
+            n = oe[i]
+            a = n.data_atom
+            if n.namespace == "":
+                if a == "p":
+                    ans = i
+                elif a in _STOP_TAGS_BUTTON:
+                    ans = -1
+            else:
+                stop = DEFAULT_SCOPE_STOP_TAGS.get(n.namespace)
+                if stop and a in stop:
+                    ans = -1
+            n.p_in_button_scope = ans
 
     def clear_stack_to_context(self, s: int) -> None:
         oe = self.oe
@@ -411,7 +424,17 @@ class Parser:
         else:
             self.top().append_child(n)
         if n.type == ELEMENT_NODE:
-            self.oe.append(n)
+            # Every element arrives here in the HTML namespace;
+            # parse_foreign_content re-sets the top after changing it.
+            oe = self.oe
+            a = n.data_atom
+            if a == "p":
+                n.p_in_button_scope = len(oe)
+            elif a in _STOP_TAGS_BUTTON:
+                n.p_in_button_scope = -1
+            else:
+                n.p_in_button_scope = oe[-1].p_in_button_scope if oe else -1
+            oe.append(n)
 
     def should_foster_parent(self) -> bool:
         if self.foster_parenting:
@@ -524,11 +547,15 @@ class Parser:
         afe = self.afe
         if not afe:
             return
+        # Membership only, searched from the top, where an open
+        # formatting element almost always sits (Node has no __eq__, so
+        # `in` compares by identity).
+        oe = self.oe
         n = afe[-1]
-        if n.type == SCOPE_MARKER_NODE or _index(self.oe, n) != -1:
+        if n.type == SCOPE_MARKER_NODE or n in reversed(oe):
             return
         i = len(afe) - 1
-        while n.type != SCOPE_MARKER_NODE and _index(self.oe, n) == -1:
+        while n.type != SCOPE_MARKER_NODE and n not in reversed(oe):
             if i == 0:
                 i = -1
                 break
@@ -779,17 +806,17 @@ class Parser:
                         bookmark -= 1
                     continue
                 # Step 14.6
-                if _index(afe, node) == -1:
+                if ni == -1:
                     _remove(oe, node)
                     continue
                 # Step 14.7
                 clone = node.clone()
-                afe[_index(afe, node)] = clone
-                oe[_index(oe, node)] = clone
+                afe[ni] = clone
+                oe[x] = clone
                 node = clone
                 # Step 14.8
                 if last_node is furthest_block:
-                    bookmark = _index(afe, node) + 1
+                    bookmark = ni + 1
                 # Step 14.9
                 if last_node.parent is not None:
                     last_node.parent.remove_child(last_node)
@@ -816,6 +843,8 @@ class Parser:
             # Step 20
             _remove(oe, formatting_element)
             oe.insert(_index(oe, furthest_block) + 1, clone)
+            # Steps 14.6-20 changed oe from fe_index up.
+            self._reset_p_in_button_scope(fe_index)
 
     def in_body_end_tag_other(self, atom: str, tag_name: str) -> None:
         oe = self.oe
@@ -1036,11 +1065,16 @@ class Parser:
                      "noframes", "script", "style", "template", "title"):
                 h = self.head
                 if h is not None:
-                    self.oe.append(h)
+                    oe = self.oe
+                    oe.append(h)
+                    self._reset_p_in_button_scope(len(oe) - 1)
                     try:
                         return self.in_head_im()
                     finally:
-                        _remove(self.oe, h)
+                        i = _index(oe, h)
+                        if i != -1:
+                            _remove(oe, h)
+                            self._reset_p_in_button_scope(i)
             elif a == "head":
                 return True
         elif t.type == tk.END_TAG:
@@ -1713,6 +1747,7 @@ class Parser:
                 namespace = current.namespace
                 self.add_element()
                 self.top().namespace = namespace
+                self._reset_p_in_button_scope(len(self.oe) - 1)
                 if namespace != "":
                     # Don't let the tokenizer go into raw text mode in
                     # foreign content (e.g. in an SVG <title> tag).
@@ -1769,6 +1804,7 @@ def parse_fragment(data: bytes | str, context: Node | None = None,
     root = Node(type=ELEMENT_NODE, data_atom="html", data="html")
     p.doc.append_child(root)
     p.oe = [root]
+    p._reset_p_in_button_scope(0)
     if context is not None and context.data_atom == "template":
         p.template_stack.append(p.in_template_im)
     p.reset_insertion_mode()
@@ -1834,13 +1870,13 @@ def _ibs_frameset(p) -> bool:
 
 
 def _ibs_block(p) -> bool:
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     p.add_element()
     return True
 
 
 def _ibs_heading(p) -> bool:
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     n = p.top()
     if n.data_atom in _H1_H6:
         p.oe.pop()
@@ -1849,7 +1885,7 @@ def _ibs_heading(p) -> bool:
 
 
 def _ibs_pre_listing(p) -> bool:
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     p.add_element()
     # The newline, if any, is dealt with by the TextToken case.
     p.frameset_ok = False
@@ -1859,7 +1895,7 @@ def _ibs_pre_listing(p) -> bool:
 def _ibs_form(p) -> bool:
     if p.form is not None and not _contains(p.oe, "template"):
         return True
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     p.add_element()
     if not _contains(p.oe, "template"):
         p.form = p.top()
@@ -1879,7 +1915,7 @@ def _ibs_li(p) -> bool:
         elif not special_element(node):
             continue
         break
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     p.add_element()
     return True
 
@@ -1897,13 +1933,13 @@ def _ibs_dd_dt(p) -> bool:
         elif not special_element(node):
             continue
         break
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     p.add_element()
     return True
 
 
 def _ibs_plaintext(p) -> bool:
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     p.add_element()
     return True
 
@@ -1923,7 +1959,10 @@ def _ibs_a(p) -> bool:
         n = afe[i]
         if n.type == ELEMENT_NODE and n.data_atom == "a":
             p.in_body_end_tag_formatting("a", "a")
-            _remove(p.oe, n)
+            j = _index(p.oe, n)
+            if j != -1:
+                _remove(p.oe, n)
+                p._reset_p_in_button_scope(j)
             _remove(p.afe, n)
             break
         i -= 1
@@ -1957,7 +1996,7 @@ def _ibs_applet(p) -> bool:
 
 def _ibs_table(p) -> bool:
     if not p.quirks:
-        p.pop_until(BUTTON_SCOPE, "p")
+        p.pop_p_in_button_scope()
     p.add_element()
     p.frameset_ok = False
     p.im = p.in_table_im
@@ -1986,7 +2025,7 @@ def _ibs_param(p) -> bool:
 
 
 def _ibs_hr(p) -> bool:
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     p.add_element()
     p.oe.pop()
     p.acknowledge_self_closing_tag()
@@ -2009,7 +2048,7 @@ def _ibs_textarea(p) -> bool:
 
 
 def _ibs_xmp(p) -> bool:
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     p.reconstruct_active_formatting_elements()
     p.frameset_ok = False
     p.parse_generic_raw_text_elements()
@@ -2073,6 +2112,8 @@ def _ibs_math_svg(p) -> bool:
         adjust_attribute_names(t.attr, SVG_ATTRIBUTE_ADJUSTMENTS)
     adjust_foreign_attributes(t.attr)
     p.add_element()
+    # An svg or math element is neither a p nor a button-scope stop, so
+    # its stored answer holds in either namespace.
     p.top().namespace = t.data
     if p.has_self_closing_token:
         p.oe.pop()
@@ -2119,13 +2160,14 @@ def _ibe_form(p) -> bool:
             return True
         p.generate_implied_end_tags()
         _remove(p.oe, node)
+        p._reset_p_in_button_scope(i)
     return True
 
 
 def _ibe_p(p) -> bool:
-    if not p.element_in_scope(BUTTON_SCOPE, "p"):
+    if not p.p_in_button_scope():
         p.parse_implied_token(tk.START_TAG, "p", "p")
-    p.pop_until(BUTTON_SCOPE, "p")
+    p.pop_p_in_button_scope()
     return True
 
 

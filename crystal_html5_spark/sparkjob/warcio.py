@@ -422,14 +422,21 @@ def _salvage_records(blob: bytes, stats: dict | None = None,
             dropped()  # framing damage: keep the member's parsed prefix
 
 
+# Most records in one output batch of _record_batches: a batch holds the
+# records of one segment only, and at most this many of them.
+_RECORD_BATCH_ROWS = 1000
+
+
 def _record_batches(parse, payload_col: str, on_error: str):
     """mapInArrow body factory shared by every file-based record source
     (batch WARC, streaming WARC, WET): file-content batches in,
     (url, warc_ts, <payload_col>) batches out, with one shared salvage
-    policy.  ``on_error``: "salvage" recovers what each damaged segment
-    allows (member-level for gz) and logs drop counts to executor
-    stderr; "fail" propagates (fails the task — for validation runs
-    where corruption must be loud)."""
+    policy.  Output batches never span segments and hold at most
+    _RECORD_BATCH_ROWS records, so their memory follows a bounded run of
+    records, not whole inflated segments.  ``on_error``: "salvage"
+    recovers what each damaged segment allows (member-level for gz) and
+    logs drop counts to executor stderr; "fail" propagates (fails the
+    task — for validation runs where corruption must be loud)."""
     if on_error not in ("salvage", "fail"):
         raise ValueError(f"unknown on_error {on_error!r}")
 
@@ -438,8 +445,15 @@ def _record_batches(parse, payload_col: str, on_error: str):
 
         import pyarrow as pa
 
+        def out(urls, tss, payloads):
+            return pa.RecordBatch.from_arrays(
+                [pa.array(urls, pa.string()),
+                 pa.array(tss, pa.timestamp("us")),
+                 pa.array(payloads, pa.binary())],
+                names=["url", "warc_ts", payload_col],
+            )
+
         for batch in iterator:
-            urls, tss, payloads = [], [], []
             for blob in batch.column("content"):
                 raw = blob.as_py()
                 if on_error == "fail":
@@ -447,10 +461,14 @@ def _record_batches(parse, payload_col: str, on_error: str):
                 else:
                     stats: dict = {}
                     recs = _salvage_records(raw, stats, parse)
+                urls, tss, payloads = [], [], []
                 for url, ts, payload in recs:
                     urls.append(url)
                     tss.append(ts)
                     payloads.append(payload)
+                    if len(urls) == _RECORD_BATCH_ROWS:
+                        yield out(urls, tss, payloads)
+                        urls, tss, payloads = [], [], []
                 if on_error != "fail" and stats.get("drops"):
                     # Salvage must be VISIBLE, not silent data loss:
                     # executor stderr carries the per-segment count.
@@ -460,12 +478,8 @@ def _record_batches(parse, payload_col: str, on_error: str):
                         f" in a {len(raw)}-byte segment",
                         file=sys.stderr,
                     )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()),
-                 pa.array(tss, pa.timestamp("us")),
-                 pa.array(payloads, pa.binary())],
-                names=["url", "warc_ts", payload_col],
-            )
+                if urls:
+                    yield out(urls, tss, payloads)
 
     return batches
 

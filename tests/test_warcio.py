@@ -444,6 +444,33 @@ def test_salvage_counts_unparsable_date_and_corrupt_member():
     assert stats == {"drops": 2}
 
 
+@pytest.mark.parametrize("on_error", ["salvage", "fail"])
+def test_record_batches_are_bounded_per_segment(on_error):
+    """One input batch of two 2,000-record segments comes out as
+    batches of at most 1,000 records, none spanning two segments, with
+    every record in order: the reader's memory follows a bounded run of
+    records, not the inflated size of every segment in the batch."""
+    import pyarrow as pa
+
+    from crystal_html5_spark.sparkjob.warcio import _record_batches
+
+    t0 = dt.datetime(2024, 3, 1)
+    segs = [[(f"https://s{k}.example/{i}", t0 + dt.timedelta(seconds=i),
+              b"<p>%d</p>" % i) for i in range(2000)] for k in range(2)]
+    content = pa.RecordBatch.from_arrays(
+        [pa.array([write_warc(r, gz=True) for r in segs], pa.binary())],
+        names=["content"])
+    out = list(_record_batches(parse_warc, "html", on_error)(iter([content])))
+
+    assert len(out) >= 4
+    assert all(b.num_rows <= 1000 for b in out)
+    assert all(len({u.split("/")[2] for u in b.column("url").to_pylist()})
+               == 1 for b in out)
+    got = [(u, ts, h) for b in out for u, ts, h in zip(
+        *(b.column(c).to_pylist() for c in ("url", "warc_ts", "html")))]
+    assert got == segs[0] + segs[1]
+
+
 def test_read_wet_text_round_trips_sink_output(spark, tmp_path):
     """The WET source reads back exactly what the WET sink wrote —
     gz and plain segments, full distributed loop."""
