@@ -8,11 +8,16 @@ selector.cr (tree-walk evaluation with document-order dedup).
 The reference pipelines lexer->compiler through a fiber + channel
 (compile.cr:2-7); here the lexer is an ordinary generator — same token
 stream, no concurrency.
+
+Evaluation returns selector.cr's node lists (order and duplicates
+included) from iterative walks: one walk per run of consecutive group
+members without combinators, not one recursive walk per member.
 """
 
 from __future__ import annotations
 
 import re
+from itertools import groupby
 from typing import Callable, Optional
 
 from .node import DOCUMENT_NODE, ELEMENT_NODE, TEXT_NODE, Node
@@ -592,6 +597,18 @@ class ScopeMatcher(Matcher):
         return n is self.scope_node
 
 
+def _descendants(root: Node):
+    """``root``'s descendants in document order, by one iterative walk."""
+    n = root.first_child
+    while n is not None:
+        yield n
+        nxt = n.first_child
+        while nxt is None and n is not root:
+            nxt = n.next_sibling
+            n = n.parent
+        n = nxt
+
+
 class SelectorSequence(Matcher):
     """selector.cr:66-102."""
 
@@ -605,16 +622,13 @@ class SelectorSequence(Matcher):
         return True
 
     def select(self, n: Node, selected: list[Node]) -> list[Node]:
+        """Appends ``n`` if it matches and is not selected yet, then every
+        matching descendant.  The descendants are not deduplicated
+        (selector.cr:78): matches accumulated across selector groups may
+        repeat, by design."""
         if self.matches(n) and not _node_in(selected, n):
             selected.append(n)
-        c = n.first_child
-        while c is not None:
-            # NOTE: no dedup on the child append (selector.cr:78) — matches
-            # accumulated across selector groups may repeat, by design.
-            if self.matches(c):
-                selected.append(c)
-            selected = self.select(c, selected)
-            c = c.next_sibling
+        selected.extend(filter(self.matches, _descendants(n)))
         return selected
 
 
@@ -625,37 +639,55 @@ class CombinatorSelector:
         self.combinator = combinator
         self.sel_seq = sel_seq
 
-    def select(self, n: Node, selected: list[Node]) -> list[Node]:
+    def select(self, matched: list[Node]) -> list[Node]:
+        """What the combinator reaches from each node of ``matched`` in
+        turn."""
         comb = self.combinator
+        matches = self.sel_seq.matches
+        selected: list[Node] = []
         if comb == GREATER:
-            child = n.first_child
-            while child is not None:
-                if self.sel_seq.matches(child) and child.parent is not None:
-                    selected.append(child)
-                child = child.next_sibling
+            for n in matched:
+                child = n.first_child
+                while child is not None:
+                    if matches(child):
+                        selected.append(child)
+                    child = child.next_sibling
         elif comb == TILDE:
-            sibl = n.next_sibling
-            while sibl is not None:
-                if self.sel_seq.matches(sibl) and not _node_in(selected,
-                                                               sibl):
-                    selected.append(sibl)
-                sibl = sibl.next_sibling
+            # Each walk runs to the end of its sibling list, so a walk that
+            # reaches a sibling an earlier walk visited finds nothing new.
+            seen: set[int] = set()
+            for n in matched:
+                sibl = n.next_sibling
+                while sibl is not None and id(sibl) not in seen:
+                    seen.add(id(sibl))
+                    if matches(sibl):
+                        selected.append(sibl)
+                    sibl = sibl.next_sibling
         elif comb == PLUS:
-            sibl = n.next_sibling
-            while sibl is not None:
-                if self.sel_seq.matches(sibl):
-                    selected.append(sibl)
-                if sibl.type == ELEMENT_NODE:
-                    break  # only the first element sibling counts
-                sibl = sibl.next_sibling
+            for n in matched:
+                sibl = n.next_sibling
+                while sibl is not None:
+                    if matches(sibl):
+                        selected.append(sibl)
+                    if sibl.type == ELEMENT_NODE:
+                        break  # only the first element sibling counts
+                    sibl = sibl.next_sibling
         elif comb == NOT:
-            if not self.sel_seq.matches(n):
-                selected.append(n)
+            selected = [n for n in matched if not matches(n)]
         else:
-            child = n.first_child
-            while child is not None:
-                selected = self.sel_seq.select(child, selected)
-                child = child.next_sibling
+            # SelectorSequence.select from each child, its "not selected
+            # yet" test made on a set of what this branch appended.
+            appended: set[int] = set()
+            for n in matched:
+                child = n.first_child
+                while child is not None:
+                    if matches(child) and id(child) not in appended:
+                        selected.append(child)
+                        appended.add(id(child))
+                    for d in filter(matches, _descendants(child)):
+                        selected.append(d)
+                        appended.add(id(d))
+                    child = child.next_sibling
         return selected
 
 
@@ -665,23 +697,60 @@ class SelectorImpl:
         self.combs: list[CombinatorSelector] = []
 
     def select(self, n: Node, selected: list[Node]) -> list[Node]:
+        # Each combinator applies to all matches so far, earlier group
+        # members' included, as in selector.cr.
         selected = self.sel_seq.select(n, selected)
         for comb in self.combs:
-            comb_matched: list[Node] = []
-            for m in selected:
-                comb_matched = comb.select(m, comb_matched)
-            selected = comb_matched
+            selected = comb.select(selected)
+        return selected
+
+
+def _type_of(seq: SelectorSequence) -> Optional[str]:
+    for m in seq.matchers:
+        if isinstance(m, TypeSelector):
+            return m.ele
+    return None
+
+
+class _FusedRun:
+    """Consecutive combinator-free members of a selector group, selected
+    in one walk with the output of selecting them one after another."""
+
+    def __init__(self, seqs: list[SelectorSequence]):
+        self.seqs = seqs
+        types = [_type_of(s) for s in seqs]
+        # When every member names its element, a node of any other name
+        # needs no test.
+        self.tags = None if None in types else frozenset(types)
+
+    def select(self, n: Node, selected: list[Node]) -> list[Node]:
+        tags = self.tags
+        if tags is None:
+            nodes = list(_descendants(n))
+        else:
+            nodes = [d for d in _descendants(n) if d.data in tags]
+        for seq in self.seqs:
+            if seq.matches(n) and not _node_in(selected, n):
+                selected.append(n)
+            selected.extend(filter(seq.matches, nodes))
         return selected
 
 
 class Selector:
     def __init__(self, selector_group: list[SelectorImpl]):
         self.selector_group = selector_group
+        self._steps: list[SelectorImpl | _FusedRun] = []
+        for has_combs, run in groupby(selector_group,
+                                      key=lambda s: bool(s.combs)):
+            if has_combs:
+                self._steps.extend(run)
+            else:
+                self._steps.append(_FusedRun([s.sel_seq for s in run]))
 
     def select(self, n: Node) -> list[Node]:
         matched: list[Node] = []
-        for sel in self.selector_group:
-            matched = sel.select(n, matched)
+        for step in self._steps:
+            matched = step.select(n, matched)
         return matched
 
 
@@ -709,6 +778,8 @@ class Compiler:
     def __init__(self, token_iter, scope_node: Node | None = None):
         self._iter = token_iter
         self.scope_node = scope_node
+        # Set when a :scope matcher, which holds the scope node, is built.
+        self.scoped = False
         self._first_peek = True
         self._peek_tok = Token(EOF_T, "", 0)
 
@@ -887,6 +958,7 @@ class Compiler:
                 if v == "scope":
                     if self.scope_node is None:
                         raise CSSException(":scope requires element context")
+                    self.scoped = True
                     return ScopeMatcher(self.scope_node)
                 raise CSSException(f"Unsupported pseudo type : {v}")
             s = "::" if double_colon else ":"
@@ -1017,11 +1089,26 @@ class Compiler:
         return a, b
 
 
+_SELECTORS: dict[str, Selector] = {}
+_SELECTORS_MAX = 512
+
+
 def compile_selector(expr: str, scope_node: Node | None = None) -> Selector:
-    """compile.cr:2-7 (lexer runs as a plain generator, not a fiber)."""
-    lexer = Lexer(expr)
-    compiler = Compiler(lexer.tokens(), scope_node)
-    return Selector(compiler.compile_selectors_group())
+    """compile.cr:2-7 (lexer runs as a plain generator, not a fiber).
+
+    A compiled selector holds no state of its own, so one compile per
+    distinct expression serves every page; one that uses :scope holds its
+    scope node and is compiled per call."""
+    sel = _SELECTORS.get(expr)
+    if sel is not None:
+        return sel
+    compiler = Compiler(Lexer(expr).tokens(), scope_node)
+    sel = Selector(compiler.compile_selectors_group())
+    if not compiler.scoped:
+        if len(_SELECTORS) >= _SELECTORS_MAX:
+            _SELECTORS.clear()
+        _SELECTORS[expr] = sel
+    return sel
 
 
 def css(node: Node, expression: str) -> list[Node]:

@@ -586,7 +586,9 @@ class Parser:
             last = i == 0
             if last and self.context is not None:
                 n = self.context
-            a = n.data_atom
+            # Every element the steps name is an HTML one: a foreign
+            # element of the same name (a MathML <head>) matches none.
+            a = n.data_atom if n.namespace == "" else ""
             if a == "select":
                 if not last:
                     ancestor, first = n, oe[0]
@@ -617,13 +619,9 @@ class Parser:
             elif a == "table":
                 self.im = self.in_table_im
             elif a == "template":
-                # Reference divergence (parser.cr:429-433).
-                if n.namespace != "":
-                    continue
                 if self.template_stack:
                     self.im = self.template_stack[-1]
-            elif a == "head":
-                # Reference divergence (parser.cr:434-436).
+            elif a == "head" and not last:
                 self.im = self.in_head_im
             elif a == "body":
                 self.im = self.in_body_im

@@ -66,3 +66,35 @@ def test_fragment_context_consistency_error():
         parse_fragment(b"<p>should not work</p>", err_node)
     # nil context must not raise
     parse_fragment(b"<p>should not raise any exception")
+
+
+# A reset of the insertion mode that chose "in head" for a MathML <head>,
+# or for a <head> context, left the parser in a head mode under foreign
+# content: each implied <body> then went in as a foreign element, the mode
+# never changed and EOF was reprocessed without end.
+@pytest.mark.parametrize("markup,context,want", [
+    (b"<math><desc><head><mi><template>", "div",
+     "<math><desc><head><mi><template></template></mi></head></desc></math>"),
+    (b"<option><foreignObject><nobr><svg><i><foreignObject><template>",
+     "head",
+     "<option><foreignobject><nobr><svg><i><foreignObject><template>"
+     "</template></foreignObject></i></svg></nobr></foreignobject></option>"),
+], ids=["mathml_head", "head_context"])
+def test_fragment_with_head_mode_under_foreign_content_ends(markup, context,
+                                                            want):
+    import signal
+
+    from crystal_html5_spark.html5x.node import ELEMENT_NODE, Node
+    from crystal_html5_spark.html5x.parser import parse_fragment
+
+    def too_slow(*_):
+        raise TimeoutError("parse_fragment ran for 2 s")
+
+    old = signal.signal(signal.SIGALRM, too_slow)
+    signal.setitimer(signal.ITIMER_REAL, 2.0)
+    try:
+        nodes = parse_fragment(markup, Node(ELEMENT_NODE, context, context))
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, old)
+    assert [n.to_html(True) for n in nodes] == [want]
