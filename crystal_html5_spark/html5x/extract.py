@@ -131,7 +131,12 @@ def parse_extract(html: bytes, extract, max_doc_bytes: int = 0):
     """Parse one document under ``max_doc_bytes`` and apply
     ``extract(doc)``; returns ``(result, err)``.
 
-    The one error policy for every page-parsing path: an oversize token
+    ``max_doc_bytes`` is the tokenizer's ``max_buf``: it caps one token's
+    raw span, including the bytes read ahead to find the token's end, not
+    the document's size; a script body longer than the cap is cut at the
+    cap, not an error.
+
+    The one error policy for every page-parsing path: a token over the cap
     is ``max_buf_exceeded``; any other exception, in the parser or in the
     extractor, is ``parse_error: <type>: <message>``.  Never raises, so a
     single bad page cannot kill a task (SURVEY.md §4 max_buf policy)."""

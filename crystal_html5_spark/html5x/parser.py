@@ -713,7 +713,8 @@ class Parser:
         error = tk.ERROR
         while True:
             tokenizer.allow_cdata = bool(oe) and oe[-1].namespace != ""
-            t = self.token = tokenizer.next_token(reuse)
+            tokenizer.next()
+            t = self.token = tokenizer.fill(reuse)
             # Inline of parse_current_token's fast path: plain-HTML
             # current node, token consumed on the first dispatch.
             if t.type == self_closing:
@@ -1768,18 +1769,18 @@ class Parser:
 # ======================= entry points (html5.cr:45-118) ====================
 
 
-def parse(data: bytes | str, scripting: bool = True, frameset: bool = True,
-          max_buf: int = 0) -> Node:
+def parse(data: bytes | str, scripting: bool = True,
+          frameset: bool = True) -> Node:
     """Parse a whole document; returns the Document node."""
     if isinstance(data, str):
         data = data.encode("utf-8")
-    p = Parser(data, scripting=scripting, frameset=frameset, max_buf=max_buf)
+    p = Parser(data, scripting=scripting, frameset=frameset)
     p.parse()
     return p.doc
 
 
 def parse_fragment(data: bytes | str, context: Node | None = None,
-                   scripting: bool = True, max_buf: int = 0) -> list[Node]:
+                   scripting: bool = True) -> list[Node]:
     """Fragment parsing (html5.cr:62-118)."""
     if isinstance(data, str):
         data = data.encode("utf-8")
@@ -1793,11 +1794,10 @@ def parse_fragment(data: bytes | str, context: Node | None = None,
                 f" data={context.data!r}"
             )
         context_tag = context.data_atom
-    p = Parser(data, scripting=scripting, frameset=False, fragment=True,
-               max_buf=max_buf)
+    p = Parser(data, scripting=scripting, frameset=False, fragment=True)
     p.context = context
     if context is None or context.namespace == "":
-        p.tokenizer = Tokenizer(data, context_tag, max_buf=max_buf)
+        p.tokenizer = Tokenizer(data, context_tag)
 
     root = Node(type=ELEMENT_NODE, data_atom="html", data="html")
     p.doc.append_child(root)

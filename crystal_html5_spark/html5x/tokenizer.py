@@ -5,8 +5,12 @@ program counter implies the WHATWG state).  Differences from the reference are
 mechanical, not semantic:
 
 - The whole document is one in-memory ``bytes`` (no IO buffering / buffer
-  doubling — token.cr:213-283 is unnecessary here); ``max_buf`` survives as a
-  per-document size guard (token.cr:270).
+  doubling — token.cr:213-283 is unnecessary here).  ``max_buf`` keeps the
+  reference's cap (token.cr:270): it bounds one token's raw span, including
+  the bytes the scanner reads ahead to find the token's end.  A capped
+  ``next()`` scans inside a window of ``max_buf - 1`` bytes from the token
+  start and raises ``MaxBufferExceeded`` if it needs more; a script body
+  longer than the cap is cut at the cap instead (token.cr:500-506).
 - Text runs are skipped with ``bytes.find`` / precompiled regex instead of a
   per-byte loop; the consumed spans are identical.
 - The reference's script-data states (token.cr:356-506) are recursive calls
@@ -43,31 +47,24 @@ _RE_TAG_NAME_END = re.compile(rb"[ \n\r\t\f/>]")
 _RE_ATTR_KEY_END = re.compile(rb"[ \n\r\t\f/=>]")
 _RE_UNQUOTED_END = re.compile(rb"[ \n\r\t\f>]")
 
-# Master tag pattern: matches an ENTIRE well-formed tag in one C-level
-# regex call — simple name, ws-separated attrs with quoted-or-no values,
-# optional "/>".  Anything unusual (unquoted values, ws around '=', '/'
-# separators, exotic name bytes, EOF truncation) deliberately fails the
-# match and falls back to the exact state machine.  For the shapes it
-# accepts, the produced spans are identical to the state machine's
-# (valueless attrs get a different-but-empty value span, which no
-# consumer can observe: values are only ever sliced).
-_RE_SIMPLE_TAG = re.compile(
-    rb"([a-zA-Z][a-zA-Z0-9:_-]*)"
-    rb"((?:[ \n\r\t\f]+[^ \n\r\t\f/=>]+(?:=(?:\"[^\"]*\"|'[^']*'))?)*)"
-    rb"[ \n\r\t\f]*/?>"
-)
-_RE_SIMPLE_ATTR = re.compile(
-    rb"[ \n\r\t\f]+([^ \n\r\t\f/=>]+)(?:=(?:\"([^\"]*)\"|'([^']*)'))?"
-)
-# '<'-anchored variant of the master pattern: classifies (start/end/
-# self-closing) AND parses name+attrs in one C call for the fast scan
-# loop.  Same accept language as _RE_SIMPLE_TAG plus the leading '<'
-# and optional '/'; the '/' capture (group 4) is non-empty exactly when
-# the byte before '>' is '/', matching the state machine's check.
+# Whole-tag pattern: classifies (start/end/self-closing) AND parses
+# name+attrs of an ENTIRE well-formed tag in one C-level regex call —
+# '<', optional '/', simple name, ws-separated attrs with quoted-or-no
+# values, optional "/>".  Anything unusual (unquoted values, ws around
+# '=', '/' separators, exotic name bytes, EOF truncation) deliberately
+# fails the match and falls back to the exact state machine in
+# _read_tag.  For the shapes it accepts, the produced spans are
+# identical to the state machine's (valueless attrs get a
+# different-but-empty value span, which no consumer can observe: values
+# are only ever sliced); the '/' capture (group 4) is non-empty exactly
+# when the byte before '>' is '/', matching the state machine's check.
 _RE_FULL_TAG = re.compile(
     rb"<(/?)([a-zA-Z][a-zA-Z0-9:_-]*)"
     rb"((?:[ \n\r\t\f]+[^ \n\r\t\f/=>]+(?:=(?:\"[^\"]*\"|'[^']*'))?)*)"
     rb"[ \n\r\t\f]*(/?)>"
+)
+_RE_SIMPLE_ATTR = re.compile(
+    rb"[ \n\r\t\f]+([^ \n\r\t\f/=>]+)(?:=(?:\"([^\"]*)\"|'([^']*)'))?"
 )
 _RE_COMMENT_INTEREST = re.compile(rb"[->!]")
 _RE_DASH_LT = re.compile(rb"[-<]")
@@ -83,7 +80,8 @@ _RAW_FIRST_BYTES = frozenset(t.encode()[0] for t in _RAW_TEXT_TAGS)
 
 
 class MaxBufferExceeded(Exception):
-    """Document exceeded the per-document buffer cap (html5.cr:22-26)."""
+    """A token's raw span, lookahead included, reached the byte cap
+    (html5.cr:22-26)."""
 
 
 class _ScriptDone(Exception):
@@ -181,10 +179,9 @@ class Tokenizer:
     """Tokenizes one in-memory UTF-8 document (token.cr:96-1047)."""
 
     __slots__ = (
-        "buf", "n", "pos", "raw_start", "data_start", "data_end",
-        "pend_ks", "pend_ke", "pend_vs", "pend_ve", "attr",
+        "buf", "n", "pos", "raw_start", "data_start", "data_end", "attr",
         "n_attr_returned", "raw_tag", "text_is_raw", "convert_nul",
-        "allow_cdata", "eof", "tt", "max_buf",
+        "allow_cdata", "eof", "tt", "cap",
     )
 
     def __init__(self, data: bytes, context_tag: str = "", max_buf: int = 0):
@@ -194,7 +191,6 @@ class Tokenizer:
         self.raw_start = 0
         self.data_start = 0
         self.data_end = 0
-        self.pend_ks = self.pend_ke = self.pend_vs = self.pend_ve = 0
         self.attr: list[tuple[int, int, int, int]] = []
         self.n_attr_returned = 0
         self.raw_tag = ""
@@ -203,13 +199,16 @@ class Tokenizer:
         self.allow_cdata = False
         self.eof = False
         self.tt = ERROR
-        self.max_buf = max_buf
+        # A cap the whole document fits under can never be reached.
+        self.cap = max_buf if 0 < max_buf <= len(data) else 0
         # Fragment tokenization context (token.cr:147-153). The reference
         # stores the context tag as given (not lowercased).
         if context_tag and context_tag.lower() in _RAW_TEXT_TAGS:
             self.raw_tag = context_tag
 
     # -- byte-level primitives ------------------------------------------
+    # Every read and search stops at ``self.n``: the end of the document,
+    # or of the cap window under a cap (see _next_capped()).
 
     def _read_byte(self) -> int:
         if self.pos >= self.n:
@@ -217,27 +216,17 @@ class Tokenizer:
             return 0
         c = self.buf[self.pos]
         self.pos += 1
-        if self.max_buf > 0 and self.pos - self.raw_start >= self.max_buf:
-            raise MaxBufferExceeded()
         return c
-
-    def _set_pos(self, p: int) -> None:
-        if self.max_buf > 0 and p - self.raw_start >= self.max_buf:
-            # The byte-at-a-time reference raises exactly at the cap
-            # (token.cr:270); keep raw() identical.
-            self.pos = min(p, self.raw_start + self.max_buf)
-            raise MaxBufferExceeded()
-        self.pos = p
 
     def _skip_white_space(self) -> None:
         if self.eof:
             return
-        m = _RE_NON_WS.search(self.buf, self.pos)
+        m = _RE_NON_WS.search(self.buf, self.pos, self.n)
         if m is None:
-            self._set_pos(self.n)
+            self.pos = self.n
             self.eof = True
         else:
-            self._set_pos(m.start())
+            self.pos = m.start()
 
     # -- raw text / RCDATA ----------------------------------------------
 
@@ -249,12 +238,12 @@ class Tokenizer:
             return
         buf = self.buf
         while True:
-            lt = buf.find(b"<", self.pos)
+            lt = buf.find(b"<", self.pos, self.n)
             if lt == -1:
-                self._set_pos(self.n)
+                self.pos = self.n
                 self.eof = True
                 break
-            self._set_pos(lt + 1)
+            self.pos = lt + 1
             c = self._read_byte()
             if self.eof:
                 break
@@ -295,8 +284,8 @@ class Tokenizer:
     # control flow without growing the Python stack.
 
     def _read_script(self) -> None:
+        stack = [self._g_script_data()]
         try:
-            stack = [self._g_script_data()]
             while stack:
                 top = stack[-1]
                 try:
@@ -305,19 +294,23 @@ class Tokenizer:
                     stack.pop()
                 else:
                     stack.append(sub)
-        except (_ScriptDone, MaxBufferExceeded):
-            # read_script rescues all exceptions (token.cr:500-506)
+        except _ScriptDone:
             pass
-        finally:
-            self.data_end = self.pos
+        if self.eof and self.n < len(self.buf):
+            # The scan ran into the cap window: read_script rescues the
+            # reference's MaxBufferExceeded (token.cr:500-506), so the
+            # text ends at the cap and scanning goes on from there.
+            self.pos = self.n + 1
+            self.eof = False
+        self.data_end = self.pos
 
     def _g_script_data(self):
-        lt = self.buf.find(b"<", self.pos)
+        lt = self.buf.find(b"<", self.pos, self.n)
         if lt == -1:
-            self._set_pos(self.n)
+            self.pos = self.n
             self.eof = True
             raise _ScriptDone()
-        self._set_pos(lt + 1)
+        self.pos = lt + 1
         yield self._g_sdlts()
 
     def _g_sdlts(self):  # script_data_less_than_sign
@@ -434,12 +427,12 @@ class Tokenizer:
 
     def _g_sdde(self):  # script_data_double_escaped
         while True:
-            m = _RE_DASH_LT.search(self.buf, self.pos)
+            m = _RE_DASH_LT.search(self.buf, self.pos, self.n)
             if m is None:
-                self._set_pos(self.n)
+                self.pos = self.n
                 self.eof = True
                 return  # normal return on EOF (token.cr:483)
-            self._set_pos(m.start() + 1)
+            self.pos = m.start() + 1
             c = m.group()[0]
             if c == 0x2D:
                 yield self._g_sdded()
@@ -502,11 +495,11 @@ class Tokenizer:
             dash_count = 2
             while True:
                 # jump over bytes that only reset dash_count
-                m = _RE_COMMENT_INTEREST.search(buf, self.pos)
+                m = _RE_COMMENT_INTEREST.search(buf, self.pos, self.n)
                 if m is None:
                     if self.n > self.pos:
                         dash_count = 0  # trailing bytes reset the dash run
-                    self._set_pos(self.n)
+                    self.pos = self.n
                     self.eof = True
                     if dash_count > 2:
                         dash_count = 2
@@ -514,7 +507,7 @@ class Tokenizer:
                     return
                 if m.start() > self.pos:
                     dash_count = 0
-                self._set_pos(m.start() + 1)
+                self.pos = m.start() + 1
                 c = buf[m.start()]
                 if c == 0x2D:
                     dash_count += 1
@@ -540,13 +533,13 @@ class Tokenizer:
 
     def _read_until_close_angle(self) -> None:
         self.data_start = self.pos
-        gt = self.buf.find(b">", self.pos)
+        gt = self.buf.find(b">", self.pos, self.n)
         if gt == -1:
-            self._set_pos(self.n)
+            self.pos = self.n
             self.eof = True
             self.data_end = self.pos
         else:
-            self._set_pos(gt + 1)
+            self.pos = gt + 1
             self.data_end = self.pos - 1
 
     def _read_markup_declaration(self) -> int:
@@ -598,13 +591,13 @@ class Tokenizer:
                 self.pos = self.data_start
                 return False
         self.data_start = self.pos
-        end = self.buf.find(b"]]>", self.pos)
+        end = self.buf.find(b"]]>", self.pos, self.n)
         if end == -1:
-            self._set_pos(self.n)
+            self.pos = self.n
             self.eof = True
             self.data_end = self.pos
         else:
-            self._set_pos(end + 3)
+            self.pos = end + 3
             self.data_end = self.pos - 3
         return True
 
@@ -642,41 +635,16 @@ class Tokenizer:
         return START_TAG
 
     def _read_tag(self, save_attr: bool) -> None:
-        if self.max_buf and self.n >= self.max_buf:
-            # Cap reachable only when the buffer is at least cap-sized
-            # (see next()); otherwise the fast path below is identical.
-            self._read_tag_checked(save_attr)
-            return
-        # Fast path (no byte cap): same state machine, local cursors, no
-        # per-byte method calls.  Byte-identical to _read_tag_checked —
-        # the golden suites + max_buf sweep gate both.
+        """The tag state machine, with local cursors.  Reached only for
+        tags that _RE_FULL_TAG rejected (see next())."""
         buf = self.buf
         n = self.n
         attr = self.attr = []
         append = attr.append
         self.n_attr_returned = 0
-        # Whole-tag master regex: one C call for the common shape.
-        m = _RE_SIMPLE_TAG.match(buf, self.pos - 1)
-        if m is not None:
-            self.data_start = self.pos - 1
-            self.data_end = m.end(1)
-            self.pos = m.end()
-            if save_attr:
-                a_start, a_end = m.span(2)
-                if a_start < a_end:
-                    for am in _RE_SIMPLE_ATTR.finditer(buf, a_start, a_end):
-                        regs = am.regs
-                        ks, ke = regs[1]
-                        vs, ve = regs[2]
-                        if vs == -1:
-                            vs, ve = regs[3]
-                            if vs == -1:
-                                vs = ve = ke  # valueless: empty span
-                        append((ks, ke, vs, ve))
-            return
         # tag name
         self.data_start = self.pos - 1
-        m = _RE_TAG_NAME_END.search(buf, self.pos)
+        m = _RE_TAG_NAME_END.search(buf, self.pos, n)
         if m is None:
             self.pos = n
             self.eof = True
@@ -690,7 +658,7 @@ class Tokenizer:
             pos = s + 1
             self.data_end = s
         # whitespace before first attr
-        m = _RE_NON_WS.search(buf, pos)
+        m = _RE_NON_WS.search(buf, pos, n)
         if m is None:
             self.pos = n
             self.eof = True
@@ -706,7 +674,7 @@ class Tokenizer:
                 return
             # attribute key
             ks = pos
-            m = _RE_ATTR_KEY_END.search(buf, pos)
+            m = _RE_ATTR_KEY_END.search(buf, pos, n)
             if m is None:
                 self.pos = n
                 self.eof = True
@@ -722,7 +690,7 @@ class Tokenizer:
                 ke = s
             # attribute value
             vs = ve = pos
-            m = _RE_NON_WS.search(buf, pos)
+            m = _RE_NON_WS.search(buf, pos, n)
             if m is None:
                 self.pos = n
                 self.eof = True
@@ -737,7 +705,7 @@ class Tokenizer:
                     append((ks, ke, vs, ve))
                 continue
             pos += 1
-            m = _RE_NON_WS.search(buf, pos)
+            m = _RE_NON_WS.search(buf, pos, n)
             if m is None:
                 self.pos = n
                 self.eof = True
@@ -754,7 +722,7 @@ class Tokenizer:
                 continue
             if quote in (0x27, 0x22):  # ' "
                 vs = pos
-                q = buf.find(quote.to_bytes(1, "big"), pos)
+                q = buf.find(quote.to_bytes(1, "big"), pos, n)
                 if q == -1:
                     self.pos = n
                     self.eof = True
@@ -765,7 +733,7 @@ class Tokenizer:
                 ve = q
             else:
                 vs = pos - 1
-                m = _RE_UNQUOTED_END.search(buf, pos)
+                m = _RE_UNQUOTED_END.search(buf, pos, n)
                 if m is None:
                     self.pos = n
                     self.eof = True
@@ -781,116 +749,19 @@ class Tokenizer:
                     ve = s
             if save_attr and ks != ke:
                 append((ks, ke, vs, ve))
-            m = _RE_NON_WS.search(buf, pos)
+            m = _RE_NON_WS.search(buf, pos, n)
             if m is None:
                 self.pos = n
                 self.eof = True
                 return
             pos = m.start()
 
-    def _read_tag_checked(self, save_attr: bool) -> None:
-        self.attr = []
-        self.n_attr_returned = 0
-        self._read_tag_name()
-        self._skip_white_space()
-        if self.eof:
-            return
-        while True:
-            c = self._read_byte()
-            if self.eof or c == 0x3E:
-                break
-            self.pos -= 1
-            self._read_tag_attr_key()
-            self._read_tag_attr_val()
-            if save_attr and self.pend_ks != self.pend_ke:
-                self.attr.append(
-                    (self.pend_ks, self.pend_ke, self.pend_vs, self.pend_ve)
-                )
-            self._skip_white_space()
-            if self.eof:
-                break
-
-    def _read_tag_name(self) -> None:
-        self.data_start = self.pos - 1
-        m = _RE_TAG_NAME_END.search(self.buf, self.pos)
-        if m is None:
-            self._set_pos(self.n)
-            self.eof = True
-            self.data_end = self.pos
-            return
-        c = self.buf[m.start()]
-        if c in (0x2F, 0x3E):  # '/' '>' are not consumed
-            self._set_pos(m.start())
-            self.data_end = self.pos
-        else:
-            self._set_pos(m.start() + 1)
-            self.data_end = self.pos - 1
-
-    def _read_tag_attr_key(self) -> None:
-        self.pend_ks = self.pos
-        m = _RE_ATTR_KEY_END.search(self.buf, self.pos)
-        if m is None:
-            self._set_pos(self.n)
-            self.eof = True
-            self.pend_ke = self.pos
-            return
-        c = self.buf[m.start()]
-        if c in (0x3D, 0x3E):  # '=' '>' not consumed
-            self._set_pos(m.start())
-            self.pend_ke = self.pos
-        else:
-            self._set_pos(m.start() + 1)
-            self.pend_ke = self.pos - 1
-
-    def _read_tag_attr_val(self) -> None:
-        self.pend_vs = self.pos
-        self.pend_ve = self.pos
-        self._skip_white_space()
-        if self.eof:
-            return
-        c = self._read_byte()
-        if self.eof:
-            return
-        if c != 0x3D:  # '='
-            self.pos -= 1
-            return
-        self._skip_white_space()
-        if self.eof:
-            return
-        quote = self._read_byte()
-        if self.eof:
-            return
-        if quote == 0x3E:
-            self.pos -= 1
-            return
-        if quote in (0x27, 0x22):  # ' "
-            self.pend_vs = self.pos
-            q = self.buf.find(bytes((quote,)), self.pos)
-            if q == -1:
-                self._set_pos(self.n)
-                self.eof = True
-                self.pend_ve = self.pos
-            else:
-                self._set_pos(q + 1)
-                self.pend_ve = self.pos - 1
-        else:
-            self.pend_vs = self.pos - 1
-            m = _RE_UNQUOTED_END.search(self.buf, self.pos)
-            if m is None:
-                self._set_pos(self.n)
-                self.eof = True
-                self.pend_ve = self.pos
-            elif self.buf[m.start()] == 0x3E:
-                self._set_pos(m.start())
-                self.pend_ve = self.pos
-            else:
-                self._set_pos(m.start() + 1)
-                self.pend_ve = self.pos - 1
-
     # -- driver -----------------------------------------------------------
 
     def next(self) -> int:
         """Scan the next token and return its type (token.cr:838-947)."""
+        if self.cap:
+            return self._next_capped()
         self.raw_start = self.pos
         self.data_start = self.pos
         self.data_end = self.pos
@@ -901,7 +772,7 @@ class Tokenizer:
         if self.raw_tag:
             if self.raw_tag == "plaintext":
                 # Everything up to EOF is raw text.
-                self._set_pos(self.n)
+                self.pos = self.n
                 self.eof = True
                 self.data_end = self.pos
                 self.text_is_raw = True
@@ -915,185 +786,121 @@ class Tokenizer:
         self.text_is_raw = False
         self.convert_nul = False
 
+        # Local cursor, no per-byte method calls.
         buf = self.buf
-        if not self.max_buf or self.n < self.max_buf:
-            # Fast scan loop: local cursor, no per-byte method calls.
-            # Taken not only when uncapped but whenever the WHOLE buffer
-            # is shorter than the cap — no token span can then reach
-            # ``pos - raw_start >= max_buf``, so the checked loop's cap
-            # tests are provably dead and the two loops are
-            # byte-identical (gated by the golden max_buf sweep, which
-            # uses caps smaller than the inputs and so still exercises
-            # the checked loop).
-            n = self.n
-            pos = self.pos
-            raw_start = self.raw_start
-            while True:
-                lt = buf.find(b"<", pos)
-                if lt == -1:
-                    self.pos = n
-                    self.eof = True
-                    break
-                if raw_start == lt:
-                    # Fused whole-tag path: no pending text, so one
-                    # anchored regex classifies AND parses the tag
-                    # ('<' + optional '/' + name + attrs + optional '/'
-                    # + '>').  Misses (comments, bogus shapes, EOF
-                    # truncation, '<'+non-letter) fall through to the
-                    # byte-exact classification below.
-                    m = _RE_FULL_TAG.match(buf, lt)
-                    if m is not None:
-                        regs = m.regs
-                        ds, de = regs[2]
-                        self.data_start = ds
-                        self.data_end = de
-                        self.pos = m.end()
-                        self.n_attr_returned = 0
-                        if regs[1][0] != regs[1][1]:  # '</...'
-                            # end tags never read attrs: shared empty
-                            # tuple, no per-token list alloc
-                            self.attr = ()
-                            self.tt = END_TAG
-                            return END_TAG
-                        attr = self.attr = []
-                        a_start, a_end = regs[3]
-                        if a_start < a_end:
-                            append = attr.append
-                            for am in _RE_SIMPLE_ATTR.finditer(
-                                buf, a_start, a_end
-                            ):
-                                ar = am.regs
-                                ks, ke = ar[1]
-                                vs, ve = ar[2]
+        n = self.n
+        pos = self.pos
+        raw_start = self.raw_start
+        while True:
+            lt = buf.find(b"<", pos, n)
+            if lt == -1:
+                self.pos = n
+                self.eof = True
+                break
+            if raw_start == lt:
+                # Fused whole-tag path: no pending text, so one
+                # anchored regex classifies AND parses the tag
+                # ('<' + optional '/' + name + attrs + optional '/'
+                # + '>').  Misses (comments, bogus shapes, EOF
+                # truncation, '<'+non-letter) fall through to the
+                # byte-exact classification below.
+                m = _RE_FULL_TAG.match(buf, lt, n)
+                if m is not None:
+                    regs = m.regs
+                    ds, de = regs[2]
+                    self.data_start = ds
+                    self.data_end = de
+                    self.pos = m.end()
+                    self.n_attr_returned = 0
+                    if regs[1][0] != regs[1][1]:  # '</...'
+                        # end tags never read attrs: shared empty
+                        # tuple, no per-token list alloc
+                        self.attr = ()
+                        self.tt = END_TAG
+                        return END_TAG
+                    attr = self.attr = []
+                    a_start, a_end = regs[3]
+                    if a_start < a_end:
+                        append = attr.append
+                        for am in _RE_SIMPLE_ATTR.finditer(
+                            buf, a_start, a_end
+                        ):
+                            ar = am.regs
+                            ks, ke = ar[1]
+                            vs, ve = ar[2]
+                            if vs == -1:
+                                vs, ve = ar[3]
                                 if vs == -1:
-                                    vs, ve = ar[3]
-                                    if vs == -1:
-                                        vs = ve = ke
-                                append((ks, ke, vs, ve))
-                        c0 = buf[ds]
-                        if 0x41 <= c0 <= 0x5A:
-                            c0 += 32
-                        if c0 in _RAW_FIRST_BYTES:
-                            name = buf[ds:de].lower()
-                            if name in _RAW_TAG_BYTES:
-                                self.raw_tag = name.decode("latin-1")
-                        if regs[4][0] != regs[4][1]:  # '.../>'
-                            self.tt = SELF_CLOSING_TAG
-                        else:
-                            self.tt = START_TAG
-                        return self.tt
-                pos = lt + 1
+                                    vs = ve = ke
+                            append((ks, ke, vs, ve))
+                    c0 = buf[ds]
+                    if 0x41 <= c0 <= 0x5A:
+                        c0 += 32
+                    if c0 in _RAW_FIRST_BYTES:
+                        name = buf[ds:de].lower()
+                        if name in _RAW_TAG_BYTES:
+                            self.raw_tag = name.decode("latin-1")
+                    if regs[4][0] != regs[4][1]:  # '.../>'
+                        self.tt = SELF_CLOSING_TAG
+                    else:
+                        self.tt = START_TAG
+                    return self.tt
+            pos = lt + 1
+            if pos >= n:
+                self.pos = n
+                self.eof = True
+                break
+            c = buf[pos]
+            pos += 1
+            if 0x61 <= c <= 0x7A or 0x41 <= c <= 0x5A:
+                token_type = START_TAG
+            elif c == 0x2F:
+                token_type = END_TAG
+            elif c in (0x21, 0x3F):
+                token_type = COMMENT
+            else:
+                pos -= 1
+                continue
+
+            # Emit accumulated text before the non-text token.
+            x = pos - 2
+            if self.raw_start < x:
+                self.pos = x
+                self.data_end = x
+                self.tt = TEXT
+                return self.tt
+
+            self.pos = pos
+            if token_type == START_TAG:
+                self.tt = self._read_start_tag()
+                return self.tt
+            if token_type == END_TAG:
                 if pos >= n:
                     self.pos = n
                     self.eof = True
                     break
                 c = buf[pos]
-                pos += 1
-                if 0x61 <= c <= 0x7A or 0x41 <= c <= 0x5A:
-                    token_type = START_TAG
-                elif c == 0x2F:
-                    token_type = END_TAG
-                elif c in (0x21, 0x3F):
-                    token_type = COMMENT
-                else:
-                    pos -= 1
-                    continue
-
-                # Emit accumulated text before the non-text token.
-                x = pos - 2
-                if self.raw_start < x:
-                    self.pos = x
-                    self.data_end = x
-                    self.tt = TEXT
+                self.pos = pos + 1
+                if c == 0x3E:
+                    # "</>" yields an empty comment (token.cr:908-915)
+                    self.tt = COMMENT
                     return self.tt
-
+                if 0x61 <= c <= 0x7A or 0x41 <= c <= 0x5A:
+                    self._read_tag(False)
+                    self.tt = ERROR if self.eof else END_TAG
+                    return self.tt
                 self.pos = pos
-                if token_type == START_TAG:
-                    self.tt = self._read_start_tag()
-                    return self.tt
-                if token_type == END_TAG:
-                    if pos >= n:
-                        self.pos = n
-                        self.eof = True
-                        break
-                    c = buf[pos]
-                    self.pos = pos + 1
-                    if c == 0x3E:
-                        # "</>" yields an empty comment (token.cr:908-915)
-                        self.tt = COMMENT
-                        return self.tt
-                    if 0x61 <= c <= 0x7A or 0x41 <= c <= 0x5A:
-                        self._read_tag(False)
-                        self.tt = ERROR if self.eof else END_TAG
-                        return self.tt
-                    self.pos = pos
-                    self._read_until_close_angle()
-                    self.tt = COMMENT
-                    return self.tt
-                # COMMENT dispatch
-                if c == 0x21:
-                    self.tt = self._read_markup_declaration()
-                    return self.tt
-                self.pos = pos - 1
                 self._read_until_close_angle()
                 self.tt = COMMENT
                 return self.tt
-        else:
-            while True:
-                lt = buf.find(b"<", self.pos)
-                if lt == -1:
-                    self._set_pos(self.n)
-                    self.eof = True
-                    break
-                self._set_pos(lt + 1)
-                c = self._read_byte()
-                if self.eof:
-                    break
-                if 0x61 <= c <= 0x7A or 0x41 <= c <= 0x5A:
-                    token_type = START_TAG
-                elif c == 0x2F:
-                    token_type = END_TAG
-                elif c in (0x21, 0x3F):
-                    token_type = COMMENT
-                else:
-                    self.pos -= 1
-                    continue
-
-                # Emit accumulated text before the non-text token.
-                x = self.pos - 2
-                if self.raw_start < x:
-                    self.pos = x
-                    self.data_end = x
-                    self.tt = TEXT
-                    return self.tt
-
-                if token_type == START_TAG:
-                    self.tt = self._read_start_tag()
-                    return self.tt
-                if token_type == END_TAG:
-                    c = self._read_byte()
-                    if self.eof:
-                        break
-                    if c == 0x3E:
-                        # "</>" yields an empty comment (token.cr:908-915)
-                        self.tt = COMMENT
-                        return self.tt
-                    if 0x61 <= c <= 0x7A or 0x41 <= c <= 0x5A:
-                        self._read_tag(False)
-                        self.tt = ERROR if self.eof else END_TAG
-                        return self.tt
-                    self.pos -= 1
-                    self._read_until_close_angle()
-                    self.tt = COMMENT
-                    return self.tt
-                # COMMENT dispatch
-                if c == 0x21:
-                    self.tt = self._read_markup_declaration()
-                    return self.tt
-                self.pos -= 1
-                self._read_until_close_angle()
-                self.tt = COMMENT
+            # COMMENT dispatch
+            if c == 0x21:
+                self.tt = self._read_markup_declaration()
                 return self.tt
+            self.pos = pos - 1
+            self._read_until_close_angle()
+            self.tt = COMMENT
+            return self.tt
 
         if self.raw_start < self.pos:
             self.data_end = self.pos
@@ -1101,6 +908,24 @@ class Tokenizer:
             return self.tt
         self.tt = ERROR
         return self.tt
+
+    def _next_capped(self) -> int:
+        """next() under the cap: the scan sees only the ``cap - 1`` bytes
+        from the token start, so running into the window end while the
+        document goes on means that the reference would have read its
+        cap-th byte — it raises there, with raw() ``cap`` bytes long
+        (token.cr:270)."""
+        cap = self.cap
+        size = len(self.buf)
+        self.n = min(size, self.pos + cap - 1)
+        self.cap = 0
+        tt = self.next()
+        self.cap = cap
+        if self.eof and self.n < size:
+            self.pos = self.raw_start + cap
+            self.eof = False
+            raise MaxBufferExceeded()
+        return tt
 
     # -- accessors ----------------------------------------------------------
 
@@ -1151,17 +976,16 @@ class Tokenizer:
             )
         return None, None, False
 
-    def next_token(self, reuse: Token | None = None) -> Token:
-        """next() + token() in one call — the parser's per-token hot path.
+    def fill(self, t: Token) -> Token:
+        """Materialize the current token into ``t`` (token.cr:1018-1040)
+        and return it — the parser's per-token hot path, which overwrites
+        one Token (element nodes take the fresh attr LIST, never the Token
+        object, so overwriting is safe).
 
-        With ``reuse`` the caller provides a Token to overwrite (the parser
-        owns exactly one in-flight token at a time; element nodes take the
-        fresh attr LIST, never the Token object, so overwriting is safe)."""
-        self.next()
+        Tag/attr-key names are interned through a raw-bytes cache (the
+        Python counterpart of the reference's atom interning): repeated
+        names skip the lower/decode/lookup work entirely."""
         tt = self.tt
-        if reuse is None:
-            return self.token()
-        t = reuse
         t.type = tt
         if tt == TEXT:
             # Inline of text() + b2s for the hottest token kind (same
@@ -1184,75 +1008,10 @@ class Tokenizer:
                 s = unescape(s, False)
             t.data = s.decode("utf-8", "surrogateescape")
         elif 2 <= tt <= 4:  # START_TAG / END_TAG / SELF_CLOSING_TAG
-            self._fill_tag_token(t, tt)
-        elif tt == COMMENT or tt == DOCTYPE:
-            t.data_atom = ""
-            t.data = b2s(self.text() or b"")
-            t.attr = _EMPTY_ATTRS
-        else:
-            t.data_atom = ""
-            t.data = ""
-            t.attr = _EMPTY_ATTRS
-        return t
-
-    def _fill_tag_token(self, t: Token, tt: int) -> None:
-        buf = self.buf
-        ds = self.data_start
-        de = self.data_end
-        raw_name = buf[ds:de] if ds < de else b""
-        self.data_start = self.pos
-        self.data_end = self.pos
-        cached = _NAME_CACHE.get(raw_name)
-        if cached is None:
-            name_s = b2s(lower_bytes(raw_name))
-            cached = (name_s, atom_lookup(name_s))
-            if len(_NAME_CACHE) < 8192:
-                _NAME_CACHE[raw_name] = cached
-        name_s, a = cached
-        if a:
-            t.data_atom = t.data = a
-        else:
-            t.data_atom, t.data = "", name_s
-        if tt != END_TAG and self.n_attr_returned < len(self.attr):
-            attrs = []
-            append = attrs.append
-            # n_attr_returned is 0 on the next_token flow: skip the
-            # list-copying slice for the common case.
-            pending = (self.attr if not self.n_attr_returned
-                       else self.attr[self.n_attr_returned:])
-            for ks, ke, vs, ve in pending:
-                raw_key = buf[ks:ke]
-                key_s = _KEY_CACHE.get(raw_key)
-                if key_s is None:
-                    key_s = b2s(lower_bytes(raw_key))
-                    if len(_KEY_CACHE) < 8192:
-                        _KEY_CACHE[raw_key] = key_s
-                val = buf[vs:ve]
-                if (b"&" in val) or (b"\r" in val):
-                    val = unescape(convert_new_lines(val), True)
-                append(Attribute("", key_s, val.decode(
-                    "utf-8", "surrogateescape")))
-            self.n_attr_returned = len(self.attr)
-            t.attr = attrs
-        else:
-            t.attr = []
-
-    def token(self) -> Token:
-        """Materialize the current token (token.cr:1018-1040).
-
-        Tag/attr-key names are interned through a raw-bytes cache (the
-        Python counterpart of the reference's atom interning): repeated
-        names skip the lower/decode/lookup work entirely."""
-        tt = self.tt
-        t = Token(type=tt)
-        if tt in (TEXT, COMMENT, DOCTYPE):
-            t.data = b2s(self.text() or b"")
-        elif tt in (START_TAG, SELF_CLOSING_TAG, END_TAG):
             buf = self.buf
-            if self.data_start < self.data_end:
-                raw_name = buf[self.data_start:self.data_end]
-            else:
-                raw_name = b""
+            ds = self.data_start
+            de = self.data_end
+            raw_name = buf[ds:de] if ds < de else b""
             self.data_start = self.pos
             self.data_end = self.pos
             cached = _NAME_CACHE.get(raw_name)
@@ -1267,15 +1026,38 @@ class Tokenizer:
             else:
                 t.data_atom, t.data = "", name_s
             if tt != END_TAG and self.n_attr_returned < len(self.attr):
-                append = t.attr.append
-                for ks, ke, vs, ve in self.attr[self.n_attr_returned:]:
+                attrs = []
+                append = attrs.append
+                # n_attr_returned is 0 unless tag_attr() ran first: skip
+                # the list-copying slice for the common case.
+                pending = (self.attr if not self.n_attr_returned
+                           else self.attr[self.n_attr_returned:])
+                for ks, ke, vs, ve in pending:
                     raw_key = buf[ks:ke]
                     key_s = _KEY_CACHE.get(raw_key)
                     if key_s is None:
                         key_s = b2s(lower_bytes(raw_key))
                         if len(_KEY_CACHE) < 8192:
                             _KEY_CACHE[raw_key] = key_s
-                    val = unescape(convert_new_lines(buf[vs:ve]), True)
-                    append(Attribute("", key_s, b2s(val)))
+                    val = buf[vs:ve]
+                    if (b"&" in val) or (b"\r" in val):
+                        val = unescape(convert_new_lines(val), True)
+                    append(Attribute("", key_s, val.decode(
+                        "utf-8", "surrogateescape")))
                 self.n_attr_returned = len(self.attr)
+                t.attr = attrs
+            else:
+                t.attr = []
+        elif tt == COMMENT or tt == DOCTYPE:
+            t.data_atom = ""
+            t.data = b2s(self.text() or b"")
+            t.attr = _EMPTY_ATTRS
+        else:
+            t.data_atom = ""
+            t.data = ""
+            t.attr = _EMPTY_ATTRS
         return t
+
+    def token(self) -> Token:
+        """Materialize the current token into a new Token."""
+        return self.fill(Token())

@@ -26,8 +26,11 @@ Scale notes (100 TB / 1000 executors):
   so every capture of a url lands in one partition; the salt splits
   mega-hosts (domain skew) and AQE's skew handling covers the residue.
 - Only url, warc_ts and html cross into Python over Arrow.
-- ``max_doc_bytes`` bounds per-document memory, and output re-batches by
-  byte size so one 50 MB page amid 4 KB pages cannot blow up a batch.
+- ``max_doc_bytes`` caps one token's raw span, lookahead included (a page
+  holding a longer token is a ``max_buf_exceeded`` row; a longer script
+  body is cut, not an error).  The page itself is already in memory as an
+  Arrow cell, so it bounds no memory.  Output re-batches by byte size so
+  one 50 MB page amid 4 KB pages cannot blow up a batch.
 """
 
 from __future__ import annotations

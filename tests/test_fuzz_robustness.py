@@ -56,6 +56,30 @@ def test_mutated_fixtures_never_crash():
         assert bytes(raw) == data
 
 
+def test_mutated_fixtures_under_a_cap():
+    """A byte cap may stop the tokenizer only with MaxBufferExceeded, and
+    the raw spans plus the bytes it left unread still rebuild the input."""
+    rng = random.Random(11)
+    fixtures = fixture_htmls()
+    for i in range(600):
+        data = _mutate(rng, fixtures[i % len(fixtures)])
+        for _ in range(3):
+            z = tk.Tokenizer(data, max_buf=rng.randrange(1, len(data) + 2))
+            z.allow_cdata = rng.random() < 0.5
+            raw = bytearray()
+            while True:
+                try:
+                    t = z.next()
+                except tk.MaxBufferExceeded:
+                    raw += z.raw()
+                    break
+                raw += z.raw()
+                z.token()
+                if t == tk.ERROR:
+                    break
+            assert bytes(raw + z.buf[z.pos:]) == data
+
+
 def test_random_binary_never_crashes():
     rng = random.Random(7)
     for n in (0, 1, 2, 3, 7, 64, 512, 4096):
