@@ -918,7 +918,7 @@ class Tokenizer:
         cap = self.cap
         size = len(self.buf)
         self.n = min(size, self.pos + cap - 1)
-        self.cap = 0
+        self.cap = 0  # so that next() runs its plain scan
         tt = self.next()
         self.cap = cap
         if self.eof and self.n < size:
