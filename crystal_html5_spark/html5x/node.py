@@ -32,10 +32,11 @@ class Node:
     __slots__ = (
         "parent", "first_child", "last_child", "prev_sibling", "next_sibling",
         "type", "data_atom", "data", "namespace", "attr",
-        # Set when the node is pushed as an open element: the stack
-        # index of the p element in button scope for the stack up to
-        # and including this node, or -1 (Parser.add_child).
-        "p_in_button_scope",
+        # Set when the node is pushed as an open element: for the stack
+        # up to and including this node, the index of the p element in
+        # button scope and of the topmost HTML template, or -1
+        # (parser.OpenElements).
+        "p_in_button_scope", "open_template",
     )
 
     def __init__(self, type: int, data_atom: str = "", data: str = "",

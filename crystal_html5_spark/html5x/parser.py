@@ -42,13 +42,13 @@ WHITE_SPACE = " \t\r\n\f"
 WHITE_SPACE_NULL = WHITE_SPACE + "\x00"
 
 # Scope (parser.cr:13-21).  Button scope (2) is only ever asked about
-# "p", and each open element carries that answer (Parser.add_child), so
-# it has no _scope_idx loop.
+# "p", and each open element stores that answer (OpenElements.push), so
+# it has no scope_index loop.  The table row and table body scopes
+# (4, 5) only clear the stack back to a context: their stop sets are
+# below.
 DEFAULT_SCOPE = 0
 LIST_ITEM_SCOPE = 1
 TABLE_SCOPE = 3
-TABLE_ROW_SCOPE = 4
-TABLE_BODY_SCOPE = 5
 SELECT_SCOPE = 6
 
 # Stop tags for pop_until (parser.cr:7-11).
@@ -61,12 +61,31 @@ DEFAULT_SCOPE_STOP_TAGS = {
 _STOP_TAGS_EMPTY_NS = DEFAULT_SCOPE_STOP_TAGS[""]
 # Button scope = default scope stops + "button", in the HTML namespace.
 _STOP_TAGS_BUTTON = frozenset(_STOP_TAGS_EMPTY_NS) | {"button"}
+# The names whose push can change a stored answer (OpenElements.push);
+# every other element copies the answers of the element below it.
+_CHANGES_ANSWERS = _STOP_TAGS_BUTTON.union(
+    {"p"}, *DEFAULT_SCOPE_STOP_TAGS.values())
 
 _IMPLIED_END_TAGS = frozenset((
     "dd", "dt", "li", "optgroup", "option", "p", "rb", "rp", "rt", "rtc",
 ))
 
+# clear_stack_to_context's stops (parser.cr:155-178).
+_TABLE_CONTEXT = frozenset(("html", "table", "template"))
+_TABLE_ROW_CONTEXT = frozenset(("html", "tr", "template"))
+_TABLE_BODY_CONTEXT = frozenset(("html", "tbody", "tfoot", "thead",
+                                 "template"))
+
 _TABLE_FOSTER_ATOMS = frozenset(("table", "tbody", "tfoot", "thead", "tr"))
+
+# in_template_im: the insertion mode a start tag switches the template to;
+# any other start tag switches it to in_body_im.
+_TEMPLATE_START_IM = {
+    "caption": "in_table_im", "colgroup": "in_table_im",
+    "tbody": "in_table_im", "tfoot": "in_table_im", "thead": "in_table_im",
+    "col": "in_column_group_im", "tr": "in_table_body_im",
+    "td": "in_row_im", "th": "in_row_im",
+}
 
 # in_body_im hot-path membership groups (frozensets: the elif chain tests
 # several of these per token, and the long tuples were linear scans).
@@ -119,11 +138,178 @@ def _remove(stack: list[Node], n: Node | None) -> None:
         stack[:] = [x for x in stack if x is not n]
 
 
-def _contains(stack: list[Node], atom: str) -> bool:
-    for n in stack:
-        if n.data_atom == atom and n.namespace == "":
+class OpenElements:
+    """The stack of open elements (parser.cr keeps a plain Array), with
+    its scope queries (parser.cr:105-213).
+
+    Each element on the stack stores two answers for the stack up to and
+    including it: ``p_in_button_scope``, the index of the p element in
+    button scope, and ``open_template``, the index of the topmost HTML
+    template; -1 when there is none.  Popping or truncating ``nodes``
+    from the top leaves every answer below true, so the parser does that
+    on the list itself.  Every other change goes through a method here
+    that re-sets the answers above it.  No node is on the stack twice.
+
+    ``nodes`` is a plain list, not a subclass: CPython 3.11 specializes
+    indexing, ``pop`` and ``append`` for exact lists only, and a list
+    subclass parsed perfbench's extract_set(1) pages about 1 % slower
+    (4-core Xeon host)."""
+
+    __slots__ = ("nodes",)
+
+    def __init__(self) -> None:
+        self.nodes: list[Node] = []
+
+    def push(self, n: Node) -> None:
+        oe = self.nodes
+        a = n.data_atom
+        if a not in _CHANGES_ANSWERS and oe:
+            top = oe[-1]
+            n.p_in_button_scope = top.p_in_button_scope
+            n.open_template = top.open_template
+        else:
+            if oe:
+                top = oe[-1]
+                p, t = top.p_in_button_scope, top.open_template
+            else:
+                p = t = -1
+            if n.namespace == "":
+                if a == "p":
+                    p = len(oe)
+                elif a in _STOP_TAGS_BUTTON:
+                    p = -1
+                    if a == "template":
+                        t = len(oe)
+            elif a in DEFAULT_SCOPE_STOP_TAGS.get(n.namespace, ()):
+                p = -1
+            n.p_in_button_scope = p
+            n.open_template = t
+        oe.append(n)
+
+    def _reset(self, start: int) -> None:
+        """Re-set the stored answers of nodes[start:], bottom up."""
+        above = self.nodes[start:]
+        del self.nodes[start:]
+        for n in above:
+            self.push(n)
+
+    def index_of(self, n: Node) -> int:
+        """Index of n, searched bottom up as _index does, or -1."""
+        try:
+            return self.nodes.index(n)
+        except ValueError:
+            return -1
+
+    def remove_node(self, n: Node) -> None:
+        i = self.index_of(n)
+        if i != -1:
+            del self.nodes[i]
+            self._reset(i)
+
+    def insert_above(self, below: Node, n: Node) -> None:
+        i = self.index_of(below) + 1
+        self.nodes.insert(i, n)
+        self._reset(i)
+
+    def replace(self, i: int, n: Node) -> None:
+        self.nodes[i] = n
+        self._reset(i)
+
+    def p_in_button_scope(self) -> bool:
+        oe = self.nodes
+        return oe[-1].p_in_button_scope != -1 if oe else False
+
+    def pop_p_in_button_scope(self) -> None:
+        """pop_until(button scope, "p")."""
+        oe = self.nodes
+        if oe:
+            i = oe[-1].p_in_button_scope
+            if i != -1:
+                del oe[i:]
+
+    def template_index(self) -> int:
+        """Index of the topmost HTML template element, or -1."""
+        oe = self.nodes
+        return oe[-1].open_template if oe else -1
+
+    def scope_index(self, s: int, match_tags: tuple) -> int:
+        oe = self.nodes
+        if s == DEFAULT_SCOPE:
+            # Specialized loop for the dominant scope kind: no per-frame
+            # scope-variant comparisons.  Semantics identical to the
+            # general loop below with s=0.
+            stop_empty = _STOP_TAGS_EMPTY_NS
+            for i in range(len(oe) - 1, -1, -1):
+                n = oe[i]
+                tag_atom = n.data_atom
+                if n.namespace == "":
+                    if tag_atom in match_tags:
+                        return i
+                    if tag_atom in stop_empty:
+                        return -1
+                else:
+                    stop = DEFAULT_SCOPE_STOP_TAGS.get(n.namespace)
+                    if stop and tag_atom in stop:
+                        return -1
+            return -1
+        check_stop = s == LIST_ITEM_SCOPE  # default stops + ol/ul
+        # The "" namespace is ~100% of frames on real pages: resolve its
+        # stop set once instead of a per-frame dict lookup.
+        stop_empty = _STOP_TAGS_EMPTY_NS
+        for i in range(len(oe) - 1, -1, -1):
+            n = oe[i]
+            tag_atom = n.data_atom
+            if n.namespace == "":
+                if tag_atom in match_tags:
+                    return i
+                if s == LIST_ITEM_SCOPE:
+                    if tag_atom in ("ol", "ul"):
+                        return -1
+                elif s == TABLE_SCOPE:
+                    if tag_atom in _TABLE_CONTEXT:
+                        return -1
+                elif s == SELECT_SCOPE:
+                    if tag_atom not in ("optgroup", "option"):
+                        return -1
+                if check_stop and tag_atom in stop_empty:
+                    return -1
+            elif check_stop:
+                stop = DEFAULT_SCOPE_STOP_TAGS.get(n.namespace)
+                if stop and tag_atom in stop:
+                    return -1
+        return -1
+
+    def element_in_scope(self, s: int, *match_tags: str) -> bool:
+        return self.scope_index(s, match_tags) != -1
+
+    def pop_until(self, s: int, *match_tags: str) -> bool:
+        i = self.scope_index(s, match_tags)
+        if i != -1:
+            del self.nodes[i:]
             return True
-    return False
+        return False
+
+    def clear_stack_to_context(self, stops: frozenset) -> None:
+        oe = self.nodes
+        for i in range(len(oe) - 1, -1, -1):
+            if oe[i].data_atom in stops:
+                del oe[i + 1:]
+                return
+
+    def generate_implied_end_tags(self, *exceptions: str) -> None:
+        oe = self.nodes
+        i = 0
+        for i in range(len(oe) - 1, -1, -1):
+            n = oe[i]
+            if n.type != ELEMENT_NODE:
+                break
+            if n.data_atom in _IMPLIED_END_TAGS:
+                if n.data in exceptions:
+                    del oe[i + 1:]
+                    return
+                continue
+            break
+        del oe[i + 1:]
 
 
 def parse_doctype(s: str) -> tuple[Node, bool]:
@@ -250,7 +436,8 @@ class Parser:
     """parser.cr:25-691."""
 
     __slots__ = (
-        "tokenizer", "token", "has_self_closing_token", "doc", "oe", "afe",
+        "tokenizer", "token", "has_self_closing_token", "doc", "oe",
+        "open_elements", "afe",
         "head", "form", "scripting", "frameset_ok", "template_stack", "im",
         "original_im", "foster_parenting", "quirks", "fragment", "context",
     )
@@ -266,7 +453,11 @@ class Parser:
         self.im = self.initial_im
         self.token = Token()
         self.has_self_closing_token = False
-        self.oe: list[Node] = []
+        # self.oe is the open elements' own list: the parser reads it,
+        # pops it and truncates it from the top, and makes every other
+        # change through self.open_elements.
+        self.open_elements = OpenElements()
+        self.oe = self.open_elements.nodes
         self.afe: list[Node] = []
         self.head: Node | None = None
         self.form: Node | None = None
@@ -279,137 +470,37 @@ class Parser:
     def top(self) -> Node:
         return self.oe[-1] if self.oe else self.doc
 
-    # -- scope queries (parser.cr:105-178) -----------------------------------
+    def add_void_element(self) -> None:
+        self.add_element()
+        self.oe.pop()
+        self.acknowledge_self_closing_tag()
 
-    def index_of_element_in_scope(self, s: int, *match_tags: str) -> int:
-        return self._scope_idx(s, match_tags)
-
-    def _scope_idx(self, s: int, match_tags: tuple) -> int:
-        oe = self.oe
-        if s == DEFAULT_SCOPE:
-            # Specialized loop for the dominant scope kind: no per-frame
-            # scope-variant comparisons.  Semantics identical to the
-            # general loop below with s=0.
-            stop_empty = _STOP_TAGS_EMPTY_NS
-            for i in range(len(oe) - 1, -1, -1):
-                n = oe[i]
-                tag_atom = n.data_atom
-                if n.namespace == "":
-                    if tag_atom in match_tags:
-                        return i
-                    if tag_atom in stop_empty:
-                        return -1
-                else:
-                    stop = DEFAULT_SCOPE_STOP_TAGS.get(n.namespace)
-                    if stop and tag_atom in stop:
-                        return -1
-            return -1
-        check_stop = s == LIST_ITEM_SCOPE  # default stops + ol/ul
-        # The "" namespace is ~100% of frames on real pages: resolve its
-        # stop set once instead of a per-frame dict lookup.
-        stop_empty = _STOP_TAGS_EMPTY_NS
-        for i in range(len(oe) - 1, -1, -1):
-            n = oe[i]
-            tag_atom = n.data_atom
-            if n.namespace == "":
-                if tag_atom in match_tags:
-                    return i
-                if s == LIST_ITEM_SCOPE:
-                    if tag_atom in ("ol", "ul"):
-                        return -1
-                elif s == TABLE_SCOPE:
-                    if tag_atom in ("html", "table", "template"):
-                        return -1
-                elif s == SELECT_SCOPE:
-                    if tag_atom not in ("optgroup", "option"):
-                        return -1
-                if check_stop and tag_atom in stop_empty:
-                    return -1
-            elif check_stop:
-                stop = DEFAULT_SCOPE_STOP_TAGS.get(n.namespace)
-                if stop and tag_atom in stop:
-                    return -1
-        return -1
-
-    def element_in_scope(self, s: int, *match_tags: str) -> bool:
-        return self._scope_idx(s, match_tags) != -1
-
-    def pop_until(self, s: int, *match_tags: str) -> bool:
-        i = self._scope_idx(s, match_tags)
-        if i != -1:
-            del self.oe[i:]
-            return True
+    def add_leading_space(self) -> bool:
+        """Add the text token's leading whitespace to the current node and
+        keep the rest in the token; True when nothing is left."""
+        t = self.token
+        s = t.data.lstrip(WHITE_SPACE)
+        if len(s) < len(t.data):
+            self.add_text(t.data[:len(t.data) - len(s)])
+            if s == "":
+                return True
+            t.data = s
         return False
 
-    # "p in button scope" is a read of the current node's stored answer.
-    # Popping from the top leaves every answer below it true; the few
-    # sites that change the stack elsewhere, or a node's namespace after
-    # the push, call _reset_p_in_button_scope from there upward.
-
-    def p_in_button_scope(self) -> bool:
-        oe = self.oe
-        return oe[-1].p_in_button_scope != -1 if oe else False
-
-    def pop_p_in_button_scope(self) -> None:
-        """pop_until(button scope, "p")."""
-        oe = self.oe
-        if oe:
-            i = oe[-1].p_in_button_scope
-            if i != -1:
-                del oe[i:]
-
-    def _reset_p_in_button_scope(self, start: int) -> None:
-        """Recompute the stored answers of oe[start:], bottom up."""
-        oe = self.oe
-        ans = oe[start - 1].p_in_button_scope if start > 0 else -1
-        for i in range(start, len(oe)):
-            n = oe[i]
-            a = n.data_atom
-            if n.namespace == "":
-                if a == "p":
-                    ans = i
-                elif a in _STOP_TAGS_BUTTON:
-                    ans = -1
-            else:
-                stop = DEFAULT_SCOPE_STOP_TAGS.get(n.namespace)
-                if stop and a in stop:
-                    ans = -1
-            n.p_in_button_scope = ans
-
-    def clear_stack_to_context(self, s: int) -> None:
-        oe = self.oe
-        for i in range(len(oe) - 1, -1, -1):
-            tag_atom = oe[i].data_atom
-            if s == TABLE_SCOPE:
-                if tag_atom in ("html", "table", "template"):
-                    del oe[i + 1:]
-                    break
-            elif s == TABLE_ROW_SCOPE:
-                if tag_atom in ("html", "tr", "template"):
-                    del oe[i + 1:]
-                    break
-            elif s == TABLE_BODY_SCOPE:
-                if tag_atom in ("html", "tbody", "tfoot", "thead", "template"):
-                    del oe[i + 1:]
-                    break
-            else:
-                raise ValueError("unreachable")
-
-    def generate_implied_end_tags(self, *exceptions: str) -> None:
-        oe = self.oe
-        i = 0
-        for i in range(len(oe) - 1, -1, -1):
-            n = oe[i]
-            if n.type != ELEMENT_NODE:
-                break
-            if n.data_atom in _IMPLIED_END_TAGS:
-                for except_ in exceptions:
-                    if n.data == except_:
-                        del oe[i + 1:]
-                        return
-                continue
-            break
-        del oe[i + 1:]
+    def close_template(self) -> bool:
+        """Close the topmost HTML template, if one is open (reference
+        divergences, insertion_mode.cr:177-188 and :1173-1184)."""
+        stack = self.open_elements
+        i = stack.template_index()
+        if i == -1:
+            return False
+        stack.generate_implied_end_tags()
+        del self.oe[i:]
+        self.clear_active_formatting_elements()
+        if self.template_stack:
+            self.template_stack.pop()
+        self.reset_insertion_mode()
+        return True
 
     def parse_generic_raw_text_elements(self) -> None:
         self.add_element()
@@ -422,19 +513,10 @@ class Parser:
         if self.foster_parenting and self.should_foster_parent():
             self.foster_parent(n)
         else:
-            self.top().append_child(n)
-        if n.type == ELEMENT_NODE:
-            # Every element arrives here in the HTML namespace;
-            # parse_foreign_content re-sets the top after changing it.
             oe = self.oe
-            a = n.data_atom
-            if a == "p":
-                n.p_in_button_scope = len(oe)
-            elif a in _STOP_TAGS_BUTTON:
-                n.p_in_button_scope = -1
-            else:
-                n.p_in_button_scope = oe[-1].p_in_button_scope if oe else -1
-            oe.append(n)
+            (oe[-1] if oe else self.doc).append_child(n)
+        if n.type == ELEMENT_NODE:
+            self.open_elements.push(n)
 
     def should_foster_parent(self) -> bool:
         if self.foster_parenting:
@@ -590,20 +672,14 @@ class Parser:
             # element of the same name (a MathML <head>) matches none.
             a = n.data_atom if n.namespace == "" else ""
             if a == "select":
-                if not last:
-                    ancestor, first = n, oe[0]
-                    while (
-                        ancestor is not None
-                        and first is not None
-                        and ancestor is not first
-                    ):
-                        ancestor = oe[_index(oe, ancestor) - 1]
-                        if ancestor.data_atom == "template":
-                            self.im = self.in_select_im
-                            return
-                        if ancestor.data_atom == "table":
-                            self.im = self.in_select_in_table_im
-                            return
+                # The ancestors, by stack index: no node is on the stack
+                # twice.
+                for j in range(i - 1, -1, -1):
+                    if oe[j].data_atom == "template":
+                        break
+                    if oe[j].data_atom == "table":
+                        self.im = self.in_select_in_table_im
+                        return
                 self.im = self.in_select_im
             elif a in ("td", "th"):
                 # Reference divergence from the spec (parser.cr:415-417).
@@ -685,18 +761,9 @@ class Parser:
         self.token, self.has_self_closing_token = real_token, self_closing
 
     def parse_current_token(self) -> None:
-        t = self.token
-        if t.type == tk.SELF_CLOSING_TAG:
-            self.has_self_closing_token = True
-            t.type = tk.START_TAG
-        oe = self.oe
-        # Fast path: current node is a plain HTML element and we are not
-        # fragment-parsing — in_foreign_content() is necessarily False
-        # (parser.cr:461-474), skip its call for the first dispatch.
-        if not self.fragment and (not oe or oe[-1].namespace == ""):
-            consumed = self.im()
-        else:
-            consumed = False
+        """Dispatch self.token until an insertion mode or foreign content
+        consumes it."""
+        consumed = False
         while not consumed:
             if self.in_foreign_content():
                 consumed = self.parse_foreign_content()
@@ -715,23 +782,17 @@ class Parser:
             tokenizer.allow_cdata = bool(oe) and oe[-1].namespace != ""
             tokenizer.next()
             t = self.token = tokenizer.fill(reuse)
-            # Inline of parse_current_token's fast path: plain-HTML
-            # current node, token consumed on the first dispatch.
             if t.type == self_closing:
                 self.has_self_closing_token = True
                 t.type = tk.START_TAG
+            # With a plain-HTML current node in_foreign_content() is False,
+            # so the first dispatch goes straight to the insertion mode;
+            # reprocessing and foreign content take the full pump.
             if not fragment and (not oe or oe[-1].namespace == "") \
                     and self.im():
                 self.has_self_closing_token = False
             else:
-                # reprocessing or foreign content: the full pump
-                consumed = False
-                while not consumed:
-                    if self.in_foreign_content():
-                        consumed = self.parse_foreign_content()
-                    else:
-                        consumed = self.im()
-                self.has_self_closing_token = False
+                self.parse_current_token()
             if t.type == error and tokenizer.eof:
                 break
             if self.token is not t:
@@ -742,7 +803,7 @@ class Parser:
     # -- adoption agency (parser.cr:532-669) -------------------------------------
 
     def in_body_end_tag_formatting(self, atom: str, tag_name: str) -> None:
-        oe, afe = self.oe, self.afe
+        oe, afe, stack = self.oe, self.afe, self.open_elements
         # Steps 1-2
         if oe:
             current = oe[-1]
@@ -763,12 +824,12 @@ class Parser:
                 self.in_body_end_tag_other(atom, tag_name)
                 return
             # Step 7
-            fe_index = _index(oe, formatting_element)
+            fe_index = stack.index_of(formatting_element)
             if fe_index == -1:
                 _remove(afe, formatting_element)
                 return
             # Step 8
-            if not self.element_in_scope(DEFAULT_SCOPE, atom):
+            if not stack.element_in_scope(DEFAULT_SCOPE, atom):
                 return
             # Steps 10-11: find the furthest block.
             furthest_block = None
@@ -788,7 +849,7 @@ class Parser:
             # Step 14: the inner loop.
             last_node = furthest_block
             node = furthest_block
-            x = _index(oe, node)
+            x = stack.index_of(node)
             j = 0
             while True:
                 j += 1
@@ -806,12 +867,12 @@ class Parser:
                     continue
                 # Step 14.6
                 if ni == -1:
-                    _remove(oe, node)
+                    stack.remove_node(node)
                     continue
                 # Step 14.7
                 clone = node.clone()
                 afe[ni] = clone
-                oe[x] = clone
+                stack.replace(x, clone)
                 node = clone
                 # Step 14.8
                 if last_node is furthest_block:
@@ -840,10 +901,8 @@ class Parser:
             _remove(afe, formatting_element)
             afe.insert(bookmark, clone)
             # Step 20
-            _remove(oe, formatting_element)
-            oe.insert(_index(oe, furthest_block) + 1, clone)
-            # Steps 14.6-20 changed oe from fe_index up.
-            self._reset_p_in_button_scope(fe_index)
+            stack.remove_node(formatting_element)
+            stack.insert_above(furthest_block, clone)
 
     def in_body_end_tag_other(self, atom: str, tag_name: str) -> None:
         oe = self.oe
@@ -932,21 +991,14 @@ class Parser:
     def in_head_im(self) -> bool:
         t = self.token
         if t.type == tk.TEXT:
-            s = t.data.lstrip(WHITE_SPACE)
-            if len(s) < len(t.data):
-                # Add the initial whitespace to the current node.
-                self.add_text(t.data[:len(t.data) - len(s)])
-                if s == "":
-                    return True
-                t.data = s
+            if self.add_leading_space():
+                return True
         elif t.type == tk.START_TAG:
             a = t.data_atom
             if a == "html":
                 return self.in_body_im()
             if a in ("base", "basefont", "bgsound", "link", "meta"):
-                self.add_element()
-                self.oe.pop()
-                self.acknowledge_self_closing_tag()
+                self.add_void_element()
                 return True
             if a == "noscript":
                 if self.scripting:
@@ -985,20 +1037,7 @@ class Parser:
                 self.parse_implied_token(tk.END_TAG, "head", "head")
                 return False
             if a == "template":
-                if not _contains(self.oe, "template"):
-                    return True
-                # Reference divergence (insertion_mode.cr:177-188).
-                self.generate_implied_end_tags()
-                for i in range(len(self.oe) - 1, -1, -1):
-                    n = self.oe[i]
-                    if n.namespace == "" and n.data_atom == "template":
-                        del self.oe[i:]
-                        break
-                self.clear_active_formatting_elements()
-                if self.template_stack:
-                    self.template_stack.pop()
-                self.reset_insertion_mode()
-                return True
+                self.close_template()
             return True
         elif t.type == tk.COMMENT:
             self.add_child(Node(COMMENT_NODE, "", t.data))
@@ -1041,12 +1080,8 @@ class Parser:
     def after_head_im(self) -> bool:
         t = self.token
         if t.type == tk.TEXT:
-            s = t.data.lstrip(WHITE_SPACE)
-            if len(s) < len(t.data):
-                self.add_text(t.data[:len(t.data) - len(s)])
-                if s == "":
-                    return True
-                t.data = s
+            if self.add_leading_space():
+                return True
         elif t.type == tk.START_TAG:
             a = t.data_atom
             if a == "html":
@@ -1064,16 +1099,11 @@ class Parser:
                      "noframes", "script", "style", "template", "title"):
                 h = self.head
                 if h is not None:
-                    oe = self.oe
-                    oe.append(h)
-                    self._reset_p_in_button_scope(len(oe) - 1)
+                    self.open_elements.push(h)
                     try:
                         return self.in_head_im()
                     finally:
-                        i = _index(oe, h)
-                        if i != -1:
-                            _remove(oe, h)
-                            self._reset_p_in_button_scope(i)
+                        self.open_elements.remove_node(h)
             elif a == "head":
                 return True
         elif t.type == tk.END_TAG:
@@ -1179,13 +1209,13 @@ class Parser:
         elif t.type == tk.START_TAG:
             a = t.data_atom
             if a == "caption":
-                self.clear_stack_to_context(TABLE_SCOPE)
+                self.open_elements.clear_stack_to_context(_TABLE_CONTEXT)
                 self.afe.append(SCOPE_MARKER)
                 self.add_element()
                 self.im = self.in_caption_im
                 return True
             if a == "colgroup":
-                self.clear_stack_to_context(TABLE_SCOPE)
+                self.open_elements.clear_stack_to_context(_TABLE_CONTEXT)
                 self.add_element()
                 self.im = self.in_column_group_im
                 return True
@@ -1193,7 +1223,7 @@ class Parser:
                 self.parse_implied_token(tk.START_TAG, "colgroup", "colgroup")
                 return False
             if a in ("tbody", "tfoot", "thead"):
-                self.clear_stack_to_context(TABLE_SCOPE)
+                self.open_elements.clear_stack_to_context(_TABLE_CONTEXT)
                 self.add_element()
                 self.im = self.in_table_body_im
                 return True
@@ -1201,7 +1231,7 @@ class Parser:
                 self.parse_implied_token(tk.START_TAG, "tbody", "tbody")
                 return False
             if a == "table":
-                if self.pop_until(TABLE_SCOPE, "table"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "table"):
                     self.reset_insertion_mode()
                     return False
                 return True
@@ -1215,7 +1245,8 @@ class Parser:
                         return True
                 # otherwise drop down to the default action
             elif a == "form":
-                if _contains(self.oe, "template") or self.form is not None:
+                if (self.open_elements.template_index() != -1
+                        or self.form is not None):
                     return True
                 self.add_element()
                 self.form = self.oe.pop()
@@ -1231,7 +1262,7 @@ class Parser:
         elif t.type == tk.END_TAG:
             a = t.data_atom
             if a == "table":
-                if self.pop_until(TABLE_SCOPE, "table"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "table"):
                     self.reset_insertion_mode()
                     return True
                 return True
@@ -1260,7 +1291,7 @@ class Parser:
             a = t.data_atom
             if a in ("caption", "col", "colgroup", "tbody", "td", "tfoot",
                      "thead", "tr"):
-                if not self.pop_until(TABLE_SCOPE, "caption"):
+                if not self.open_elements.pop_until(TABLE_SCOPE, "caption"):
                     return True
                 self.clear_active_formatting_elements()
                 self.im = self.in_table_im
@@ -1274,12 +1305,12 @@ class Parser:
         elif t.type == tk.END_TAG:
             a = t.data_atom
             if a == "caption":
-                if self.pop_until(TABLE_SCOPE, "caption"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "caption"):
                     self.clear_active_formatting_elements()
                     self.im = self.in_table_im
                 return True
             if a == "table":
-                if not self.pop_until(TABLE_SCOPE, "caption"):
+                if not self.open_elements.pop_until(TABLE_SCOPE, "caption"):
                     return True
                 self.clear_active_formatting_elements()
                 self.im = self.in_table_im
@@ -1292,12 +1323,8 @@ class Parser:
     def in_column_group_im(self) -> bool:
         t = self.token
         if t.type == tk.TEXT:
-            s = t.data.lstrip(WHITE_SPACE)
-            if len(s) < len(t.data):
-                self.add_text(t.data[:len(t.data) - len(s)])
-                if s == "":
-                    return True
-                t.data = s
+            if self.add_leading_space():
+                return True
         elif t.type == tk.COMMENT:
             self.add_child(Node(COMMENT_NODE, "", t.data))
             return True
@@ -1308,9 +1335,7 @@ class Parser:
             if a == "html":
                 return self.in_body_im()
             if a == "col":
-                self.add_element()
-                self.oe.pop()
-                self.acknowledge_self_closing_tag()
+                self.add_void_element()
                 return True
             if a == "template":
                 return self.in_head_im()
@@ -1338,7 +1363,7 @@ class Parser:
         if t.type == tk.START_TAG:
             a = t.data_atom
             if a == "tr":
-                self.clear_stack_to_context(TABLE_BODY_SCOPE)
+                self.open_elements.clear_stack_to_context(_TABLE_BODY_CONTEXT)
                 self.add_element()
                 self.im = self.in_row_im
                 return True
@@ -1346,20 +1371,23 @@ class Parser:
                 self.parse_implied_token(tk.START_TAG, "tr", "tr")
                 return False
             if a in ("caption", "col", "colgroup", "tbody", "tfoot", "thead"):
-                if self.pop_until(TABLE_SCOPE, "tbody", "thead", "tfoot"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "tbody",
+                                                "thead", "tfoot"):
                     self.im = self.in_table_im
                     return False
                 return True
         elif t.type == tk.END_TAG:
             a = t.data_atom
             if a in ("tbody", "tfoot", "thead"):
-                if self.element_in_scope(TABLE_SCOPE, a):
-                    self.clear_stack_to_context(TABLE_BODY_SCOPE)
+                stack = self.open_elements
+                if stack.element_in_scope(TABLE_SCOPE, a):
+                    stack.clear_stack_to_context(_TABLE_BODY_CONTEXT)
                     self.oe.pop()
                     self.im = self.in_table_im
                 return True
             if a == "table":
-                if self.pop_until(TABLE_SCOPE, "tbody", "thead", "tfoot"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "tbody",
+                                                "thead", "tfoot"):
                     self.im = self.in_table_im
                     return False
                 return True
@@ -1376,31 +1404,31 @@ class Parser:
         if t.type == tk.START_TAG:
             a = t.data_atom
             if a in ("td", "th"):
-                self.clear_stack_to_context(TABLE_ROW_SCOPE)
+                self.open_elements.clear_stack_to_context(_TABLE_ROW_CONTEXT)
                 self.add_element()
                 self.afe.append(SCOPE_MARKER)
                 self.im = self.in_cell_im
                 return True
             if a in ("caption", "col", "colgroup", "tbody", "tfoot", "thead",
                      "tr"):
-                if self.pop_until(TABLE_SCOPE, "tr"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "tr"):
                     self.im = self.in_table_body_im
                     return False
                 return True
         elif t.type == tk.END_TAG:
             a = t.data_atom
             if a == "tr":
-                if self.pop_until(TABLE_SCOPE, "tr"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "tr"):
                     self.im = self.in_table_body_im
                     return True
                 return True
             if a == "table":
-                if self.pop_until(TABLE_SCOPE, "tr"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "tr"):
                     self.im = self.in_table_body_im
                     return False
                 return True
             if a in ("tbody", "tfoot", "thead"):
-                if self.element_in_scope(TABLE_SCOPE, a):
+                if self.open_elements.element_in_scope(TABLE_SCOPE, a):
                     self.parse_implied_token(tk.END_TAG, "tr", "tr")
                     return False
                 return True
@@ -1415,7 +1443,7 @@ class Parser:
             a = t.data_atom
             if a in ("caption", "col", "colgroup", "tbody", "td", "tfoot",
                      "th", "thead", "tr"):
-                if self.pop_until(TABLE_SCOPE, "td", "th"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "td", "th"):
                     # Close the cell and reprocess.
                     self.clear_active_formatting_elements()
                     self.im = self.in_row_im
@@ -1430,7 +1458,7 @@ class Parser:
         elif t.type == tk.END_TAG:
             a = t.data_atom
             if a in ("td", "th"):
-                if not self.pop_until(TABLE_SCOPE, a):
+                if not self.open_elements.pop_until(TABLE_SCOPE, a):
                     return True
                 self.clear_active_formatting_elements()
                 self.im = self.in_row_im
@@ -1438,10 +1466,10 @@ class Parser:
             if a in ("body", "caption", "col", "colgroup", "html"):
                 return True
             if a in ("table", "tbody", "tfoot", "thead", "tr"):
-                if not self.element_in_scope(TABLE_SCOPE, a):
+                if not self.open_elements.element_in_scope(TABLE_SCOPE, a):
                     return True
                 # Close the cell and reprocess.
-                if self.pop_until(TABLE_SCOPE, "td", "th"):
+                if self.open_elements.pop_until(TABLE_SCOPE, "td", "th"):
                     self.clear_active_formatting_elements()
                 self.im = self.in_row_im
                 return False
@@ -1466,11 +1494,11 @@ class Parser:
                     self.oe.pop()
                 self.add_element()
             elif a == "select":
-                if not self.pop_until(SELECT_SCOPE, "select"):
+                if not self.open_elements.pop_until(SELECT_SCOPE, "select"):
                     return True
                 self.reset_insertion_mode()
             elif a in ("input", "keygen", "textarea"):
-                if self.element_in_scope(SELECT_SCOPE, "select"):
+                if self.open_elements.element_in_scope(SELECT_SCOPE, "select"):
                     self.parse_implied_token(tk.END_TAG, "select", "select")
                     return False
                 # In order to properly ignore <textarea>, we need to change
@@ -1491,7 +1519,7 @@ class Parser:
                 if self.oe[i].data_atom == "optgroup":
                     del self.oe[i:]
             elif a == "select":
-                if not self.pop_until(SELECT_SCOPE, "select"):
+                if not self.open_elements.pop_until(SELECT_SCOPE, "select"):
                     return True
                 self.reset_insertion_mode()
             elif a == "template":
@@ -1510,9 +1538,8 @@ class Parser:
             a = t.data_atom
             if a in ("caption", "table", "tbody", "tfoot", "thead", "tr",
                      "td", "th"):
-                if t.type == tk.END_TAG and not self.element_in_scope(
-                    TABLE_SCOPE, a,
-                ):
+                if (t.type == tk.END_TAG and not
+                        self.open_elements.element_in_scope(TABLE_SCOPE, a)):
                     return True
                 # Like pop_until(SELECT_SCOPE, select) but also matching
                 # <math select> — mimics Chromium (insertion_mode.cr:1111).
@@ -1533,49 +1560,16 @@ class Parser:
             if a in ("base", "basefont", "bgsound", "link", "meta",
                      "noframes", "script", "style", "template", "title"):
                 return self.in_head_im()
-            if a in ("caption", "colgroup", "tbody", "tfoot", "thead"):
-                self.template_stack.pop()
-                self.template_stack.append(self.in_table_im)
-                self.im = self.in_table_im
-                return False
-            if a == "col":
-                self.template_stack.pop()
-                self.template_stack.append(self.in_column_group_im)
-                self.im = self.in_column_group_im
-                return False
-            if a == "tr":
-                self.template_stack.pop()
-                self.template_stack.append(self.in_table_body_im)
-                self.im = self.in_table_body_im
-                return False
-            if a in ("td", "th"):
-                self.template_stack.pop()
-                self.template_stack.append(self.in_row_im)
-                self.im = self.in_row_im
-                return False
-            self.template_stack.pop()
-            self.template_stack.append(self.in_body_im)
-            self.im = self.in_body_im
+            im = getattr(self, _TEMPLATE_START_IM.get(a, "in_body_im"))
+            self.template_stack[-1] = im
+            self.im = im
             return False
         if t.type == tk.END_TAG:
             if t.data_atom == "template":
                 return self.in_head_im()
             return True
         if t.type == tk.ERROR:
-            if not _contains(self.oe, "template"):
-                return True
-            # Reference divergence (insertion_mode.cr:1173-1184).
-            self.generate_implied_end_tags()
-            for i in range(len(self.oe) - 1, -1, -1):
-                n = self.oe[i]
-                if n.namespace == "" and n.data_atom == "template":
-                    del self.oe[i:]
-                    break
-            self.clear_active_formatting_elements()
-            if self.template_stack:
-                self.template_stack.pop()
-            self.reset_insertion_mode()
-            return False
+            return not self.close_template()
         return False
 
     def after_body_im(self) -> bool:
@@ -1621,9 +1615,7 @@ class Parser:
             if a == "frameset":
                 self.add_element()
             elif a == "frame":
-                self.add_element()
-                self.oe.pop()
-                self.acknowledge_self_closing_tag()
+                self.add_void_element()
             elif a == "noframes":
                 return self.in_head_im()
         elif t.type == tk.END_TAG:
@@ -1743,14 +1735,12 @@ class Parser:
                         f" [{current.namespace}]"
                     )
                 adjust_foreign_attributes(t.attr)
-                namespace = current.namespace
-                self.add_element()
-                self.top().namespace = namespace
-                self._reset_p_in_button_scope(len(self.oe) - 1)
-                if namespace != "":
-                    # Don't let the tokenizer go into raw text mode in
-                    # foreign content (e.g. in an SVG <title> tag).
-                    self.tokenizer.raw_tag = ""
+                # Pushed in its namespace, so it stores its own answers.
+                self.add_child(Node(ELEMENT_NODE, t.data_atom, t.data,
+                                    current.namespace, t.attr))
+                # Don't let the tokenizer go into raw text mode in
+                # foreign content (e.g. in an SVG <title> tag).
+                self.tokenizer.raw_tag = ""
                 if self.has_self_closing_token:
                     self.oe.pop()
                     self.acknowledge_self_closing_tag()
@@ -1801,8 +1791,7 @@ def parse_fragment(data: bytes | str, context: Node | None = None,
 
     root = Node(type=ELEMENT_NODE, data_atom="html", data="html")
     p.doc.append_child(root)
-    p.oe = [root]
-    p._reset_p_in_button_scope(0)
+    p.open_elements.push(root)
     if context is not None and context.data_atom == "template":
         p.template_stack.append(p.in_template_im)
     p.reset_insertion_mode()
@@ -1830,7 +1819,7 @@ def parse_fragment(data: bytes | str, context: Node | None = None,
 # exact body of the branch it came from).
 
 def _ibs_html(p) -> bool:
-    if _contains(p.oe, "template"):
+    if p.open_elements.template_index() != -1:
         return True
     copy_attributes(p.oe[0], p.token)
     return True
@@ -1841,7 +1830,7 @@ def _ibs_head_group(p) -> bool:
 
 
 def _ibs_body(p) -> bool:
-    if _contains(p.oe, "template"):
+    if p.open_elements.template_index() != -1:
         return True
     if len(p.oe) >= 2:
         body = p.oe[1]
@@ -1868,13 +1857,13 @@ def _ibs_frameset(p) -> bool:
 
 
 def _ibs_block(p) -> bool:
-    p.pop_p_in_button_scope()
+    p.open_elements.pop_p_in_button_scope()
     p.add_element()
     return True
 
 
 def _ibs_heading(p) -> bool:
-    p.pop_p_in_button_scope()
+    p.open_elements.pop_p_in_button_scope()
     n = p.top()
     if n.data_atom in _H1_H6:
         p.oe.pop()
@@ -1883,7 +1872,7 @@ def _ibs_heading(p) -> bool:
 
 
 def _ibs_pre_listing(p) -> bool:
-    p.pop_p_in_button_scope()
+    p.open_elements.pop_p_in_button_scope()
     p.add_element()
     # The newline, if any, is dealt with by the TextToken case.
     p.frameset_ok = False
@@ -1891,59 +1880,40 @@ def _ibs_pre_listing(p) -> bool:
 
 
 def _ibs_form(p) -> bool:
-    if p.form is not None and not _contains(p.oe, "template"):
+    if p.form is not None and p.open_elements.template_index() == -1:
         return True
-    p.pop_p_in_button_scope()
+    p.open_elements.pop_p_in_button_scope()
     p.add_element()
-    if not _contains(p.oe, "template"):
+    if p.open_elements.template_index() == -1:
         p.form = p.top()
     return True
 
 
-def _ibs_li(p) -> bool:
+# The open elements an li, dd or dt start tag closes.
+_LIST_ITEM_CLOSES = {"li": ("li",), "dd": ("dd", "dt"), "dt": ("dd", "dt")}
+
+
+def _ibs_list_item(p) -> bool:
     p.frameset_ok = False
     oe = p.oe
+    closes = _LIST_ITEM_CLOSES[p.token.data_atom]
     for i in range(len(oe) - 1, -1, -1):
         node = oe[i]
         na = node.data_atom
-        if na == "li":
+        if na in closes:
             del oe[i:]
         elif na in ("address", "div", "p"):
             continue
         elif not special_element(node):
             continue
         break
-    p.pop_p_in_button_scope()
-    p.add_element()
-    return True
-
-
-def _ibs_dd_dt(p) -> bool:
-    p.frameset_ok = False
-    oe = p.oe
-    for i in range(len(oe) - 1, -1, -1):
-        node = oe[i]
-        na = node.data_atom
-        if na in ("dd", "dt"):
-            del oe[i:]
-        elif na in ("address", "div", "p"):
-            continue
-        elif not special_element(node):
-            continue
-        break
-    p.pop_p_in_button_scope()
-    p.add_element()
-    return True
-
-
-def _ibs_plaintext(p) -> bool:
-    p.pop_p_in_button_scope()
+    p.open_elements.pop_p_in_button_scope()
     p.add_element()
     return True
 
 
 def _ibs_button(p) -> bool:
-    p.pop_until(DEFAULT_SCOPE, "button")
+    p.open_elements.pop_until(DEFAULT_SCOPE, "button")
     p.reconstruct_active_formatting_elements()
     p.add_element()
     p.frameset_ok = False
@@ -1957,10 +1927,7 @@ def _ibs_a(p) -> bool:
         n = afe[i]
         if n.type == ELEMENT_NODE and n.data_atom == "a":
             p.in_body_end_tag_formatting("a", "a")
-            j = _index(p.oe, n)
-            if j != -1:
-                _remove(p.oe, n)
-                p._reset_p_in_button_scope(j)
+            p.open_elements.remove_node(n)
             _remove(p.afe, n)
             break
         i -= 1
@@ -1977,7 +1944,7 @@ def _ibs_formatting(p) -> bool:
 
 def _ibs_nobr(p) -> bool:
     p.reconstruct_active_formatting_elements()
-    if p.element_in_scope(DEFAULT_SCOPE, "nobr"):
+    if p.open_elements.element_in_scope(DEFAULT_SCOPE, "nobr"):
         p.in_body_end_tag_formatting("nobr", "nobr")
         p.reconstruct_active_formatting_elements()
     p.add_formatting_element()
@@ -1994,7 +1961,7 @@ def _ibs_applet(p) -> bool:
 
 def _ibs_table(p) -> bool:
     if not p.quirks:
-        p.pop_p_in_button_scope()
+        p.open_elements.pop_p_in_button_scope()
     p.add_element()
     p.frameset_ok = False
     p.im = p.in_table_im
@@ -2003,9 +1970,7 @@ def _ibs_table(p) -> bool:
 
 def _ibs_void(p) -> bool:
     p.reconstruct_active_formatting_elements()
-    p.add_element()
-    p.oe.pop()
-    p.acknowledge_self_closing_tag()
+    p.add_void_element()
     if p.token.data_atom == "input":
         for attr in p.token.attr:
             if attr.key == "type" and attr.val.lower() == "hidden":
@@ -2016,17 +1981,13 @@ def _ibs_void(p) -> bool:
 
 
 def _ibs_param(p) -> bool:
-    p.add_element()
-    p.oe.pop()
-    p.acknowledge_self_closing_tag()
+    p.add_void_element()
     return True
 
 
 def _ibs_hr(p) -> bool:
-    p.pop_p_in_button_scope()
-    p.add_element()
-    p.oe.pop()
-    p.acknowledge_self_closing_tag()
+    p.open_elements.pop_p_in_button_scope()
+    p.add_void_element()
     p.frameset_ok = False
     return True
 
@@ -2046,7 +2007,7 @@ def _ibs_textarea(p) -> bool:
 
 
 def _ibs_xmp(p) -> bool:
-    p.pop_p_in_button_scope()
+    p.open_elements.pop_p_in_button_scope()
     p.reconstruct_active_formatting_elements()
     p.frameset_ok = False
     p.parse_generic_raw_text_elements()
@@ -2088,15 +2049,15 @@ def _ibs_option(p) -> bool:
 
 
 def _ibs_rb_rtc(p) -> bool:
-    if p.element_in_scope(DEFAULT_SCOPE, "ruby"):
-        p.generate_implied_end_tags()
+    if p.open_elements.element_in_scope(DEFAULT_SCOPE, "ruby"):
+        p.open_elements.generate_implied_end_tags()
     p.add_element()
     return True
 
 
 def _ibs_rp_rt(p) -> bool:
-    if p.element_in_scope(DEFAULT_SCOPE, "ruby"):
-        p.generate_implied_end_tags("rtc")
+    if p.open_elements.element_in_scope(DEFAULT_SCOPE, "ruby"):
+        p.open_elements.generate_implied_end_tags("rtc")
     p.add_element()
     return True
 
@@ -2109,10 +2070,7 @@ def _ibs_math_svg(p) -> bool:
     else:
         adjust_attribute_names(t.attr, SVG_ATTRIBUTE_ADJUSTMENTS)
     adjust_foreign_attributes(t.attr)
-    p.add_element()
-    # An svg or math element is neither a p nor a button-scope stop, so
-    # its stored answer holds in either namespace.
-    p.top().namespace = t.data
+    p.add_child(Node(ELEMENT_NODE, t.data_atom, t.data, t.data, t.attr))
     if p.has_self_closing_token:
         p.oe.pop()
         p.acknowledge_self_closing_tag()
@@ -2124,63 +2082,57 @@ def _ibs_ignore(p) -> bool:
 
 
 def _ibe_body(p) -> bool:
-    if p.element_in_scope(DEFAULT_SCOPE, "body"):
+    if p.open_elements.element_in_scope(DEFAULT_SCOPE, "body"):
         p.im = p.after_body_im
     return True
 
 
 def _ibe_html(p) -> bool:
-    if p.element_in_scope(DEFAULT_SCOPE, "body"):
+    if p.open_elements.element_in_scope(DEFAULT_SCOPE, "body"):
         p.parse_implied_token(tk.END_TAG, "body", "body")
         return False
     return True
 
 
 def _ibe_block(p) -> bool:
-    p.pop_until(DEFAULT_SCOPE, p.token.data_atom)
+    p.open_elements.pop_until(DEFAULT_SCOPE, p.token.data_atom)
     return True
 
 
 def _ibe_form(p) -> bool:
-    if _contains(p.oe, "template"):
-        i = p.index_of_element_in_scope(DEFAULT_SCOPE, "form")
+    stack = p.open_elements
+    i = stack.scope_index(DEFAULT_SCOPE, ("form",))
+    if stack.template_index() != -1:
         if i == -1:
             return True
-        p.generate_implied_end_tags()
+        stack.generate_implied_end_tags()
         if p.oe[i].data_atom != "form":
             return True
-        p.pop_until(DEFAULT_SCOPE, "form")
+        stack.pop_until(DEFAULT_SCOPE, "form")
     else:
         node = p.form
         p.form = None
-        i = p.index_of_element_in_scope(DEFAULT_SCOPE, "form")
         if node is None or i == -1 or p.oe[i] is not node:
             return True
-        p.generate_implied_end_tags()
-        _remove(p.oe, node)
-        p._reset_p_in_button_scope(i)
+        stack.generate_implied_end_tags()
+        stack.remove_node(node)
     return True
 
 
 def _ibe_p(p) -> bool:
-    if not p.p_in_button_scope():
+    if not p.open_elements.p_in_button_scope():
         p.parse_implied_token(tk.START_TAG, "p", "p")
-    p.pop_p_in_button_scope()
+    p.open_elements.pop_p_in_button_scope()
     return True
 
 
 def _ibe_li(p) -> bool:
-    p.pop_until(LIST_ITEM_SCOPE, "li")
-    return True
-
-
-def _ibe_dd_dt(p) -> bool:
-    p.pop_until(DEFAULT_SCOPE, p.token.data_atom)
+    p.open_elements.pop_until(LIST_ITEM_SCOPE, "li")
     return True
 
 
 def _ibe_heading(p) -> bool:
-    p.pop_until(DEFAULT_SCOPE, "h1", "h2", "h3", "h4", "h5", "h6")
+    p.open_elements.pop_until(DEFAULT_SCOPE, *_H1_H6)
     return True
 
 
@@ -2190,7 +2142,7 @@ def _ibe_formatting(p) -> bool:
 
 
 def _ibe_applet(p) -> bool:
-    if p.pop_until(DEFAULT_SCOPE, p.token.data_atom):
+    if p.open_elements.pop_until(DEFAULT_SCOPE, p.token.data_atom):
         p.clear_active_formatting_elements()
     return True
 
@@ -2206,7 +2158,7 @@ def _ibe_template(p) -> bool:
 
 _IB_START_HANDLERS: dict = {"html": _ibs_html, "body": _ibs_body,
                             "frameset": _ibs_frameset, "form": _ibs_form,
-                            "li": _ibs_li, "plaintext": _ibs_plaintext,
+                            "plaintext": _ibs_block,
                             "button": _ibs_button, "a": _ibs_a,
                             "nobr": _ibs_nobr, "table": _ibs_table,
                             "hr": _ibs_hr, "image": _ibs_image,
@@ -2221,8 +2173,8 @@ for _a in _H1_H6:
     _IB_START_HANDLERS[_a] = _ibs_heading
 for _a in ("pre", "listing"):
     _IB_START_HANDLERS[_a] = _ibs_pre_listing
-for _a in ("dd", "dt"):
-    _IB_START_HANDLERS[_a] = _ibs_dd_dt
+for _a in _LIST_ITEM_CLOSES:
+    _IB_START_HANDLERS[_a] = _ibs_list_item
 for _a in _IB_FORMATTING:
     _IB_START_HANDLERS[_a] = _ibs_formatting
 for _a in ("applet", "marquee", "object"):
@@ -2245,10 +2197,8 @@ for _a in _IB_IGNORE:
 _IB_END_HANDLERS: dict = {"body": _ibe_body, "html": _ibe_html,
                           "form": _ibe_form, "p": _ibe_p, "li": _ibe_li,
                           "br": _ibe_br, "template": _ibe_template}
-for _a in _IB_END_BLOCK:
+for _a in _IB_END_BLOCK | {"dd", "dt"}:
     _IB_END_HANDLERS[_a] = _ibe_block
-for _a in ("dd", "dt"):
-    _IB_END_HANDLERS[_a] = _ibe_dd_dt
 for _a in _H1_H6:
     _IB_END_HANDLERS[_a] = _ibe_heading
 for _a in _IB_END_FORMATTING:
